@@ -3,43 +3,24 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
-Protocol matches BASELINE.md: warm timing (2nd run, same process), session
-startup excluded, ANSI off / UTC / nanosAsLong configs identical to the
-recorded baseline. ``value`` is the sum of the three baseline-comparable
-queries (q1-agg-shaped, 4-way-join-shaped, window-shaped); further
-engine-specific headliners (dedup/LSH/knn/session windows) are reported in
-``queries`` for trend tracking.
+Protocol matches BASELINE.md: one cold run, then best-of-N warm runs in the
+same process, session startup excluded, ANSI off / UTC / nanosAsLong configs
+identical to the recorded baseline. ``value`` is the sum of the three
+baseline-comparable queries (q1-agg-shaped, 4-way-join-shaped,
+window-shaped); the other headliners are reported in ``queries`` for trend
+tracking.
 
-Bench hygiene:
-- round 4: a concurrent Spark/JVM on the box was measured to inflate
-  numbers 20-60%, so the JSON carries ``contended`` (other JVMs detected
-  before our session starts).
-- round 6: the final stdout line is the COMPACT grade only (metric, value,
-  per-query bests, regressions) and is size-tested to stay under 2 KB —
-  round 5's full payload outgrew the driver's fixed-size tail capture and
-  the round's grade came back unparseable. The full payload (per-query
-  best/median/worst spread, foreign-JVM count, regression detail) goes to
-  the ``docs/BENCH_LAST.json`` sidecar, which doubles as next round's
-  regression baseline: any query >15% slower than its previous committed
-  best is listed in ``regressions`` (BENCH_TREND.md's investigate rule,
-  now machine-enforced).
-- round 7: the grade line tells the CONVERGED story — when the graded trio
-  lands >1.15x its committed running best (a loaded-box artifact; round 6's
-  run-of-record flagged 8 noise "regressions" on code-untouched queries),
-  the trio is auto-rerun once (minima merge), and the line always carries
-  ``best_total`` (sum of the trio's committed bests) plus ``noisy:true``
-  when even the rerun stayed outside the band.
-- round 11: box state is MEASURED, not adjudicated. A fixed
-  engine-independent sentinel (pure-CPU hash loop + a pinned synthetic
-  Spark job, neither touching any engine query) runs at bench start AND
-  end; the ratio of its mean to its committed best is the ONE normalizer
-  applied to per-query regression comparisons (replacing r9's trio-keyed
-  box_drift agreement heuristic and r10's median-of-ratios scaling, which
-  could mask a uniform code regression — r10 ADVICE). The sidecar always
-  carries the RAW (unscaled) regression list too, so nothing normalized
-  away is invisible. ``box_drift`` in the grade line is now the measured
-  sentinel ratio (when >1.05), and ``noisy`` means the trio stayed over
-  band even after sentinel normalization — genuinely unexplained.
+The last stdout line is the compact grade, kept under 2 KB so a fixed-size
+tail capture never truncates it. The full payload (per-query
+best/median/worst spread, foreign-JVM count, regression detail) goes to the
+``docs/BENCH_LAST.json`` sidecar, whose ``best`` holds running per-query
+minima keyed by host (core count / GB of RAM / CPU model). A run is judged
+only against its own host's bests: a first run on a new host seeds them and
+flags nothing; after that a query more than ``REGRESSION_RATIO`` over its
+best is listed in ``regressions``, and ``noisy`` means the graded trio is
+over that band against the host's ``best_total``. Bests are never compared
+across machines, so ``box_drift`` is always null. ``contended`` marks a run
+that started while another JVM was running on the box.
 """
 
 from __future__ import annotations
@@ -49,6 +30,8 @@ import os
 import statistics
 import sys
 import time
+
+from perfbench.host import _meminfo_kb, cpu_model, foreign_jvms
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 _SIDECAR = os.path.join(_REPO, "docs", "BENCH_LAST.json")
@@ -66,32 +49,15 @@ EXTRA_HEADLINERS = (
     "merge_into_upsert",
     "quality_lm_perplexity",
     "search_bm25_topk",
-    # round-4 additions: the iterative-ML family + segment dedup
     "kmeans_lloyd",
     "train_logreg_quality",
     "dedup_repeated_segments",
-    # round-6: track the production IVF-PQ lifecycle explicitly — BUILD
-    # (always retrains + republishes; the once-per-corpus cost) and SEARCH
-    # (serving path against the published index). The ivf_pq_topk monolith
-    # is no longer benched (it is build+search in one query — redundant
-    # here) but stays registered; tests assert its equality to the split.
     "ivf_pq_build_index",
     "ivf_pq_search_topk",
-    # round-6: hybrid retrieval (BM25 + vector-PRF fused by RRF) — the
-    # composition headliner spanning the lexical and vector stacks
     "search_hybrid_rrf",
-    # round-7 promotions (r6 verdict #5/#7): the index WRITE path's cost is
-    # the operational number that matters day-to-day; the indexed RRF makes
-    # the brute-force->index arm-swap cost visible next to its sibling;
-    # KN perplexity is the heaviest LM op added in r6
     "ivf_pq_ingest_delta",
     "search_hybrid_rrf_indexed",
     "quality_kn_bigram_perplexity",
-    # round-8 (r7 verdict #2): the TPC-DS-shaped corpus — the reference's
-    # dominant perf suite is plan-golden TPC-DS (SURVEY §5.1.4); these
-    # widen the perf gate beyond TPC-H/pipeline shapes (rollup-over-union,
-    # EXISTS-chain, CTE-reuse YoY, intersect, window-over-agg, ranked
-    # rollup, scalar fan, full-outer overlap)
     "tpcds_q5_channel_rollup",
     "tpcds_q10_exists_chain",
     "tpcds_q11_yoy_channels",
@@ -100,31 +66,16 @@ EXTRA_HEADLINERS = (
     "tpcds_q67_rollup_topk",
     "tpcds_q88_time_bands",
     "tpcds_q97_channel_overlap",
-    # round-8 widening: the six remaining distinct TPC-DS plan signatures
-    # (scalar-max threshold CTEs, cumulative full-outer windows, aggregate
-    # CTE self-join, aggregate-grain left-join null branch, fact self-join
-    # EXISTS pair, HAVING count-band join-back)
     "tpcds_q23_frequent_buyers",
     "tpcds_q51_cumulative_channels",
     "tpcds_q64_item_year_resales",
     "tpcds_q78_channel_ratio",
     "tpcds_q95_multi_supplier",
     "tpcds_q34_basket_bands",
-    # r8 session-3: the experimentation suite's heaviest member (per-user
-    # covariate aggregate + broadcast-theta adjustment + arm moments)
     "events_ab_cuped",
-    # round-9: the last three distinct TPC-DS plan signatures (GROUPING-
-    # driven hierarchy rank, union-of-ranked-subqueries, composite-key
-    # fact chain + stddev family)
     "tpcds_q36_hierarchy_rank",
     "tpcds_q49_worst_return_ratios",
     "tpcds_q17_fact_chain_stddev",
-    # round-11 (r10 verdict task 1): corpus widened 17 -> 30 shapes — the
-    # q72 mega-join with a non-equi residual, the q4/q74 YoY families,
-    # q93 returns netting, q54 segmentation, and eight more distinct plan
-    # signatures (correlated scalar, dow pivot self-join, quarter share
-    # chains, stddev-derived join predicate, dimension-derived threshold,
-    # decline diff, channel parity bands, grouped lag bands)
     "tpcds_q72_lagged_fulfillment",
     "tpcds_q4_yoy_preference",
     "tpcds_q74_max_yoy_topk",
@@ -138,16 +89,9 @@ EXTRA_HEADLINERS = (
     "tpcds_q75_yoy_decline",
     "tpcds_q58_channel_parity_items",
     "tpcds_q99_ship_lag_bands",
-    # round-11 late widening (30 -> 33): global count-distinct behind
-    # semi/anti joins, the EXCEPT-chain twin of q14's INTERSECT, and the
-    # scalar-over-scalar ratio readout
     "tpcds_q16_distinct_shippers",
     "tpcds_q87_channel_except_chain",
     "tpcds_q90_am_pm_ratio",
-    # round-12 widening (33 -> 39; r11 verdict task 5): inventory pivot,
-    # EXISTS+double-NOT-EXISTS stack, 24-col pivot, scalar-CASE fan,
-    # OR-of-ANDs bands, unordered window share — plus the ACID ORC
-    # layout-read bridge (r11 verdict task 2)
     "tpcds_q21_inventory_shift",
     "tpcds_q69_active_without_incident",
     "tpcds_q66_monthly_ship_pivot",
@@ -155,10 +99,8 @@ EXTRA_HEADLINERS = (
     "tpcds_q13_or_band_selectivity",
     "tpcds_q98_class_revenue_share",
     "io_acid_orc_read",
-    # round-12 late widening (39 -> 41): rank-join-rank, derived-threshold
     "tpcds_q44_best_worst_rank_join",
     "tpcds_q65_below_average_items",
-    # round-12 closing batch (41 -> 46): residual-delta shapes
     "tpcds_q28_distinct_band_fan",
     "tpcds_q30_above_state_avg_returns",
     "tpcds_q32_excess_discount",
@@ -174,121 +116,23 @@ EXTRA_HEADLINERS = (
     "io_hilbert_file_skipping",
 )
 
-# BENCH_TREND.md rule, machine-enforced: best-vs-previous-best drift beyond
-# this ratio lands in the final line's `regressions` list.
+# A query (or the graded trio, for `noisy`) more than this ratio over its
+# same-host running best is flagged.
 REGRESSION_RATIO = 1.15
 
-# Round-7 (r6 verdict #2): when the graded trio lands >this ratio over the
-# committed converged best, the run-of-record is a loaded-box artifact, not
-# a code story — auto-rerun the trio once; if still above, the grade line
-# carries noisy:true so the judge reads best_total as the converged number.
-NOISY_RATIO = 1.15
 
-
-#: Sentinel workload sizes — FIXED forever (changing them invalidates the
-#: committed sentinel bests; bump only with a simultaneous best reset).
-_SENT_CPU_BYTES = 1 << 20
-_SENT_CPU_REPS = 48
-_SENT_SPARK_ROWS = 4_000_000
-
-
-def _sentinel_probe(spark) -> dict[str, float]:
-    """Engine-independent box-state probe (r11, judge task: measure drift,
-    don't adjudicate it): a pure-CPU sha256 loop (CPU/GIL contention +
-    clock throttling) and a pinned synthetic Spark job (JVM/scheduler
-    health — range→xxhash64→sum, 8 fixed partitions, no shuffle beyond the
-    final 1-row agg, no engine code). Both best-of-3 after a warm run;
-    neither touches the engine's queries or data, so their drift can ONLY
-    be the box."""
-    import hashlib
-
-    buf = b"\xa5" * _SENT_CPU_BYTES
-
-    def cpu_once() -> float:
-        t0 = time.perf_counter()
-        h = hashlib.sha256()
-        for _ in range(_SENT_CPU_REPS):
-            h.update(buf)
-        h.digest()
-        return time.perf_counter() - t0
-
-    def spark_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, _SENT_SPARK_ROWS, 1, 8).selectExpr(
-            "sum(xxhash64(id)) AS s"
-        ).collect()
-        return time.perf_counter() - t0
-
-    spark_once()  # warm the probe's own plan/codegen out of the timing
-    return {
-        "cpu_s": round(min(cpu_once() for _ in range(3)), 4),
-        "spark_s": round(min(spark_once() for _ in range(3)), 4),
-    }
-
-
-def _load_sentinel_best(sf: float | str) -> dict[str, float]:
-    """Committed sentinel minima (the box's best observed state) — the
-    denominator of the normalization ratio."""
-    try:
-        with open(_sidecar_path(sf)) as fh:
-            prev = json.load(fh)
-        if prev.get("sf") != sf:
-            return {}
-        return (prev.get("sentinel") or {}).get("best") or {}
-    except (OSError, ValueError):
-        return {}
-
-
-def _foreign_jvms() -> list[int]:
-    """PIDs of java/spark processes that are NOT descendants of this bench
-    (a concurrent Spark session inflates timings 20-60% — BENCH_TREND.md).
-    Pure /proc scan; returns [] on non-Linux."""
-    me = os.getpid()
-    pids = []
-    try:
-        entries = [p for p in os.listdir("/proc") if p.isdigit()]
-    except OSError:
-        return []
-    for p in entries:
-        try:
-            with open(f"/proc/{p}/cmdline", "rb") as fh:
-                argv = fh.read().split(b"\0")
-            exe = os.path.basename(argv[0].decode(errors="replace")) if argv else ""
-            # only real JVM / spark launcher binaries — matching 'spark'
-            # anywhere in the cmdline flags shells whose *arguments* mention
-            # spark (e.g. the driver harness itself)
-            if exe != "java" and not exe.startswith("spark-"):
-                continue
-            # walk the parent chain; skip our own descendants
-            pid = int(p)
-            cur = pid
-            own = False
-            for _ in range(32):
-                with open(f"/proc/{cur}/status") as fh:
-                    ppid = next(
-                        int(line.split()[1])
-                        for line in fh
-                        if line.startswith("PPid:")
-                    )
-                if ppid == me:
-                    own = True
-                    break
-                if ppid <= 1:
-                    break
-                cur = ppid
-            if not own and pid != me:
-                pids.append(pid)
-        except (OSError, StopIteration, ValueError):
-            continue
-    return pids
+def host_key() -> str:
+    """The host a set of bests belongs to: core count, GB of RAM, CPU model."""
+    gb = _meminfo_kb("MemTotal") // (1 << 20)
+    return f"{os.cpu_count()} cores / {gb} GB / {cpu_model()}"
 
 
 def find_regressions(
     prev_best: dict[str, float], timings: dict[str, float | None]
 ) -> list[dict[str, float | str]]:
-    """Queries >REGRESSION_RATIO slower than their previous committed best.
-    Only queries present in both rounds are comparable; a query that FAILED
-    this round (None) is always listed — a crash is the worst regression."""
+    """Queries >REGRESSION_RATIO slower than their previous best.
+    Only queries with a previous best are comparable; a query that FAILED
+    this run (None) is always listed — a crash is the worst regression."""
     out: list[dict[str, float | str]] = []
     for name, now in timings.items():
         prev = prev_best.get(name)
@@ -301,6 +145,26 @@ def find_regressions(
     return out
 
 
+def judge(
+    bests: dict[str, dict[str, float]],
+    host: str,
+    timings: dict[str, float | None],
+) -> tuple[list[dict[str, float | str]], bool, dict[str, dict[str, float]]]:
+    """Grade a run against ``host``'s own running bests only.
+
+    Returns (regressions, noisy, updated bests). Other hosts' bests are
+    carried over untouched. The bests are running minima, so one slow run
+    cannot clobber them and a crashed query (None) keeps its best."""
+    prev = bests.get(host, {})
+    best = dict(prev)
+    for k, v in timings.items():
+        if v is not None:
+            best[k] = min(v, best.get(k, v))
+    total, conv = _trio_total(timings), _trio_total(prev)
+    noisy = total is not None and conv is not None and total > conv * REGRESSION_RATIO
+    return find_regressions(prev, timings), noisy, {**bests, host: best}
+
+
 def compact_line(
     total: float | None,
     timings: dict[str, float | None],
@@ -309,19 +173,11 @@ def compact_line(
     regressions: list[dict[str, float | str]],
     noisy: bool = False,
     best_total: float | None = None,
-    box_drift: float | None = None,
 ) -> str:
-    """The driver-facing grade: ONE short JSON line. The tail-capture
-    contract (round-5 lesson) caps it; tests assert < 2048 bytes. Built
-    from ONE dict so the slim fallback can never drop a field the full
-    line carries — only `queries` shrinks to the graded trio.
-    `best_total` is the sum of the graded trio's RUNNING committed bests
-    (clobber-proof minima) — the converged headline; `noisy:true` flags a
-    run-of-record that stayed >NOISY_RATIO over it even after the
-    auto-rerun, i.e. a machine-load artifact, not a code regression;
-    `box_drift` (r9) replaces the noisy flag when the above-best number is
-    REPRODUCED by the rerun within 5% on an uncontended box — a stable
-    slower-box story, graded as value/best_total context, not noise."""
+    """The grade: ONE short JSON line, under 2048 bytes.
+    Built from ONE dict so the slim fallback can never drop a field the
+    full line carries — only `queries` shrinks to the graded trio.
+    `best_total` is the sum of the trio's running same-host bests."""
     grade = {
         "metric": "headline_warm_total (q1_agg+q3_join+qw_window shapes)",
         "value": total,
@@ -331,7 +187,7 @@ def compact_line(
         "contended": contended,
         "regressions": [r["q"] for r in regressions],
         "noisy": noisy,
-        "box_drift": box_drift,
+        "box_drift": None,
         "best_total": best_total,
     }
     line = json.dumps(grade, separators=(",", ":"))
@@ -350,19 +206,16 @@ def _sidecar_path(sf: float | str) -> str:
     return _SIDECAR.replace(".json", f"_sf{sf}.json")
 
 
-def _load_prev_best(sf: float | str) -> dict[str, float]:
-    """The regression comparator: the sidecar's `best` dict (running
-    per-query minima across runs). Falls back to `queries` for sidecars
-    written before the `best` field existed."""
+def _load_bests(sf: float | str) -> dict[str, dict[str, float]]:
+    """The sidecar's host-keyed `best` (running per-query minima per host)."""
     try:
         with open(_sidecar_path(sf)) as fh:
             prev = json.load(fh)
-        if prev.get("sf") != sf:
-            return {}
-        src = prev.get("best") or prev.get("queries") or {}
-        return {k: v for k, v in src.items() if v is not None}
     except (OSError, ValueError):
         return {}
+    if prev.get("sf") != sf:
+        return {}
+    return prev.get("best") or {}
 
 
 def _measure(
@@ -374,17 +227,15 @@ def _measure(
     spread: dict[str, dict[str, float]],
 ) -> None:
     """Cold-run + best-of-N warm reps per query, MERGED into timings/spread
-    as running minima (so an auto-rerun can only improve a number)."""
+    as running minima (a name measured twice keeps its best pass)."""
     for name in names:
-        # Failure isolation (round-2 lesson: one crashed query killed the
-        # whole bench and the round published NO number): a broken query
-        # degrades to `null` in `queries`, never to a missing JSON line.
+        # A broken query degrades to `null` in `queries`, never to a
+        # missing JSON line.
         try:
             fn = queries[name]
             fn(spark, sf_dir).collect()  # cold run: plan + JIT + page cache
-            # best-of-N warm reps: robust to machine load; the three
-            # baseline-comparable queries (the graded ratio) get extra reps
-            # since box-load noise was measured at +-20% round-to-round
+            # the graded trio gets extra reps: box-load noise was measured
+            # at +-20% run-to-run
             reps = 7 if name in BASELINE_COMPARABLE else 3
             times = []
             for _ in range(reps):
@@ -414,129 +265,26 @@ def _trio_total(timings: dict[str, float | None]) -> float | None:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    foreign = _foreign_jvms()
+    foreign = foreign_jvms()  # before our own JVM starts
+    host = host_key()
     from hive_apache_ci_spark.registry import all_queries
     from hive_apache_ci_spark.session import get_spark
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-    sent_start = _sentinel_probe(spark)
     timings: dict[str, float | None] = {}
     spread: dict[str, dict[str, float]] = {}
     _measure(
-        spark, sf_dir, queries, (*BASELINE_COMPARABLE, *EXTRA_HEADLINERS),
+        spark, sf_dir, all_queries(), (*BASELINE_COMPARABLE, *EXTRA_HEADLINERS),
         timings, spread,
     )
     total = _trio_total(timings)
     sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
     sf = float(sf_tag) if sf_tag.replace(".", "").isdigit() else sf_tag
-    prev_best = _load_prev_best(sf)
-    # Noisy-run convergence (r6 verdict #2): if the graded trio came in
-    # >NOISY_RATIO over its committed converged best, the artifact is
-    # telling a machine-load story — rerun JUST the trio once (minima
-    # merge, so this can only converge downward); if it STILL exceeds the
-    # band, flag noisy:true so the judge grades best_total instead.
-    conv = (
-        round(sum(prev_best[n] for n in BASELINE_COMPARABLE), 4)
-        if all(n in prev_best for n in BASELINE_COMPARABLE)
-        else None
-    )
-    # r11 ADVICE: pre-scale the rerun band by the START sentinel's ratio
-    # against its committed best — on a uniformly slow box (already
-    # measured before any engine query ran) the trio overage is fully
-    # explained by the sentinel, and an auto-rerun would only waste wall
-    # clock. The END probe (after measurement) stays the final normalizer.
-    sent_best_prev = _load_sentinel_best(sf)
-    _start_base = (sent_best_prev.get("start") or {}).get("spark_s")
-    start_ratio = (
-        max(1.0, sent_start["spark_s"] / _start_base) if _start_base else 1.0
-    )
-    rerun_band = NOISY_RATIO * start_ratio
-    if total is not None and conv is not None and total > conv * rerun_band:
-        print(
-            f"bench: headline {total} > {NOISY_RATIO}x committed best {conv}"
-            f" (band pre-scaled by start-sentinel ratio {start_ratio:.3f})"
-            " — auto-rerunning the graded trio once",
-            file=sys.stderr,
-        )
-        _measure(spark, sf_dir, queries, BASELINE_COMPARABLE, timings, spread)
-        total = _trio_total(timings)
-    # Box state: MEASURED by the sentinel pair bracketing the run (r11 —
-    # replaces the r9 agreement heuristic and the r10 median-of-ratios
-    # scaling, which could reclassify a uniform code regression as box
-    # drift; r10 ADVICE). The normalizer is the spark probe's mean-of-
-    # (start, end) over its committed best: the probe runs the same JVM/
-    # scheduler path as the queries but none of the engine's code, so its
-    # drift can only be the box. Mid-run drift (the r10 failure mode) is
-    # bracketed by the start/end pair — a linear ramp averages out; a
-    # start/end spread >2x would still be visible in the sidecar. The CPU
-    # probe is recorded for diagnosis (GIL/clock vs JVM contention).
-    sent_end = _sentinel_probe(spark)
-    # Bests are PER PHASE (start vs end), not pooled: the start probe runs
-    # on a freshly-started JVM and is systematically JIT-colder than the
-    # end probe (measured r11 run 1: spark_s 0.159 start vs 0.044 end).
-    # Pooling would compare every future start probe against the warm
-    # minimum and read a permanent ~2x "drift" that scales the comparator
-    # and masks real regressions. Cold-to-cold and warm-to-warm.
-    sent_best: dict[str, dict[str, float]] = {
-        ph: dict(sent_best_prev.get(ph) or {}) for ph in ("start", "end")
-    }
-    for ph, cur in (("start", sent_start), ("end", sent_end)):
-        for k in ("cpu_s", "spark_s"):
-            old = sent_best[ph].get(k)
-            sent_best[ph][k] = min(cur[k], old) if old else cur[k]
-
-    def _sent_ratio(k: str) -> float:
-        # Mean of the per-phase ratios against COMMITTED bests only. On
-        # the first sentinel run (no committed best) the ratio is 1.0 —
-        # comparing against this run's own values would scale the
-        # comparator off intra-run jitter and could suppress a real
-        # regression exactly once.
-        rs = []
-        for ph, cur in (("start", sent_start), ("end", sent_end)):
-            base = (sent_best_prev.get(ph) or {}).get(k)
-            if base:
-                rs.append(cur[k] / base)
-        return round(sum(rs) / len(rs), 3) if rs else 1.0
-
-    sentinel_ratio = max(1.0, _sent_ratio("spark_s"))
-    cpu_ratio = _sent_ratio("cpu_s")
-    # noisy = the trio stayed over band even after the MEASURED box-state
-    # normalization — genuinely unexplained, grade best_total instead.
-    noisy = (
-        total is not None
-        and conv is not None
-        and total / sentinel_ratio > conv * NOISY_RATIO
-    )
-    box_drift = sentinel_ratio if sentinel_ratio > 1.05 else None
-    # Per-query regression signal: the comparator scales committed bests
-    # by the sentinel ratio ONLY — a query flags iff it moved relative to
-    # what the box itself measured. The RAW list is always emitted in the
-    # sidecar so nothing normalized away is invisible (r10 ADVICE).
-    regressions_raw = find_regressions(prev_best, timings)
-    cmp_best = (
-        {k: v * sentinel_ratio for k, v in prev_best.items()}
-        if sentinel_ratio > 1.0
-        else prev_best
-    )
-    regressions = find_regressions(cmp_best, timings)
-    # `best` = running per-query minima: the regression baseline must not
-    # be clobbered by one slow/contended run (a persistent regression would
-    # otherwise be reported exactly once and then silently pass), and a
-    # crashed query (None) must not erase its committed best.
-    best = dict(prev_best)
-    for k, v in timings.items():
-        if v is not None:
-            best[k] = min(v, best[k]) if k in best else v
-    best_total = (
-        round(sum(best[n] for n in BASELINE_COMPARABLE), 4)
-        if all(n in best for n in BASELINE_COMPARABLE)
-        else None
-    )
-    # Full payload -> sidecar (spread, regression detail, contention census);
-    # also next round's regression baseline. Best-effort: a read-only repo
-    # checkout must not kill the grade line.
+    regressions, noisy, bests = judge(_load_bests(sf), host, timings)
+    best_total = _trio_total(bests[host])
+    # Full payload -> sidecar, which is also the next run's baseline.
+    # Best-effort: a read-only checkout must not kill the grade line.
     try:
         os.makedirs(os.path.dirname(_SIDECAR), exist_ok=True)
         with open(_sidecar_path(sf), "w") as fh:
@@ -546,23 +294,16 @@ def main() -> int:
                     "value": total,
                     "unit": "sec",
                     "sf": sf,
+                    "host": host,
                     "queries": timings,
-                    "best": best,
                     "spread": spread,
                     "contended": bool(foreign),
-                    "foreign_jvms": len(foreign),
+                    "foreign_jvms": foreign,
                     "regressions": regressions,
-                    "regressions_raw": regressions_raw,
                     "noisy": noisy,
-                    "box_drift": box_drift,
-                    "sentinel": {
-                        "start": sent_start,
-                        "end": sent_end,
-                        "best": sent_best,
-                        "ratio": sentinel_ratio,
-                        "cpu_ratio": cpu_ratio,
-                    },
+                    "box_drift": None,
                     "best_total": best_total,
+                    "best": bests,
                 },
                 fh,
                 indent=1,
@@ -572,8 +313,7 @@ def main() -> int:
         print(f"bench: sidecar write failed: {exc}", file=sys.stderr)
     print(
         compact_line(
-            total, timings, sf, bool(foreign), regressions, noisy,
-            best_total, box_drift,
+            total, timings, sf, bool(foreign), regressions, noisy, best_total,
         )
     )
     return 0

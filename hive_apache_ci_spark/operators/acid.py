@@ -361,7 +361,7 @@ def escape_partition_value(v: str | None) -> str:
     matching Spark's ExternalCatalogUtils.getPartitionValueString (the
     dir Spark actually writes for them) — so a chain written with a
     null-valued partition stays reachable via ``read(partition=None)``
-    instead of keying the manifest by a sentinel no lookup can produce
+    instead of keying the manifest by a placeholder no lookup can produce
     (r11 ADVICE)."""
     if v is None or v == "":
         return "__HIVE_DEFAULT_PARTITION__"

@@ -2303,7 +2303,7 @@ def agg_kmv_sketch_setops(spark, sf_dir):
     CTEs per reference, so the self-contained text scanned events 24
     times (ha/hb/ska/skb/m each consumed 2-3x); r12 checkpointed the
     distinct (grp, h) relation, which left 24 RDD re-scans of it plus a
-    stop-the-world materialization barrier — the one sentinel-normalized
+    stop-the-world materialization barrier — the one normalized
     bench regression of the round (r12 VERDICT task 6).
 
     r13 restructure: ONE groupBy(h) pass over events builds the per-hash

@@ -14,13 +14,8 @@ exercised (parser → analyzer → Catalyst), not a DataFrame re-phrasing.
 
 from __future__ import annotations
 
-from ..catalog import load_tables
+from ..catalog import load_tables, run_sql
 from ..registry import query
-
-
-def _sql(spark, sf_dir, text):
-    load_tables(spark, sf_dir, register=True)
-    return spark.sql(text)
 
 
 # ---- recursive CTE ------------------------------------------------------
@@ -52,7 +47,7 @@ def recursive_cte_chain(spark, sf_dir):
     BOM walks) Hive 2.3 cannot express at all. Spark 4 executes it as an
     iterative loop of joins under one plan; the oracle is the identical
     query text in DuckDB (independent recursive-CTE implementation)."""
-    return _sql(spark, sf_dir, _RECURSIVE_SQL)
+    return run_sql(spark, _RECURSIVE_SQL, sf_dir)
 
 
 # ---- LISTAGG ... WITHIN GROUP -------------------------------------------
@@ -74,9 +69,8 @@ def listagg_ordered(spark, sf_dir):
     of Hive's collect_list+sort+concat_ws idiom, with a deterministic
     element order making the result exact-hashable. Oracle: DuckDB's
     equivalent ordered ``string_agg``."""
-    return _sql(
+    return run_sql(
         spark,
-        sf_dir,
         """
         SELECT c_mktsegment,
                listagg(c_name, '|') WITHIN GROUP (ORDER BY c_name) AS names,
@@ -85,6 +79,7 @@ def listagg_ordered(spark, sf_dir):
         WHERE c_acctbal > 9000
         GROUP BY c_mktsegment
         """,
+        sf_dir,
     )
 
 
@@ -113,9 +108,8 @@ def unpivot_measures(spark, sf_dir):
     surface, new in Spark 3.4+ SQL. The oracle spells out the same
     relational algebra as a UNION ALL of the measure arms, so the check is
     engine-independent."""
-    return _sql(
+    return run_sql(
         spark,
-        sf_dir,
         """
         SELECT l_returnflag, measure, val
         FROM (
@@ -127,6 +121,7 @@ def unpivot_measures(spark, sf_dir):
         )
         UNPIVOT (val FOR measure IN (qty, price, disc))
         """,
+        sf_dir,
     )
 
 
@@ -150,7 +145,7 @@ def lateral_topn_per_key(spark, sf_dir):
     top-N without a window function (the decorrelation target is a ranked
     semi-join). Identical SQL runs on DuckDB, whose LATERAL support is an
     independent implementation."""
-    return _sql(spark, sf_dir, _LATERAL_SQL)
+    return run_sql(spark, _LATERAL_SQL, sf_dir)
 
 
 # ---- try_* error-safe arithmetic ----------------------------------------
@@ -175,9 +170,8 @@ def try_arithmetic(spark, sf_dir):
     math. The oracle states the expected NULL semantics explicitly
     (DuckDB would *raise* on overflow — the CASE encodes which rows
     overflow)."""
-    return _sql(
+    return run_sql(
         spark,
-        sf_dir,
         """
         SELECT o_orderkey,
                round(try_divide(o_totalprice, o_custkey % 5), 4)   AS safe_div,
@@ -186,6 +180,7 @@ def try_arithmetic(spark, sf_dir):
         FROM orders
         WHERE o_orderkey <= 3000
         """,
+        sf_dir,
     )
 
 
@@ -205,15 +200,15 @@ def group_by_all(spark, sf_dir):
     """``GROUP BY ALL`` — infer the grouping key from the non-aggregate
     select items. Oracle spells the inferred key out explicitly, proving
     the inference picked exactly (o_orderstatus, o_orderpriority)."""
-    return _sql(
+    return run_sql(
         spark,
-        sf_dir,
         """
         SELECT o_orderstatus, o_orderpriority,
                count(*) AS n, round(sum(o_totalprice), 2) AS total
         FROM orders
         GROUP BY ALL
         """,
+        sf_dir,
     )
 
 
@@ -239,9 +234,8 @@ def variant_roundtrip(spark, sf_dir):
     identity on the source columns — a failed parse/extract anywhere
     breaks the hash. This is the modern replacement for Hive's
     JsonSerDe/get_json_object surface at engine-native speed."""
-    return _sql(
+    return run_sql(
         spark,
-        sf_dir,
         """
         SELECT o_orderkey,
                variant_get(v, '$.key', 'bigint')     AS v_key,
@@ -259,6 +253,7 @@ def variant_roundtrip(spark, sf_dir):
           WHERE o_orderkey <= 2000
         )
         """,
+        sf_dir,
     )
 
 
@@ -296,7 +291,7 @@ def pipe_syntax_agg(spark, sf_dir):
     in dataflow order. Catalyst compiles it to the identical plan as the
     classic form (the oracle IS the classic form in DuckDB), so adopting
     the modern surface costs nothing at any scale."""
-    return _sql(spark, sf_dir, _PIPE_SQL)
+    return run_sql(spark, _PIPE_SQL, sf_dir)
 
 
 # ---- collation-aware comparison (Spark 4.0 COLLATE) ----------------------
@@ -320,9 +315,8 @@ def collation_case_insensitive(spark, sf_dir):
     query. The oracle states the equivalent explicit-normalization query;
     the emitted group key is lower()ed on both sides so the hash compares
     representation, not just cardinality."""
-    return _sql(
+    return run_sql(
         spark,
-        sf_dir,
         """
         SELECT lower(seg) AS segment,
                CAST(count(*) AS BIGINT) AS n,
@@ -331,6 +325,7 @@ def collation_case_insensitive(spark, sf_dir):
               FROM customer)
         GROUP BY seg
         """,
+        sf_dir,
     )
 
 
@@ -408,7 +403,7 @@ def script_while_threshold(spark, sf_dir):
     prev = spark.conf.get("spark.sql.scripting.enabled", None)
     spark.conf.set("spark.sql.scripting.enabled", "true")
     try:
-        return _sql(spark, sf_dir, _SCRIPT_SQL)
+        return run_sql(spark, _SCRIPT_SQL, sf_dir)
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.scripting.enabled")
@@ -444,7 +439,7 @@ def agg_percentile_within_group(spark, sf_dir):
     returns an actual population element, so it is exact by construction.
     Same per-group sort-bounded cost shape as agg_percentile: grouping
     bounds each ordered set to one cell, so no global sort exists."""
-    return _sql(spark, sf_dir, _PCTL_WG_SQL)
+    return run_sql(spark, _PCTL_WG_SQL, sf_dir)
 
 
 # ---- SQL UDFs (CREATE FUNCTION ... RETURN) -------------------------------

@@ -10,13 +10,8 @@ semantic trap and gets its own query.
 
 from __future__ import annotations
 
-from ..catalog import load_tables
+from ..catalog import run_sql
 from ..registry import query
-
-
-def _sql(spark, sf_dir, text):
-    load_tables(spark, sf_dir, register=True)
-    return spark.sql(text)
 
 
 _IN_SQL = """
@@ -30,7 +25,7 @@ WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9000)
 @query("subquery_in", oracle=_IN_SQL)
 def subquery_in(spark, sf_dir):
     """Uncorrelated IN subquery → left semi join after decorrelation."""
-    return _sql(spark, sf_dir, _IN_SQL)
+    return run_sql(spark, _IN_SQL, sf_dir)
 
 
 _NOT_IN_SQL = """
@@ -45,7 +40,7 @@ WHERE c_custkey NOT IN
 @query("subquery_not_in", oracle=_NOT_IN_SQL)
 def subquery_not_in(spark, sf_dir):
     """NOT IN over a non-NULL subquery → null-aware anti join."""
-    return _sql(spark, sf_dir, _NOT_IN_SQL)
+    return run_sql(spark, _NOT_IN_SQL, sf_dir)
 
 
 _NOT_IN_NULL_SQL = """
@@ -62,7 +57,7 @@ def subquery_not_in_null(spark, sf_dir):
     """NOT IN where the subquery yields NULLs: three-valued logic makes the
     predicate never-true, so the result must be EMPTY — both engines have to
     agree on this trap (SURVEY.md §7 build-plan P1 calls it out)."""
-    return _sql(spark, sf_dir, _NOT_IN_NULL_SQL)
+    return run_sql(spark, _NOT_IN_NULL_SQL, sf_dir)
 
 
 _EXISTS_SQL = """
@@ -76,7 +71,7 @@ WHERE EXISTS (SELECT 1 FROM lineitem
 @query("subquery_exists", oracle=_EXISTS_SQL)
 def subquery_exists(spark, sf_dir):
     """Correlated EXISTS → semi join after decorrelation."""
-    return _sql(spark, sf_dir, _EXISTS_SQL)
+    return run_sql(spark, _EXISTS_SQL, sf_dir)
 
 
 _SCALAR_SQL = """
@@ -89,7 +84,7 @@ WHERE c_acctbal > (SELECT avg(c_acctbal) * 1.8 FROM customer)
 @query("subquery_scalar", oracle=_SCALAR_SQL)
 def subquery_scalar(spark, sf_dir):
     """Uncorrelated scalar subquery in a predicate."""
-    return _sql(spark, sf_dir, _SCALAR_SQL)
+    return run_sql(spark, _SCALAR_SQL, sf_dir)
 
 
 _CORR_SCALAR_SQL = """
@@ -105,7 +100,7 @@ WHERE o.o_totalprice >
 def subquery_corr_scalar(spark, sf_dir):
     """Correlated scalar subquery (per-customer average) — decorrelated by
     Catalyst into an aggregate + join (HiveRelDecorrelator's job in Hive)."""
-    return _sql(spark, sf_dir, _CORR_SCALAR_SQL)
+    return run_sql(spark, _CORR_SCALAR_SQL, sf_dir)
 
 
 _IN_SELECT_SQL = """
@@ -121,7 +116,7 @@ WHERE o_totalprice > 440000
 def subquery_in_select(spark, sf_dir):
     """IN subquery used as a projected boolean (not a filter) — exercises
     the existence-join plan shape."""
-    return _sql(spark, sf_dir, _IN_SELECT_SQL)
+    return run_sql(spark, _IN_SELECT_SQL, sf_dir)
 
 
 _Q2_SQL = """
@@ -143,7 +138,7 @@ def tpch_q2_min_cost_supplier(spark, sf_dir):
     """TPC-H Q2 adapted (best supplier per part): correlated aggregate
     subquery against the outer join key — the decorrelation pattern
     (HiveRelDecorrelator / Catalyst RewriteCorrelatedScalarSubquery)."""
-    return _sql(spark, sf_dir, _Q2_SQL)
+    return run_sql(spark, _Q2_SQL, sf_dir)
 
 
 _Q16_SQL = """
@@ -161,7 +156,7 @@ LIMIT 30
 @query("tpch_q16_supplier_cnt", oracle=_Q16_SQL)
 def tpch_q16_supplier_cnt(spark, sf_dir):
     """TPC-H Q16 adapted: DISTINCT-count after a NOT IN exclusion."""
-    return _sql(spark, sf_dir, _Q16_SQL)
+    return run_sql(spark, _Q16_SQL, sf_dir)
 
 
 _Q22_SQL = """
@@ -181,7 +176,7 @@ ORDER BY name_digit
 def tpch_q22_global_sales(spark, sf_dir):
     """TPC-H Q22 adapted: scalar subquery + NOT EXISTS anti join + grouped
     aggregation over a derived key — three subquery forms in one query."""
-    return _sql(spark, sf_dir, _Q22_SQL)
+    return run_sql(spark, _Q22_SQL, sf_dir)
 
 
 _Q21_SQL = """
@@ -213,7 +208,7 @@ def tpch_q21_waiting_supplier(spark, sf_dir):
     (SURVEY.md §4.2; l_returnflag='R' stands in for receipt>commit since
     the schema lacks those columns). Catalyst plans one semi and one anti
     join against the same scan."""
-    return _sql(spark, sf_dir, _Q21_SQL)
+    return run_sql(spark, _Q21_SQL, sf_dir)
 
 
 _Q4_SQL = """
@@ -236,7 +231,7 @@ def tpch_q4_priority_check(spark, sf_dir):
     column (l_shipdate > o_orderdate + 45 days stands in for
     commitdate < receiptdate). Decorrelation must carry the outer column
     into the semi-join condition."""
-    return _sql(spark, sf_dir, _Q4_SQL)
+    return run_sql(spark, _Q4_SQL, sf_dir)
 
 
 _EXISTS_MIXED_SQL = """
@@ -257,7 +252,7 @@ def subquery_exists_not_exists(spark, sf_dir):
     predicates ("some line has qty>=48 but no line has discount>0.08") —
     two independent subqueries against one scan, semi + anti stacked on the
     same outer relation."""
-    return _sql(spark, sf_dir, _EXISTS_MIXED_SQL)
+    return run_sql(spark, _EXISTS_MIXED_SQL, sf_dir)
 
 
 _Q20_SQL = """
@@ -282,4 +277,4 @@ def tpch_q20_excess_stock(spark, sf_dir):
     contains a nested IN plus a GROUP BY ... HAVING over the fact table —
     the deepest subquery nesting in the TPC-H suite (partsupp availability
     is adapted to shipped-quantity sums since the schema has no partsupp)."""
-    return _sql(spark, sf_dir, _Q20_SQL)
+    return run_sql(spark, _Q20_SQL, sf_dir)

@@ -107,7 +107,7 @@ multiply-path round diverge; the shift moves them decisively off, and
 pre-quantized sums are .01-multiples that can never straddle the outer
 2dp round). Then: money sums rounded 2dp,
 window averages 4dp, every float membership/rank cut goes through a 6dp
-round on BOTH sides, rollup NULL keys coalesced to sentinels so no
+round on BOTH sides, rollup NULL keys coalesced to placeholders so no
 NULLS FIRST/LAST divergence exists, rank() cast to INT (DuckDB emits
 BIGINT), and every rank ORDER BY carries a full unique tie-break.
 
@@ -126,13 +126,8 @@ and survive a 1000-executor scale-up unchanged.
 
 from __future__ import annotations
 
-from ..catalog import load_tables
+from ..catalog import run_sql
 from ..registry import query
-
-
-def _sql(spark, sf_dir, text):
-    load_tables(spark, sf_dir, register=True)
-    return spark.sql(text)
 
 
 # --- q5: multi-channel UNION ALL -> ROLLUP ---------------------------------
@@ -190,7 +185,7 @@ def tpcds_q5_channel_rollup(spark, sf_dir):
     bitwise identical while the x3 Expand blow-up of corpus-sized data
     disappears. At 100 TB this is the difference between a rollup over
     60 rows and a rollup over the whole fact table."""
-    return _sql(spark, sf_dir, _Q5_SQL)
+    return run_sql(spark, _Q5_SQL, sf_dir)
 
 
 # --- q10: EXISTS chain with OR-of-EXISTS -----------------------------------
@@ -219,7 +214,7 @@ def tpcds_q10_exists_chain(spark, sf_dir):
     disjunctive (OR) EXISTS pair — the pattern Catalyst lowers to a left
     semi join plus ExistenceJoins feeding a boolean filter (plain semi
     joins can't express the OR)."""
-    return _sql(spark, sf_dir, _Q10_SQL)
+    return run_sql(spark, _Q10_SQL, sf_dir)
 
 
 # --- q11: CTE reused 4x, cross-channel year-over-year growth ---------------
@@ -257,7 +252,7 @@ def tpcds_q11_yoy_channels(spark, sf_dir):
     each self-joined across two years; keep customers whose ship-channel
     growth beats the store channel. Growth cut is a 6dp-rounded ratio of
     2dp-quantized sums on both engines."""
-    return _sql(spark, sf_dir, _Q11_SQL)
+    return run_sql(spark, _Q11_SQL, sf_dir)
 
 
 # --- q14: cross-channel INTERSECT feeding a filter -------------------------
@@ -315,7 +310,7 @@ def tpcds_q14_cross_channel_items(spark, sf_dir):
     broadcast dimension join. The engine runs the single-scan presence-
     flags rewrite (_Q14_ENGINE_SQL, r13) — the q95-style fold of the
     INTERSECT chain into one aggregate."""
-    return _sql(spark, sf_dir, _Q14_ENGINE_SQL)
+    return run_sql(spark, _Q14_ENGINE_SQL, sf_dir)
 
 
 # --- q47: window over aggregate, deviation from period average -------------
@@ -354,7 +349,7 @@ def tpcds_q47_sales_deviation(spark, sf_dir):
     (window over an aggregate) with lag/lead context rows, keeping months
     that deviate >10%. Both windows share one (p_brand)-keyed exchange;
     the deviation cut is 6dp-rounded on both engines."""
-    return _sql(spark, sf_dir, _Q47_SQL)
+    return run_sql(spark, _Q47_SQL, sf_dir)
 
 
 # --- q67: ROLLUP hierarchy -> rank() top-k per partition -------------------
@@ -397,7 +392,7 @@ def tpcds_q67_rollup_topk(spark, sf_dir):
     """TPC-DS q67 shape: a (brand, type, size) ROLLUP hierarchy ranked
     within brand, top-5 kept. Rank order carries the full unique
     (ptype, psize) tie-break so rank == row_number deterministically;
-    rollup NULLs are coalesced to sentinels before partitioning.
+    rollup NULLs are coalesced to placeholders before partitioning.
 
     Scale note (r8): two-tier eager aggregation (Yan/Larson). Tier 1
     pre-aggregates lineitem per l_partkey BELOW the join, so the join
@@ -407,7 +402,7 @@ def tpcds_q67_rollup_topk(spark, sf_dir):
     the fact rows. Exact-DECIMAL partial sums are associative, so results
     are bitwise identical at every tier. The only corpus-sized exchange
     left is the map-side-combined l_partkey aggregate."""
-    return _sql(spark, sf_dir, _Q67_SQL)
+    return run_sql(spark, _Q67_SQL, sf_dir)
 
 
 # --- q88: scalar-count fan over time bands ---------------------------------
@@ -431,7 +426,7 @@ def tpcds_q88_time_bands(spark, sf_dir):
     """TPC-DS q88 shape: eight independent filtered counts cross-joined
     into one row — each side is a 1-row aggregate, so every join is the
     allowed scalar-attach broadcast-BNLJ shape."""
-    return _sql(spark, sf_dir, _Q88_SQL)
+    return run_sql(spark, _Q88_SQL, sf_dir)
 
 
 # --- q97: FULL OUTER overlap of two DISTINCT channel sets ------------------
@@ -460,7 +455,7 @@ def tpcds_q97_channel_overlap(spark, sf_dir):
     """TPC-DS q97 shape: (customer, item) DISTINCT sets from two periods
     FULL OUTER joined to count exclusive/shared pairs. Both sides hash to
     the same (cust, item) key, so the join reuses the dedup exchanges."""
-    return _sql(spark, sf_dir, _Q97_SQL)
+    return run_sql(spark, _Q97_SQL, sf_dir)
 
 
 # --- q23: scalar-max-threshold CTEs feeding a double IN filter -------------
@@ -522,8 +517,9 @@ def tpcds_q23_frequent_buyers(spark, sf_dir):
     at sf0.1 AND ~11% slower at sf1 (interleaved, min/arm: sf0.1
     1.19->1.27 s, sf1 2.24->2.50 s) — the two materialization barriers on
     dimension-sized aggregates cost more than the saved fact scans at
-    these scales. Reverted; plans/r13/tpcds_q23_* keep the evidence."""
-    return _sql(spark, sf_dir, _Q23_SQL)
+    these scales. Reverted; the plan dumps are plans/r13/tpcds_q23_* at
+    commit 5ec251a."""
+    return run_sql(spark, _Q23_SQL, sf_dir)
 
 
 # --- q51: FULL OUTER of two cumulative streams, window AFTER the join ------
@@ -589,7 +585,7 @@ def tpcds_q51_cumulative_channels(spark, sf_dir):
     cumulative leads. Cumulatives accumulate as DECIMAL(18,2) inside the
     window so cross-engine float addition order can't matter; (bkt, ym) is
     unique per stream so every window order is total."""
-    return _sql(spark, sf_dir, _Q51_SQL)
+    return run_sql(spark, _Q51_SQL, sf_dir)
 
 
 # --- q64: aggregate CTE self-joined across adjacent years ------------------
@@ -668,7 +664,7 @@ def tpcds_q64_item_year_resales(spark, sf_dir):
     oracle keeps the CTE self-join text; the engine runs the equivalent
     lag-window form (_Q64_ENGINE_SQL) because Spark recomputes the CTE per
     join instance — the rewrite halves the fact scans and drops the join."""
-    return _sql(spark, sf_dir, _Q64_ENGINE_SQL)
+    return run_sql(spark, _Q64_ENGINE_SQL, sf_dir)
 
 
 # --- q78: aggregate-grain LEFT JOIN with IS NULL branch --------------------
@@ -706,7 +702,7 @@ def tpcds_q78_channel_ratio(spark, sf_dir):
     aggregate grain, with the unmatched (IS NULL) branch kept as its own
     reporting segment — the ratio-of-channels report where one channel may
     be absent. DECIMAL totals; the only float is the final 6dp share."""
-    return _sql(spark, sf_dir, _Q78_SQL)
+    return run_sql(spark, _Q78_SQL, sf_dir)
 
 
 # --- q95: fact self-join EXISTS (ws1/ws2) + NOT EXISTS ---------------------
@@ -740,9 +736,10 @@ GROUP BY o.o_orderpriority
 # NOT EXISTS(line with l_returnflag='R') iff max(CASE 'R' THEN 1 END)=0 —
 # and since the EXISTS branch already requires >= 2 lines, the "order has
 # no lines at all" NOT-EXISTS case is unreachable, so an INNER join to the
-# HAVING-filtered aggregate is exact. Plan effect (plans/r12/): 3 lineitem
-# scans + broadcast self-join + SMJ semi + BHJ anti -> 1 scan + 1 partial
-# aggregate + 1 join; measured 2.78 s -> see OPTIMIZATION_r12.md.
+# HAVING-filtered aggregate is exact. Plan effect (plans/r12/ at commit
+# 5ec251a): 3 lineitem scans + broadcast self-join + SMJ semi + BHJ anti ->
+# 1 scan + 1 partial aggregate + 1 join; measured 2.78 s -> see
+# OPTIMIZATION_r12.md.
 _Q95_ENGINE_SQL = """
 WITH ok AS (
   SELECT l_orderkey
@@ -773,7 +770,7 @@ def tpcds_q95_multi_supplier(spark, sf_dir):
     folded into one GROUP BY l_orderkey — see _Q95_ENGINE_SQL) because the
     self-join form rescans the fact three times and shuffles the pair fan;
     at 100 TB the rewrite is one map-side-combinable pass over the fact."""
-    return _sql(spark, sf_dir, _Q95_ENGINE_SQL)
+    return run_sql(spark, _Q95_ENGINE_SQL, sf_dir)
 
 
 # --- q34: HAVING count-band -> join back to the dimension ------------------
@@ -804,7 +801,7 @@ def tpcds_q34_basket_bands(spark, sf_dir):
     HAVING (repeat large-basket customers). The band aggregate and the
     join-back reuse the same orderkey hash; all columns are exact
     BIGINT/string, no float anywhere."""
-    return _sql(spark, sf_dir, _Q34_SQL)
+    return run_sql(spark, _Q34_SQL, sf_dir)
 
 
 # --- q36: ROLLUP + GROUPING()-driven hierarchy rank (round 9) ---------------
@@ -852,7 +849,7 @@ def tpcds_q36_hierarchy_rank(spark, sf_dir):
     window keys are GROUPING-derived — a Catalyst path none of the other
     shapes touch. Margin is DECIMAL-accumulated and 6dp-rounded before
     ranking; the rank ORDER BY carries a full unique tie-break."""
-    return _sql(spark, sf_dir, _Q36_SQL)
+    return run_sql(spark, _Q36_SQL, sf_dir)
 
 
 # --- q49: union of per-channel ranked return-ratio subqueries (round 9) ----
@@ -983,7 +980,7 @@ def tpcds_q49_worst_return_ratios(spark, sf_dir):
     ranks the union PARTITION BY channel (_Q49_ENGINE_SQL) — identical
     per-channel ranks, six single-partition window stages fused into one
     exchange + two sorts."""
-    return _sql(spark, sf_dir, _Q49_ENGINE_SQL)
+    return run_sql(spark, _Q49_ENGINE_SQL, sf_dir)
 
 
 # --- q17: three-fact composite-key chain + stddev family (round 9) ---------
@@ -1026,7 +1023,7 @@ def tpcds_q17_fact_chain_stddev(spark, sf_dir):
     composite hash) feeding mean/stdev readouts — TPC-DS's classic
     'quantity consistency across channels' audit. stddev/avg are
     4dp-rounded; counts exact."""
-    return _sql(spark, sf_dir, _Q17_SQL)
+    return run_sql(spark, _Q17_SQL, sf_dir)
 
 
 # ============================ round 11 widening ==============================
@@ -1079,7 +1076,7 @@ def tpcds_q72_lagged_fulfillment(spark, sf_dir):
     the only big shuffle, exactly the shape AQE skew-splits if order
     sizes skew. Scale: the returns CTE is mutation-sized, broadcast-able
     by AQE after its own pre-aggregation."""
-    return _sql(spark, sf_dir, _Q72_SQL)
+    return run_sql(spark, _Q72_SQL, sf_dir)
 
 
 # --- q4: 3-channel multi-CTE YoY with triple ratio comparison ---------------
@@ -1135,7 +1132,7 @@ def tpcds_q4_yoy_preference(spark, sf_dir):
     both engines. Scale: each CTE is customer-grain (small vs the fact);
     the join tree never re-shuffles — the 1000-executor plan is six
     co-partitioned map-side-ish joins after one agg shuffle each."""
-    return _sql(spark, sf_dir, _Q4_SQL)
+    return run_sql(spark, _Q4_SQL, sf_dir)
 
 
 # --- q74: union-CTE instantiated 4x, MAX year-totals, global top-k ----------
@@ -1185,7 +1182,7 @@ def tpcds_q74_max_yoy_topk(spark, sf_dir):
     YoY shape in the corpus finishing in TakeOrderedAndProject rather
     than a full sort. Scale: top-k is per-partition heaps + one k-row
     driver merge, never a global sort."""
-    return _sql(spark, sf_dir, _Q74_SQL)
+    return run_sql(spark, _Q74_SQL, sf_dir)
 
 
 # --- q93: returns-netting left join (net sales after returns) ---------------
@@ -1229,7 +1226,7 @@ def tpcds_q93_net_after_returns(spark, sf_dir):
     the same fact — one composite-key exchange each, and the returns
     side is pre-filtered to the 'R' slice so the left join's build side
     is returns-sized, not table-sized."""
-    return _sql(spark, sf_dir, _Q93_SQL)
+    return run_sql(spark, _Q93_SQL, sf_dir)
 
 
 # --- q54: cohort -> revenue-window segmentation ------------------------------
@@ -1274,7 +1271,7 @@ def tpcds_q54_revenue_segments(spark, sf_dir):
     1e-9-shifted before the floor, so an exact segment-boundary total
     lands the same side on both engines. Scale: the second agg's input
     is customer-grain; the segment agg is a ~100-row shuffle."""
-    return _sql(spark, sf_dir, _Q54_SQL)
+    return run_sql(spark, _Q54_SQL, sf_dir)
 
 
 # --- q1: correlated scalar subquery vs per-group average ---------------------
@@ -1313,7 +1310,7 @@ def tpcds_q1_returns_above_avg(spark, sf_dir):
     Threshold is a 4dp-rounded, 1e-9-shifted double against exact-DECIMAL
     totals. Scale: the correlated side aggregates to |nations| rows —
     broadcast-joined back, no per-row re-aggregation anywhere."""
-    return _sql(spark, sf_dir, _Q1_SQL)
+    return run_sql(spark, _Q1_SQL, sf_dir)
 
 
 # --- q2: weekly day-of-week pivot, year-over-year ratio ----------------------
@@ -1374,7 +1371,7 @@ def tpcds_q2_weekly_dow_ratio(spark, sf_dir):
     requirement empties the result).
     Scale: the pivot grain is |weeks x 7| rows — the self-join is a
     driver-sized broadcast at any SF."""
-    return _sql(spark, sf_dir, _Q2_SPARK)
+    return run_sql(spark, _Q2_SPARK, sf_dir)
 
 
 # --- q31: quarter-over-quarter share growth, two channels x 3 quarters ------
@@ -1433,7 +1430,7 @@ def tpcds_q31_share_growth(spark, sf_dir):
     Scale: both CTEs aggregate to |nations x 3| rows before the 6-way
     join — the join tree is a driver-sized broadcast chain at any SF;
     the cost is the two fact aggregations, each one shuffle."""
-    return _sql(spark, sf_dir, _Q31_SQL)
+    return run_sql(spark, _Q31_SQL, sf_dir)
 
 
 # --- q39: per-(supplier, month) coefficient of variation, month+1 self-join -
@@ -1473,7 +1470,7 @@ def tpcds_q39_inventory_cov(spark, sf_dir):
     threshold reads identical rounded values on both engines. Scale: the
     self-join input is (supplier x 12)-grain; both arms share one
     supplier-keyed exchange."""
-    return _sql(spark, sf_dir, _Q39_SQL)
+    return run_sql(spark, _Q39_SQL, sf_dir)
 
 
 # --- q6: dimension-derived price threshold + HAVING floor --------------------
@@ -1510,7 +1507,7 @@ def tpcds_q6_oversized_buyers(spark, sf_dir):
     over the DIMENSION, not the fact, so the whole threshold side is a
     broadcast at any scale. Both round(...,4) sides carry the 1e-9
     shift, so the 1.2x boundary reads identically."""
-    return _sql(spark, sf_dir, _Q6_SQL)
+    return run_sql(spark, _Q6_SQL, sf_dir)
 
 
 # --- q75: year-over-year decline with returns netted into the grain ---------
@@ -1558,7 +1555,7 @@ def tpcds_q75_yoy_decline(spark, sf_dir):
     Scale: the self-join input is (brand x years)-grain; one
     brand-keyed exchange feeds both arms; the top-k is
     TakeOrderedAndProject, never a global sort."""
-    return _sql(spark, sf_dir, _Q75_SQL)
+    return run_sql(spark, _Q75_SQL, sf_dir)
 
 
 # --- q58: cross-channel parity items (revenue within band of 3-way avg) -----
@@ -1617,7 +1614,7 @@ def tpcds_q58_channel_parity_items(spark, sf_dir):
     engines. Scale: three item-grain aggregates off ONE fact scan
     (Catalyst shares the scan via plan dedup at best, or 3 pushed-filter
     scans at worst); the 3-way join reuses the item-key exchange."""
-    return _sql(spark, sf_dir, _Q58_SQL)
+    return run_sql(spark, _Q58_SQL, sf_dir)
 
 
 # --- q99: fulfillment-lag bands per priority (grouped CASE bands) -----------
@@ -1658,7 +1655,7 @@ def tpcds_q99_ship_lag_bands(spark, sf_dir):
     banding is in the aggregate expressions, not in per-band subqueries.
     Scale: single fact-fact join on orderkey + one ~5-row aggregate;
     nothing else."""
-    return _sql(spark, sf_dir, _Q99_SPARK)
+    return run_sql(spark, _Q99_SPARK, sf_dir)
 
 
 # --- q16: global COUNT(DISTINCT) readout behind EXISTS + NOT EXISTS ---------
@@ -1714,7 +1711,7 @@ def tpcds_q16_distinct_shippers(spark, sf_dir):
     re-aggregate). The oracle keeps the literal EXISTS text; the engine
     runs the q95-style single-scan aggregate rewrite (_Q16_ENGINE_SQL) —
     the distinct expansion now stacks on one join instead of semi+anti."""
-    return _sql(spark, sf_dir, _Q16_ENGINE_SQL)
+    return run_sql(spark, _Q16_ENGINE_SQL, sf_dir)
 
 
 # --- q87: EXCEPT chain across three channel customer sets -------------------
@@ -1757,7 +1754,7 @@ def tpcds_q87_channel_except_chain(spark, sf_dir):
     segment counts. The corpus's q14 covers INTERSECT; this is the EXCEPT
     twin. Scale: all three sets and both anti joins share the custkey
     hash; the join-back is |survivors|-sized."""
-    return _sql(spark, sf_dir, _Q87_SQL)
+    return run_sql(spark, _Q87_SQL, sf_dir)
 
 
 # --- q90: scalar-over-scalar ratio readout (am/pm) ---------------------------
@@ -1790,7 +1787,7 @@ def tpcds_q90_am_pm_ratio(spark, sf_dir):
     BroadcastNestedLoopJoin — the minimal legal cross join, both sides
     scalar. Scale: two pushed-predicate scans + 1-row broadcasts;
     nothing shuffles."""
-    return _sql(spark, sf_dir, _Q90_SQL)
+    return run_sql(spark, _Q90_SQL, sf_dir)
 
 
 # ============================================================================
@@ -1839,7 +1836,7 @@ def tpcds_q21_inventory_shift(spark, sf_dir):
     is the natural shuffle key; the part join broadcasts (dimension).
     Quantities are integer-valued doubles (exact sums); the ratio cut is
     6dp-rounded on both engines."""
-    return _sql(spark, sf_dir, _Q21_SQL)
+    return run_sql(spark, _Q21_SQL, sf_dir)
 
 
 # --- q35/q69: EXISTS + double NOT EXISTS demographic aggregate stack --------
@@ -1872,7 +1869,7 @@ def tpcds_q69_active_without_incident(spark, sf_dir):
     one LeftSemi and two LeftAnti joins on the same custkey before the
     aggregate. Scale: all three subqueries key by custkey, so AQE shares
     one exchange side; the agg output is bounded by |nation x segment|."""
-    return _sql(spark, sf_dir, _Q69_SQL)
+    return run_sql(spark, _Q69_SQL, sf_dir)
 
 
 # --- q66: two-channel union -> 24-column monthly CASE pivot ------------------
@@ -1932,7 +1929,7 @@ def tpcds_q66_monthly_ship_pivot(spark, sf_dir):
     self-join on the pivoted rows). Scale: both branches prune to one
     year at the scan; the union shuffles once on the 25-value warehouse
     key; partial aggregation collapses each map task to |wh| rows."""
-    return _sql(spark, sf_dir, _Q66_SQL)
+    return run_sql(spark, _Q66_SQL, sf_dir)
 
 
 # --- q9: CASE choosing BETWEEN scalar subqueries, 5-bucket fan ---------------
@@ -1969,7 +1966,7 @@ def tpcds_q9_case_bucket_fan(spark, sf_dir):
     nothing shuffles beyond partial-agg merges. Counts are exact, so the
     branch choice can never diverge across engines; averages are
     epsilon-shift rounded."""
-    return _sql(spark, sf_dir, _Q9_SQL)
+    return run_sql(spark, _Q9_SQL, sf_dir)
 
 
 # --- q13/q48: OR-of-ANDs selectivity bands over a 3-way join ----------------
@@ -2008,7 +2005,7 @@ def tpcds_q13_or_band_selectivity(spark, sf_dir):
     and keeps the join order despite the cross-table OR. Scale: joins
     key on orderkey/custkey as usual; the residual is evaluated
     streaming, no extra exchange."""
-    return _sql(spark, sf_dir, _Q13_SQL)
+    return run_sql(spark, _Q13_SQL, sf_dir)
 
 
 # --- q98: revenue share via windowed sum over an aggregate -------------------
@@ -2043,7 +2040,7 @@ def tpcds_q98_class_revenue_share(spark, sf_dir):
     only after the aggregate has collapsed the fact table to
     |class x brand| rows; cents-quantized doubles make the share stable
     to the 4dp round."""
-    return _sql(spark, sf_dir, _Q98_SQL)
+    return run_sql(spark, _Q98_SQL, sf_dir)
 
 
 # --- q44: best/worst rank self-join (two opposite-order rankings) -----------
@@ -2089,7 +2086,7 @@ def tpcds_q44_best_worst_rank_join(spark, sf_dir):
     size, not the fact), and the rank<=10 cut broadcasts one side. Ranks
     order by the 4dp-rounded average + a unique partkey tie-break, so
     rank values can never diverge across engines."""
-    return _sql(spark, sf_dir, _Q44_SQL)
+    return run_sql(spark, _Q44_SQL, sf_dir)
 
 
 # --- q65: aggregate-derived threshold joined at a finer grain ----------------
@@ -2127,7 +2124,7 @@ def tpcds_q65_below_average_items(spark, sf_dir):
     key. Scale: the store-level side is 10 rows (broadcast); the
     (store,item) grain bounds the join output; the membership cut is
     6dp-rounded on both engines."""
-    return _sql(spark, sf_dir, _Q65_SQL)
+    return run_sql(spark, _Q65_SQL, sf_dir)
 
 
 # --- q28: six-band scalar fan with a DISTINCT aggregate per band -------------
@@ -2181,7 +2178,7 @@ def tpcds_q28_distinct_band_fan(spark, sf_dir):
     is one row per side. Averages divide an
     exact DECIMAL sum of 2dp-quantized prices by the row count (never a
     double accumulation), rounded 4dp."""
-    return _sql(spark, sf_dir, _Q28_SQL)
+    return run_sql(spark, _Q28_SQL, sf_dir)
 
 
 # --- q30: return ratio vs 1.2x the coarser-group average, detail top-k -------
@@ -2224,7 +2221,7 @@ def tpcds_q30_above_state_avg_returns(spark, sf_dir):
     detail join is keyed on custkey. The 1.2x threshold carries the
     +1e-9 shift and a 6dp round so the strict > cut is identical on
     both engines; top-k is fully tie-broken by custkey."""
-    return _sql(spark, sf_dir, _Q30_SQL)
+    return run_sql(spark, _Q30_SQL, sf_dir)
 
 
 # --- q32: excess discount vs 1.3x the per-item average, same date window -----
@@ -2262,7 +2259,7 @@ def tpcds_q32_excess_discount(spark, sf_dir):
     keeps its brand IN-list and date range at the reader. Threshold is 6dp-rounded with the +1e-9 shift;
     the summed terms are 2dp-quantized into DECIMAL before accumulation;
     an empty survivor set reads 0.00 on both engines via coalesce."""
-    return _sql(spark, sf_dir, _Q32_SQL)
+    return run_sql(spark, _Q32_SQL, sf_dir)
 
 
 # --- q70: window-derived dimension selection feeding a ROLLUP ----------------
@@ -2379,11 +2376,11 @@ def tpcds_q70_ranked_states_rollup(spark, sf_dir):
     |nation| rows before the window (25 rows — the window sort is
     dimension-bounded); top_nations broadcasts into the detail join; the
     rollup is one Expand over the filtered detail. Rollup NULL keys are
-    coalesced to -1 sentinels; both ranks carry unique tie-breaks.
+    coalesced to -1 placeholders; both ranks carry unique tie-breaks.
     The oracle keeps the two-scan text; the engine rolls up over the
     nation-grain DECIMAL aggregate instead (_Q70_ENGINE_SQL — one fact
     scan, Expand over <=15 aggregate rows; see the equivalence note)."""
-    return _sql(spark, sf_dir, _Q70_ENGINE_SQL)
+    return run_sql(spark, _Q70_ENGINE_SQL, sf_dir)
 
 
 # --- q41: dimension-only self-correlated COUNT with OR-of-AND bands ----------
@@ -2417,7 +2414,7 @@ def tpcds_q41_dimension_self_count(spark, sf_dir):
     sides are the dimension; the partkey band prunes the outer scan at
     the reader. DISTINCT names make the ORDER BY unique, so the top-100
     cut is deterministic."""
-    return _sql(spark, sf_dir, _Q41_SQL)
+    return run_sql(spark, _Q41_SQL, sf_dir)
 
 
 # --- q38: INTERSECT-chain twin of q87's EXCEPT chain -------------------------
@@ -2461,7 +2458,7 @@ def tpcds_q38_channel_intersect_chain(spark, sf_dir):
     (ReplaceIntersectWithSemiJoin) where q87 stacks ANTI joins — the
     lowering pair is what the twin pins. Scale: identical to q87 — all
     three DISTINCT sets and both semi joins share the custkey hash."""
-    return _sql(spark, sf_dir, _Q38_SQL)
+    return run_sql(spark, _Q38_SQL, sf_dir)
 
 
 # --- q94: web twin of q16 (EXISTS correlated on a DIFFERENT key) -------------
@@ -2497,7 +2494,7 @@ def tpcds_q94_repeat_buyers_no_returns(spark, sf_dir):
     orderkey hash across both. Scale: the custkey-keyed EXISTS side
     aggregates the date-windowed slice to customer grain before the
     join; the distinct readout is custkey-keyed partial aggregation."""
-    return _sql(spark, sf_dir, _Q94_SQL)
+    return run_sql(spark, _Q94_SQL, sf_dir)
 
 
 # --- q57: q47's deviation machinery re-keyed to the supplier dimension -------
@@ -2544,7 +2541,7 @@ def tpcds_q57_supplier_sales_deviation(spark, sf_dir):
     pins that the (dimension, yr)-keyed window exchange is reused across
     both window functions regardless of WHICH dimension feeds it. Scale:
     identical to q47 — one keyed exchange, dimension-grain windows."""
-    return _sql(spark, sf_dir, _Q57_SQL)
+    return run_sql(spark, _Q57_SQL, sf_dir)
 
 
 # --- q62: q99's lag bands re-keyed (web twin) --------------------------------
@@ -2584,4 +2581,4 @@ def tpcds_q62_web_ship_lag_bands(spark, sf_dir):
     pair pins that the CASE-band conditional aggregation is insensitive
     to the grouping key's cardinality or type. Scale: identical to q99
     — one orderkey join, one small grouped aggregate."""
-    return _sql(spark, sf_dir, _Q62_SPARK)
+    return run_sql(spark, _Q62_SPARK, sf_dir)

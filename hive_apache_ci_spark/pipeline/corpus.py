@@ -1932,7 +1932,7 @@ def doc_chunk_sentences(spark, sf_dir):
     """Sentence-aware RAG chunking (the retrieval-prep twin of
     doc_chunk_sliding's fixed token windows): sentences never split
     mid-way — the text is split on sentence boundaries ([.!?] + space via
-    a backreference rewrite to a \\x01 sentinel, no lookbehind so the
+    a backreference rewrite to a \\x01 marker, no lookbehind so the
     same regex family works on RE2-based engines), then sentences pack
     into ~{B}-token chunks by the running-token-count rule chunk =
     floor((cumsum - toks) / budget) — deterministic, order-preserving,

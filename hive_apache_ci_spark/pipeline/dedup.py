@@ -692,12 +692,12 @@ def _pagerank_oracle() -> str:
     pairs AS (
       SELECT va, vb FROM cand WHERE round({_cos_sql('ea', 'eb')} + 1e-9, 6) > {_COS_DEDUP_TH}
     ),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT va AS s, vb AS d FROM pairs
       UNION ALL
       SELECT vb AS s, va AS d FROM pairs
     ),
-    deg AS (SELECT s, count(*) AS outdeg FROM edges GROUP BY s),
+    deg AS MATERIALIZED (SELECT s, count(*) AS outdeg FROM edges GROUP BY s),
     nv AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM embeddings),
     r0 AS (
       SELECT vec_id, 1.0 / (SELECT n FROM nv) AS rank FROM embeddings
@@ -712,7 +712,7 @@ def _pagerank_oracle() -> str:
       FROM {prev} r LEFT JOIN deg ON r.vec_id = deg.s
       WHERE deg.s IS NULL
     ),
-    r{i} AS (
+    r{i} AS MATERIALIZED (
       SELECT e.vec_id,
              {(1 - _PR_DAMP)!r} / (SELECT n FROM nv)
              + {_PR_DAMP!r} * (coalesce(c.in_rank, 0.0)
@@ -833,7 +833,7 @@ def _lpa_chain_sql() -> str:
     pairs AS (
       SELECT va, vb FROM cand WHERE round({_cos_sql('ea', 'eb')} + 1e-9, 6) > {_COS_DEDUP_TH}
     ),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT va AS s, vb AS d FROM pairs
       UNION ALL
       SELECT vb AS s, va AS d FROM pairs
@@ -856,7 +856,7 @@ def _lpa_chain_sql() -> str:
         FROM c{i}
       ) WHERE rn = 1
     ),
-    l{i} AS (
+    l{i} AS MATERIALIZED (
       SELECT p.vec_id, coalesce(m.label, p.label) AS label
       FROM l{i-1} p LEFT JOIN m{i} m ON p.vec_id = m.vec_id
     )"""
@@ -1544,7 +1544,7 @@ def _kcore_oracle() -> str:
       SELECT va, vb FROM cand
       WHERE round({_cos_sql('ea', 'eb')} + 1e-9, 6) > {_COS_DEDUP_TH}
     ),
-    e0 AS (
+    e0 AS MATERIALIZED (
       SELECT va AS s, vb AS d FROM confirmed
       UNION ALL SELECT vb, va FROM confirmed
     )"""
@@ -1552,11 +1552,11 @@ def _kcore_oracle() -> str:
     for i in range(1, _KCORE_ROUNDS + 1):
         parts.append(
             f""",
-    v{i} AS (
+    v{i} AS MATERIALIZED (
       SELECT s AS v FROM e{i-1} GROUP BY s
       HAVING count(*) >= {_KCORE_K}
     ),
-    e{i} AS (
+    e{i} AS MATERIALIZED (
       SELECT e.s, e.d FROM e{i-1} e
       JOIN v{i} x ON e.s = x.v
       JOIN v{i} y ON e.d = y.v
@@ -2603,7 +2603,7 @@ def _modularity_oracle() -> str:
     return (
         _lpa_chain_sql()
         + f""",
-    final AS (SELECT vec_id, label AS community FROM l{_LPA_ITERS}),
+    final AS MATERIALIZED (SELECT vec_id, label AS community FROM l{_LPA_ITERS}),
     deg AS (SELECT s AS vec_id, count(*) AS degree FROM edges GROUP BY s),
     memb AS (
       SELECT f.vec_id, f.community, coalesce(d.degree, 0) AS degree

@@ -132,21 +132,26 @@ _RULES: tuple[tuple[re.Pattern[str], str], ...] = (
     (re.compile(r"RDD\[\d+\]"), "RDD[NL]"),
     # ... and an environment-dependent Java callsite (renders as
     # `NativeMethodAccessorImpl.java:0` under some JVMs, `<unknown>:0`
-    # under others) — r13, normalize the whole callsite token
-    (re.compile(r"localCheckpoint at [^,]+"), "localCheckpoint at <SITE>"),
+    # under others); normalize the whole callsite token, which may end its line
+    (re.compile(r"localCheckpoint at [^,\n]+"), "localCheckpoint at <SITE>"),
 )
 
 
 def normalized_plan(df) -> str:
     """Formatted physical explain with run-varying tokens normalized."""
-    raw = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+    return normalize_plan_text(
+        df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
     )
-    out = raw
+
+
+def normalize_plan_text(text: str) -> str:
+    """Apply the run-varying-token rules to explain text."""
     for pat, repl in _RULES:
-        out = pat.sub(repl, out)
+        text = pat.sub(repl, text)
     # strip trailing whitespace per line; drop trailing blank lines
-    lines = [ln.rstrip() for ln in out.splitlines()]
+    lines = [ln.rstrip() for ln in text.splitlines()]
     while lines and not lines[-1]:
         lines.pop()
     return "\n".join(lines) + "\n"

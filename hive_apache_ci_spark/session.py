@@ -99,7 +99,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     session's lifetime — ``id(spark)`` would be fooled by a recycled Python
     object address) — each conf.set is a py4j round-trip, and the catalog
     calls this on every table load. The short-circuit re-verifies ONE
-    sentinel conf first: sibling sessions of the same application (e.g.
+    probe conf first: sibling sessions of the same application (e.g.
     ``spark.newSession()``) share the applicationId but carry their own
     SQLConf, so the cache alone would silently skip them.
     """
@@ -109,10 +109,10 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         key_id = None
     if key_id is not None and key_id in _CONFS_APPLIED:
         try:
-            sentinel = spark.conf.get("spark.sql.session.timeZone", None)
+            probe = spark.conf.get("spark.sql.session.timeZone", None)
         except Exception:
-            sentinel = None
-        if sentinel == RUNTIME_CONFS["spark.sql.session.timeZone"]:
+            probe = None
+        if probe == RUNTIME_CONFS["spark.sql.session.timeZone"]:
             return spark
     for key, value in RUNTIME_CONFS.items():
         try:

@@ -1,13 +1,15 @@
 #!/usr/bin/env python
-"""Paired-measurement helper for optimization rounds: times named queries
-with the exact bench.py methodology (cold run + best-of-N warm reps of
-``fn(spark, sf_dir).collect()``) in one session and prints one JSON line.
+"""Ad-hoc paired timing: times named queries with bench.py's own loop
+(``bench._measure``: one cold run, then best-of-N warm reps of
+``fn(spark, sf_dir).collect()``) in one session and prints one JSON line
+with each query's best/median/worst warm time (``null`` if it failed).
 
 Usage:
-    python scripts/time_queries.py [--reps 3] [--sf-dir DIR] name [name...]
+    python scripts/time_queries.py [--sf-dir DIR] name [name...]
 
-This is a measurement tool, not the graded bench — bench.py remains the
-only artifact the driver consumes.
+This is a measurement tool, not the graded bench — bench.py's last line
+is the only graded output. For a per-layer breakdown use
+``perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -16,7 +18,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -26,38 +27,20 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
+    import bench
     from hive_apache_ci_spark import registry
     from hive_apache_ci_spark.session import get_spark
 
-    queries = registry.all_queries()
-    spark = get_spark("time_queries")
-    out: dict[str, dict[str, float] | None] = {}
-    for name in args.names:
-        fn = queries[name]
-        try:
-            spark.sparkContext.setJobDescription(f"time:{name}:cold")
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).collect()
-            cold = time.perf_counter() - t0
-            times = []
-            for i in range(args.reps):
-                spark.sparkContext.setJobDescription(f"time:{name}:warm{i}")
-                t0 = time.perf_counter()
-                fn(spark, args.sf_dir).collect()
-                times.append(time.perf_counter() - t0)
-            out[name] = {
-                "cold": round(cold, 4),
-                "best": round(min(times), 4),
-                "median": round(sorted(times)[len(times) // 2], 4),
-            }
-        except Exception as exc:  # noqa: BLE001 — report and continue
-            print(f"{name} FAILED: {exc}", file=sys.stderr)
-            out[name] = None
-    print(json.dumps({"sf_dir": args.sf_dir, "reps": args.reps, "q": out}))
+    timings: dict[str, float | None] = {}
+    spread: dict[str, dict[str, float]] = {}
+    bench._measure(
+        get_spark("time_queries"), args.sf_dir, registry.all_queries(),
+        args.names, timings, spread,
+    )
+    print(json.dumps({"sf_dir": args.sf_dir, "q": {n: spread.get(n) for n in args.names}}))
     return 0
 
 

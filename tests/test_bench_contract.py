@@ -1,10 +1,10 @@
-"""bench.py driver-contract tests (round-6, VERDICT r05 item #1).
+"""bench.py grade-line contract tests.
 
-Round 5's grade came back `parsed: null`: the one-line JSON payload outgrew
-the driver's fixed-size stdout tail capture. The contract is now explicit —
-the LAST stdout line is a compact JSON grade under 2 KB; everything bulky
-(spread, regression detail) lives in the docs/BENCH_LAST.json sidecar.
-These tests pin that contract without paying for a real bench run.
+The LAST stdout line is a compact JSON grade under 2 KB (a fixed-size tail
+capture must never truncate it); everything bulky (spread, regression
+detail, the host-keyed bests) lives in the docs/BENCH_LAST.json sidecar.
+A run is judged only against its own host's bests. These tests pin that
+contract without paying for a real bench run.
 """
 
 from __future__ import annotations
@@ -68,8 +68,8 @@ def test_bench_names_are_registered():
 
 
 def test_sidecar_is_committed_and_loadable():
-    # the sidecar doubles as the next round's regression baseline — it must
-    # exist in the repo and carry per-query bests
+    # the sidecar doubles as the next run's regression baseline — it must
+    # exist in the repo and carry per-host, per-query bests
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "docs",
@@ -77,36 +77,36 @@ def test_sidecar_is_committed_and_loadable():
     )
     with open(path) as fh:
         prev = json.load(fh)
-    assert prev["queries"], "sidecar lost its per-query bests"
+    assert prev["queries"], "sidecar lost its per-query timings"
     assert all(v is None or v > 0 for v in prev["queries"].values())
+    # bests are keyed by host; the run on record names its own host
+    assert prev["host"] in prev["best"]
+    for best in prev["best"].values():
+        assert best and all(v > 0 for v in best.values())
 
 
 def test_regression_baseline_is_running_minimum(tmp_path, monkeypatch):
-    """A slow run must not clobber the committed bests (the review-caught
-    contract gap: a persistent regression would be reported once and then
-    silently pass), and a crashed query must not erase its best."""
-    import json
-
+    """A slow run must not clobber the committed bests (a persistent
+    regression would be reported once and then silently pass), and a
+    crashed query must not erase its best."""
     side = tmp_path / "BENCH_LAST.json"
     monkeypatch.setattr(bench, "_SIDECAR", str(side))
     side.write_text(
-        json.dumps({"sf": 0.1, "queries": {"a": 9.9}, "best": {"a": 1.0, "b": 2.0}})
+        json.dumps({"sf": 0.1, "queries": {"a": 9.9}, "best": {"h": {"a": 1.0, "b": 2.0}}})
     )
-    prev = bench._load_prev_best(0.1)
-    assert prev == {"a": 1.0, "b": 2.0}  # `best` wins over `queries`
-    # simulate the merge rule from main(): slow run + crash
-    timings = {"a": 3.0, "b": None, "c": 0.5}
-    best = dict(prev)
-    for k, v in timings.items():
-        if v is not None:
-            best[k] = min(v, best[k]) if k in best else v
-    assert best == {"a": 1.0, "b": 2.0, "c": 0.5}
+    bests = bench._load_bests(0.1)
+    assert bests == {"h": {"a": 1.0, "b": 2.0}}  # `best`, not `queries`
+    # a sidecar whose `sf` disagrees with its file name is never compared
+    (tmp_path / "BENCH_LAST_sf0.01.json").write_text(side.read_text())
+    assert bench._load_bests(0.01) == {}
+    _, _, merged = bench.judge(bests, "h", {"a": 3.0, "b": None, "c": 0.5})
+    assert merged == {"h": {"a": 1.0, "b": 2.0, "c": 0.5}}
 
 
 def test_compact_line_carries_converged_story_and_still_fits():
-    """Round-7 (r6 verdict #2): the grade line must carry noisy/best_total
-    so the driver's artifact references converged numbers even on a loaded
-    box — and adding them must not break the 2 KB tail contract."""
+    """The grade line carries noisy/best_total so the graded artifact
+    references converged numbers even on a loaded box — and adding them
+    must not break the 2 KB tail contract."""
     timings = _fake_timings(30)
     line = bench.compact_line(370.37, timings, 0.1, False, [], True, 1.519)
     assert len(line) < 2048, len(line)
@@ -126,8 +126,8 @@ def test_trio_total_requires_all_three():
 
 
 def test_measure_merges_running_minima():
-    """The auto-rerun merges via minima — a rerun can only improve a
-    number, never clobber a faster first pass."""
+    """_measure merges via minima — measuring a name again can only
+    improve its number, never clobber a faster first pass."""
 
     class _FakeDF:
         def __init__(self, delay):
@@ -145,13 +145,13 @@ def test_measure_merges_running_minima():
     timings = {"q": 0.0}  # pre-existing unbeatable result
     spread = {"q": {"best": 0.0, "median": 0.0, "worst": 0.0}}
     bench._measure(None, "x", {"q": fake_query}, ("q",), timings, spread)
-    assert timings["q"] == 0.0  # rerun (slower) did not clobber
+    assert timings["q"] == 0.0  # second pass (slower) did not clobber
     assert spread["q"]["best"] == 0.0
     assert calls["n"] >= 2  # cold + warm reps actually ran
 
 
 def test_parity_only_excluded_from_perf_surfaces():
-    """The registry's parity_only flag (r10): the two deliberate
+    """The registry's parity_only flag: the two deliberate
     global-window parity shapes stay in the CORRECTNESS surface but must
     never appear in a performance list — bench headliners or the canary's
     heavy set — and each must have its scaled twin registered."""
@@ -170,37 +170,105 @@ def test_parity_only_excluded_from_perf_surfaces():
         assert twin in qs and twin not in parity
 
 
-def test_sentinel_normalizer_contract(tmp_path, monkeypatch):
-    """r11: the sentinel is the ONE comparator normalizer. Pin the math
-    without a Spark session: ratio = mean(start, end)/best, floor 1.0;
-    sentinel best is a running minimum; a missing historical best (first
-    run) yields ratio vs this run's own min (>= 1.0, ~1.0)."""
-    monkeypatch.setattr(bench, "_SIDECAR", str(tmp_path / "BENCH_LAST.json"))
-    # first run: no sidecar -> no sentinel best
-    assert bench._load_sentinel_best(0.1) == {}
-    # bests are PER PHASE (start is JIT-cold, end warm — r11 run-1 measured
-    # spark_s 0.159 vs 0.044; pooling would read a permanent fake drift)
-    best = {
-        "start": {"cpu_s": 0.04, "spark_s": 0.16},
-        "end": {"cpu_s": 0.04, "spark_s": 0.045},
-    }
-    with open(bench._sidecar_path(0.1), "w") as fh:
-        json.dump({"sf": 0.1, "sentinel": {"best": best}}, fh)
-    assert bench._load_sentinel_best(0.1) == best
-    # a slow-box run (1.5x sentinel) scales the comparator: a query at
-    # 1.4x its best does NOT flag normalized but DOES flag raw
-    prev_best = {"q": 1.0}
-    timings = {"q": 1.4}
-    ratio = 1.5
-    scaled = {k: v * ratio for k, v in prev_best.items()}
-    assert bench.find_regressions(scaled, timings) == []
-    raw = bench.find_regressions(prev_best, timings)
-    assert [r["q"] for r in raw] == ["q"]
+# --- host keying ----------------------------------------------------------
+
+_GRADE_KEYS = {
+    "metric", "value", "unit", "queries", "sf", "contended",
+    "regressions", "noisy", "box_drift", "best_total",
+}
 
 
-def test_sentinel_probe_shape_and_workload_pins():
-    """The probe's workload constants are frozen (changing them silently
-    invalidates committed sentinel bests)."""
-    assert bench._SENT_CPU_BYTES == 1 << 20
-    assert bench._SENT_CPU_REPS == 48
-    assert bench._SENT_SPARK_ROWS == 4_000_000
+class _Clock:
+    """Stands in for the `time` module: the fake queries advance it."""
+
+    now = 0.0
+
+    def perf_counter(self):
+        return self.now
+
+
+def _run_bench(monkeypatch, capsys, side, host, cost):
+    """One bench.main() on a fake session, writing sidecar `side`: every
+    query's collect() takes cost(name) seconds on a fake clock. Returns the
+    parsed grade line, its raw text and the sidecar."""
+    import hive_apache_ci_spark.registry as registry
+    import hive_apache_ci_spark.session as session
+
+    clock = _Clock()
+
+    class _DF:
+        def __init__(self, name):
+            self.name = name
+
+        def collect(self):
+            clock.now += cost(self.name)
+
+    class _Queries(dict):
+        def __missing__(self, name):
+            return lambda spark, sf_dir: _DF(name)
+
+    class _Spark:
+        class sparkContext:  # noqa: N801 — mirrors SparkSession's attribute
+            @staticmethod
+            def setLogLevel(level):
+                pass
+
+    monkeypatch.setattr(registry, "all_queries", _Queries)
+    monkeypatch.setattr(session, "get_spark", lambda name: _Spark())
+    monkeypatch.setattr(bench, "time", clock)
+    monkeypatch.setattr(bench, "host_key", lambda: host)
+    monkeypatch.setattr(bench, "foreign_jvms", lambda: 0)
+    monkeypatch.setattr(bench, "_SIDECAR", str(side))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
+    assert bench.main() == 0
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    return json.loads(line), line, json.loads(side.read_text())
+
+
+def test_first_run_on_new_host_seeds_bests_and_flags_nothing(
+    tmp_path, monkeypatch, capsys
+):
+    side = tmp_path / "BENCH_LAST.json"
+    # a much faster machine's bests are on file
+    fast = {n: 0.001 for n in (*bench.BASELINE_COMPARABLE, *bench.EXTRA_HEADLINERS)}
+    side.write_text(json.dumps({"sf": 0.1, "best": {"big box": fast}}))
+    grade, _, sidecar = _run_bench(monkeypatch, capsys, side, "this box", lambda n: 1.0)
+    assert grade["regressions"] == [] and grade["noisy"] is False
+    assert grade["best_total"] == 3.0
+    assert sidecar["host"] == "this box"
+    assert sidecar["best"]["this box"] == sidecar["queries"]
+    assert sidecar["best"]["big box"] == fast  # kept, never matched
+
+
+def test_same_host_query_over_band_is_listed(tmp_path, monkeypatch, capsys):
+    side = tmp_path / "BENCH_LAST.json"
+    _run_bench(monkeypatch, capsys, side, "h", lambda n: 1.0)
+    slower = {"kmeans_lloyd": 1.2, "tpcds_q5_channel_rollup": 1.1}
+    grade, _, sidecar = _run_bench(
+        monkeypatch, capsys, side, "h", lambda n: slower.get(n, 1.0)
+    )
+    assert grade["regressions"] == ["kmeans_lloyd"]  # 1.1x is inside the band
+    assert sidecar["best"]["h"]["kmeans_lloyd"] == 1.0  # running minimum
+    # the trio over band against this host's best_total reads as noisy
+    grade, _, _ = _run_bench(monkeypatch, capsys, side, "h", lambda n: 1.2)
+    assert grade["noisy"] is True and grade["best_total"] == 3.0
+
+
+def test_other_hosts_bests_are_never_compared():
+    bests = {"other": {"q": 0.1}, "h": {"q": 1.0}}
+    regs, noisy, merged = bench.judge(bests, "h", {"q": 1.1, "r": 0.5})
+    assert regs == [] and noisy is False  # 11x over "other", 1.1x over "h"
+    assert merged["other"] == {"q": 0.1}  # untouched by a run elsewhere
+    assert merged["h"] == {"q": 1.0, "r": 0.5}
+    regs, _, merged = bench.judge(bests, "new", {"q": 5.0})
+    assert regs == [] and merged["new"] == {"q": 5.0}
+
+
+def test_grade_line_keeps_ten_keys_under_2kb(tmp_path, monkeypatch, capsys):
+    grade, line, _ = _run_bench(
+        monkeypatch, capsys, tmp_path / "BENCH_LAST.json", "h", lambda n: 1.0
+    )
+    assert set(grade) == _GRADE_KEYS
+    assert len(line) < 2048, len(line)
+    assert grade["box_drift"] is None  # bests never cross machines
+    assert grade["contended"] is False

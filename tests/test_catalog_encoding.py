@@ -216,7 +216,7 @@ def test_queries_survive_empty_tables(spark, tmp_path):
 
 def test_sibling_session_gets_runtime_confs(spark):
     """spark.newSession() shares the applicationId but has its own SQLConf —
-    the apply_runtime_confs cache must not skip it (the sentinel-conf
+    the apply_runtime_confs cache must not skip it (the probe-conf
     re-check)."""
     from hive_apache_ci_spark.session import apply_runtime_confs
 

@@ -658,7 +658,7 @@ def test_writer_lease_heartbeat_after_takeover_raises(tmp_path):
 
 def test_escape_partition_value_null_and_empty():
     """r11 ADVICE: null/empty partition values key by Spark's
-    __HIVE_DEFAULT_PARTITION__ sentinel (ExternalCatalogUtils), so the
+    __HIVE_DEFAULT_PARTITION__ marker (ExternalCatalogUtils), so the
     manifest key written for them is reachable by lookup."""
     from hive_apache_ci_spark.operators.acid import escape_partition_value
 

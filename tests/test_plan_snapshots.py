@@ -14,7 +14,11 @@ import os
 
 import pytest
 
-from hive_apache_ci_spark.plan_snapshot import SNAPSHOT_QUERIES, normalized_plan
+from hive_apache_ci_spark.plan_snapshot import (
+    SNAPSHOT_QUERIES,
+    normalize_plan_text,
+    normalized_plan,
+)
 from hive_apache_ci_spark.registry import all_queries
 
 from .conftest import SF_DIR
@@ -76,4 +80,19 @@ def test_no_stale_snapshots():
     }
     assert files == set(SNAPSHOT_QUERIES), (
         files.symmetric_difference(SNAPSHOT_QUERIES)
+    )
+
+
+def test_checkpoint_callsite_rule_stops_at_line_end():
+    """A localCheckpoint callsite that ends its line is normalized without
+    swallowing the next line of the plan."""
+    raw = (
+        "(1) Scan ExistingRDD\n"
+        "Arguments: [a#1], MapPartitionsRDD[26] at localCheckpoint at <unknown>:0\n"
+        "(2) HashAggregate [codegen id : 1]\n"
+    )
+    assert normalize_plan_text(raw) == (
+        "(1) Scan ExistingRDD\n"
+        "Arguments: [a#N], MapPartitionsRDD[NL] at localCheckpoint at <SITE>\n"
+        "(2) HashAggregate [codegen id : 1]\n"
     )
