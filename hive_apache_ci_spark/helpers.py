@@ -63,6 +63,32 @@ def committed(path: str) -> str:
     return path
 
 
+def materialize(df: DataFrame, *scratch: str) -> DataFrame:
+    """The engine's one materialization barrier: store ``df``'s rows now,
+    cutting its lineage, then delete each ``scratch`` directory, which the
+    stored result no longer reads. Every barrier in the engine goes through
+    here, so the policy below is a one-function change.
+
+    The cut is ``localCheckpoint()``, which is eager and local:
+
+    - Eager: merely *constructing* a query DataFrame that has a barrier
+      (e.g. for plan snapshotting or ``explain``) runs the barrier's
+      sub-jobs and pins their rows in executor storage until the returned
+      DataFrame is garbage-collected. Nothing is cached across runs: every
+      invocation recomputes the barrier from its sources. Callers that only
+      want a plan should expect construction-time Spark jobs.
+    - Local: the rows live in executor block storage and do not survive
+      executor loss. On a cluster, a reliable ``checkpoint()`` to a
+      configured checkpoint directory is the fault-tolerant choice.
+
+    Scratch is deleted only after the rows are stored, so a caller may pass
+    the directory the barrier's input was read from."""
+    out = df.localCheckpoint()
+    for path in scratch:
+        shutil.rmtree(path, ignore_errors=True)
+    return out
+
+
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table (schema-on-read from parquet)."""
     return load_table(spark, sf_dir, name)

@@ -56,7 +56,7 @@ import uuid
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..helpers import T, committed, run_scratch
+from ..helpers import T, committed, materialize, run_scratch
 from ..registry import query
 
 _COLS = ["c_custkey", "c_name", "c_acctbal", "c_mktsegment"]
@@ -771,11 +771,7 @@ def acid_upsert_delete_merge(spark, sf_dir):
     relationally — a wrong op precedence, a delta applied out of order, or
     a tombstone leak all break the hash."""
     tbl = _build_demo_table(spark, sf_dir, "upsert_delete_merge")
-    out = tbl.read(spark).localCheckpoint()
-    import shutil
-
-    shutil.rmtree(tbl.root, ignore_errors=True)
-    return out
+    return materialize(tbl.read(spark), tbl.root)
 
 
 @query(
@@ -820,11 +816,7 @@ def acid_version_as_of(spark, sf_dir):
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)
-    res = res.localCheckpoint()
-    import shutil
-
-    shutil.rmtree(tbl.root, ignore_errors=True)
-    return res
+    return materialize(res, tbl.root)
 
 
 @query("acid_compaction_equivalence", oracle=_FINAL_STATE_SQL)
@@ -840,11 +832,7 @@ def acid_compaction_equivalence(spark, sf_dir):
     m = tbl.manifest()
     if m["deltas"] or m["version"] != v:
         raise AssertionError(f"compaction left a dirty manifest: {m}")
-    out = tbl.read(spark).localCheckpoint()
-    import shutil
-
-    shutil.rmtree(tbl.root, ignore_errors=True)
-    return out
+    return materialize(tbl.read(spark), tbl.root)
 
 
 # ---- Hive "streaming" parity: ACID micro-batch ingest ----------------------
@@ -955,11 +943,7 @@ def stream_acid_ingest_history(spark, sf_dir):
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)
-    res = res.localCheckpoint()
-    import shutil as _sh
-
-    _sh.rmtree(base, ignore_errors=True)
-    return res
+    return materialize(res, base)
 
 
 # ---- round 10: partitioned ACID + partition-scoped compaction --------------
@@ -1309,8 +1293,6 @@ def acid_partitioned_upsert(spark, sf_dir):
     In-query audit: a partition-pruned read of the clean FURNITURE
     partition must list ONLY files under its partition dir (metastore-
     style pruning by construction)."""
-    import shutil
-
     tbl = _build_partitioned_table(spark, sf_dir, "partitioned_upsert")
     pruned = tbl.read(spark, partition="FURNITURE")
     files = pruned.inputFiles()
@@ -1318,9 +1300,7 @@ def acid_partitioned_upsert(spark, sf_dir):
         raise AssertionError(
             f"partition-pruned read escaped its partition dir: {files[:3]}"
         )
-    out = tbl.read(spark).localCheckpoint()
-    shutil.rmtree(tbl.root, ignore_errors=True)
-    return out
+    return materialize(tbl.read(spark), tbl.root)
 
 
 @query(
@@ -1347,8 +1327,6 @@ def acid_partition_compaction(spark, sf_dir):
     in tests/test_plans.py). Emits per-partition (rows, exact-DECIMAL
     balance, was_compacted); the oracle recomputes state and re-derives
     the dirty set from the mutation rules."""
-    import shutil
-
     tbl = _build_partitioned_table(spark, sf_dir, "partition_compaction")
     m_before = tbl.manifest()
     compacted = tbl.compact(spark)
@@ -1380,10 +1358,8 @@ def acid_partition_compaction(spark, sf_dir):
         )
         .withColumn("was_compacted", F.col("c_mktsegment").isin(*dirty))
         .select("c_mktsegment", "n_rows", "total_bal", "was_compacted")
-        .localCheckpoint()
     )
-    shutil.rmtree(tbl.root, ignore_errors=True)
-    return out
+    return materialize(out, tbl.root)
 
 
 @query(
@@ -1423,8 +1399,6 @@ def acid_concurrent_writers(spark, sf_dir):
     A then B's re-derived retry, so a lost-update bug breaks the hash).
     B's failed first attempt leaves an orphan delta dir that no manifest
     references; vacuum must collect exactly that orphan (audited)."""
-    import shutil
-
     root = run_scratch("acid", sf_dir, "concurrent_writers")
     a, b = AcidTable(root), AcidTable(root)
     base = T(spark, sf_dir, "customer").select(
@@ -1476,9 +1450,7 @@ def acid_concurrent_writers(spark, sf_dir):
     deleted = a.vacuum(retain_versions=1)
     if len(deleted) != 1 or not deleted[0].startswith("delta_1_"):
         raise AssertionError(f"expected exactly B's orphan GC'd: {deleted}")
-    out = b.read(spark).localCheckpoint()
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+    return materialize(b.read(spark), root)
 
 
 @query(
@@ -1520,8 +1492,6 @@ def acid_lease_writers(spark, sf_dir):
     over OCC at 100 TB where a discarded retry is a partition-sized
     re-stage. Reference parity: lockmgr/DbTxnManager.class (SURVEY §1.1
     row 6)."""
-    import shutil
-
     root = run_scratch("acid", sf_dir, "lease_writers")
     a, b = AcidTable(root), AcidTable(root)
     base = T(spark, sf_dir, "customer").select(
@@ -1583,6 +1553,4 @@ def acid_lease_writers(spark, sf_dir):
     deleted = a.vacuum(retain_versions=3)
     if deleted:
         raise AssertionError(f"unexpected orphan data dirs: {deleted}")
-    out = b.read(spark).localCheckpoint()
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+    return materialize(b.read(spark), root)

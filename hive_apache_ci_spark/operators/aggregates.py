@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..helpers import T, r2, r4, ravg
+from ..helpers import T, materialize, r2, r4, ravg
 from ..registry import query
 
 
@@ -2162,16 +2162,13 @@ def agg_kmv_mergeable_sketch(spark, sf_dir):
     NDVs ride along per group so the sweep pins both the sketch and its
     ground truth.
 
-    r12 optimization: the hashed/sk CTEs are multiply referenced and
-    Spark re-instantiates each reference, re-scanning events; the engine
-    materializes once per invocation and runs the same algebra over the
-    materialized relation. r13 moves the cut ONE STAGE LATER (r12
-    VERDICT task 6's sibling fix): checkpointing `hashed` still re-ran
-    the rank window once per sk reference (per_group AND merged), so the
-    engine now checkpoints `sk` itself — the ≤|groups|·k-row post-window
-    sketch — and `hashed` collapses to a single-reference pipeline
-    (scan → distinct → window → checkpoint, one barrier instead of two,
-    one window pass instead of three). The one raw-events readout (exact
+    The sk CTE is multiply referenced (per_group AND merged) and Spark
+    re-instantiates each reference, so the engine materializes `sk` — the
+    ≤|groups|·k-row post-window sketch — once per invocation and runs the
+    same algebra over it; `hashed` stays a single-reference pipeline
+    (scan → distinct → window → barrier, one window pass). A barrier on
+    `hashed` instead would re-run the rank window once per sk reference.
+    The one raw-events readout (exact
     global count(DISTINCT user_id)) still scans events — it is not
     derivable from the hashed relation without assuming md5
     collision-freedom."""
@@ -2190,13 +2187,12 @@ def agg_kmv_mergeable_sketch(spark, sf_dir):
         .distinct()
     )
     w_grp = Window.partitionBy("grp")
-    sk = (
+    sk = materialize(
         hashed.withColumn(
             "rn", F.row_number().over(w_grp.orderBy("h")).cast("int")
         )
         .withColumn("n_grp", F.count(F.lit(1)).over(w_grp).cast("bigint"))
         .filter(F.col("rn") <= _KMV_K)
-        .localCheckpoint()
     )
     sk.createOrReplaceTempView("kmv_sk")
     engine_sql = _KMV_SQL.replace(
@@ -2299,20 +2295,16 @@ def agg_kmv_sketch_setops(spark, sf_dir):
     branch; at sf0.01+ the estimator branch is live — the sweep covers
     both paths.
 
-    r12 optimization (guide §2.4): Spark re-instantiates un-materialized
-    CTEs per reference, so the self-contained text scanned events 24
-    times (ha/hb/ska/skb/m each consumed 2-3x); r12 checkpointed the
-    distinct (grp, h) relation, which left 24 RDD re-scans of it plus a
-    stop-the-world materialization barrier — the one normalized
-    bench regression of the round (r12 VERDICT task 6).
-
-    r13 restructure: ONE groupBy(h) pass over events builds the per-hash
-    membership table (h, in_click, in_view) — checkpointed once — from
+    Spark re-instantiates un-materialized CTEs per reference (the
+    self-contained text would scan events 24 times: ha/hb/ska/skb/m are
+    each consumed 2-3x), so ONE groupBy(h) pass over events builds the
+    per-hash membership table (h, in_click, in_view) — materialized
+    once — from
     which EVERYTHING derives: the four exact stats are one aggregate
     over it (n_click = Σ in_click, exact_union = count, exact_inter =
     Σ both — the same hash-set counts the oracle's UNION/INTERSECT
     compute), and each sketch is a 32-row TakeOrdered over a filter,
-    checkpointed so the ≤32-row set-op algebra (m/mstats/uest/rho —
+    materialized so the ≤32-row set-op algebra (m/mstats/uest/rho —
     textually unchanged from the oracle) never re-instantiates anything
     bigger. Values are bit-identical: same hash sets in, same integer
     counts, same dyadic-fraction arithmetic out. All materializations
@@ -2321,7 +2313,7 @@ def agg_kmv_sketch_setops(spark, sf_dir):
     from ..helpers import T
 
     load_tables(spark, sf_dir, register=True)
-    ghx = (
+    ghx = materialize(
         T(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("click", "view"))
         .groupBy(F.md5(F.col("user_id").cast("string")).alias("h"))
@@ -2329,7 +2321,6 @@ def agg_kmv_sketch_setops(spark, sf_dir):
             F.max(F.col("event_type") == "click").alias("a"),
             F.max(F.col("event_type") == "view").alias("b"),
         )
-        .localCheckpoint()
     )
     stats = ghx.agg(
         F.sum(F.col("a").cast("int")).cast("bigint").alias("n_click"),
@@ -2340,12 +2331,8 @@ def agg_kmv_sketch_setops(spark, sf_dir):
         .alias("exact_inter"),
     )
     stats.createOrReplaceTempView("kmv_stats")
-    ska = (
-        ghx.filter("a").select("h").orderBy("h").limit(_KMV_K).localCheckpoint()
-    )
-    skb = (
-        ghx.filter("b").select("h").orderBy("h").limit(_KMV_K).localCheckpoint()
-    )
+    ska = materialize(ghx.filter("a").select("h").orderBy("h").limit(_KMV_K))
+    skb = materialize(ghx.filter("b").select("h").orderBy("h").limit(_KMV_K))
     ska.createOrReplaceTempView("kmv_ska")
     skb.createOrReplaceTempView("kmv_skb")
     engine_sql = _KMV_SETOPS_SQL.replace(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..helpers import T, money_sum, r2, ravg
+from ..helpers import T, materialize, money_sum, r2, ravg
 from ..registry import query
 
 
@@ -529,7 +529,7 @@ def _value_range_shards(df, value_col, n_shards=16, descending=False):
     percentile_approx value-range shard assignment. The 'shard' column is
     monotone in the requested sort direction (ascending: count boundaries
     at-or-below; descending: count boundaries above), and the split choice
-    never affects results — any deterministic split works. localCheckpoint
+    never affects results — any deterministic split works. materialize
     pins ONE evaluation of the approximate boundaries so the downstream
     branches (per-shard windows AND prefix offsets) can never see two
     different assignments for a boundary-adjacent row."""
@@ -544,11 +544,10 @@ def _value_range_shards(df, value_col, n_shards=16, descending=False):
         F.lit(0),
         lambda acc, b: acc + F.when(hit(b), 1).otherwise(0),
     )
-    return (
+    return materialize(
         df.crossJoin(F.broadcast(bnd))
         .withColumn("shard", shard)
         .drop("bs")
-        .localCheckpoint()
     )
 
 
@@ -594,13 +593,15 @@ def window_rfm_scaled(spark, sf_dir):
     oracle). Cost: three passes over the customer-sized aggregate, each a
     broadcast-boundaries + per-shard window + two tiny aggregates."""
     o = T(spark, sf_dir, "orders")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.max(
-            F.col("o_orderdate").cast("timestamp").cast("long")
-        ).alias("last_order_s"),
-        F.count(F.lit(1)).alias("frequency"),
-        F.round(F.sum("o_totalprice"), 2).alias("monetary"),
-    ).localCheckpoint()
+    per_cust = materialize(
+        o.groupBy("o_custkey").agg(
+            F.max(
+                F.col("o_orderdate").cast("timestamp").cast("long")
+            ).alias("last_order_s"),
+            F.count(F.lit(1)).alias("frequency"),
+            F.round(F.sum("o_totalprice"), 2).alias("monetary"),
+        )
+    )
     r = _scaled_ntile_score(per_cust, "last_order_s", "o_custkey").select(
         "o_custkey", F.col("score").alias("r_score")
     )

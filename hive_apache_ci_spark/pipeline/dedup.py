@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.hive_compat import ngram_array
-from ..helpers import T, spread
+from ..helpers import T, materialize, spread
 from ..registry import query
 
 N_HASHES = 16
@@ -594,8 +594,8 @@ def cc_fixpoint(labels, edges, max_rounds: int = 30):
     label sum is strictly monotone until the fixed point — one scalar agg
     per round replaces a join+filter+count change detector (half the
     per-round driver actions; ids < 2^31 keep the bigint sum safe).
-    Both inputs must arrive localCheckpoint'ed; each round's labels are
-    re-checkpointed (persist alone leaves the logical plan nesting every
+    Both inputs must arrive materialized; each round's labels are
+    re-materialized (persist alone leaves the logical plan nesting every
     prior round's joins — by ~10 rounds plan compilation itself OOMs)."""
     prev_sum = None
     rounds = 0
@@ -616,13 +616,12 @@ def cc_fixpoint(labels, edges, max_rounds: int = 30):
         ptr = hop.select(
             F.col("vec_id").alias("p"), F.col("label").alias("plabel")
         )
-        new_labels = (
+        new_labels = materialize(
             hop.join(ptr, hop["label"] == ptr["p"], "left")
             .select(
                 "vec_id",
                 F.least("label", F.coalesce("plabel", "label")).alias("label"),
             )
-            .localCheckpoint()
         )
         cur_sum = new_labels.agg(F.sum("label")).first()[0]
         labels = new_labels
@@ -643,21 +642,20 @@ def dedup_connected_components(spark, sf_dir):
     Spark side: iterative min-label propagation (the Pregel/GraphX
     ``connectedComponents`` algorithm as DataFrame joins) to a fixed point —
     per round ONE shuffle keyed by vertex; the driver only reads the
-    converged-yet? count. Each round's labels are ``localCheckpoint``ed:
-    persist() alone leaves the *logical plan* growing (every round nests
-    the previous round's joins), and by ~10 rounds plan
-    compilation/rendering itself OOMs — checkpointing truncates lineage to
-    the materialized result, the standard fix for iterative DataFrame
-    algorithms (on a cluster use ``checkpoint()`` to HDFS for fault
-    tolerance). Oracle: DuckDB recursive CTE computing min reachable id —
-    an independent transitive-closure implementation."""
+    converged-yet? count. Each round's labels are materialized: persist()
+    alone leaves the *logical plan* growing (every round nests the
+    previous round's joins), and by ~10 rounds plan compilation/rendering
+    itself OOMs — cutting the lineage to the stored result is the standard
+    fix for iterative DataFrame algorithms. Oracle: DuckDB recursive CTE
+    computing min reachable id — an independent transitive-closure
+    implementation."""
     e = T(spark, sf_dir, "embeddings")
     pairs = _confirmed_cosine_pairs(spark, sf_dir)
     edges = pairs.select(
         F.col("va").alias("s"), F.col("vb").alias("d")
     ).unionByName(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-    edges = edges.localCheckpoint()
-    labels = e.select("vec_id", F.col("vec_id").alias("label")).localCheckpoint()
+    edges = materialize(edges)
+    labels = materialize(e.select("vec_id", F.col("vec_id").alias("label")))
     labels, _rounds = cc_fixpoint(labels, edges)
     return labels.select(
         "vec_id",
@@ -745,7 +743,7 @@ def pagerank_similarity_graph(spark, sf_dir):
     crawl pipelines attach to documents (CommonCrawl host ranks). Isolated
     vertices hold the teleport mass; each iteration is ONE shuffle keyed by
     destination vertex plus a broadcast of the scalar N;
-    ``localCheckpoint`` truncates the per-round lineage exactly as in
+    ``materialize`` truncates the per-round lineage exactly as in
     `dedup_connected_components`.
 
     Fully oracled (round 3): DuckDB replays the identical {_PR_ITERS}
@@ -763,13 +761,12 @@ def pagerank_similarity_graph(spark, sf_dir):
             "vec_id", (F.col("vec_id") * 0.0).alias("rank_permille")
         )
     pairs = _confirmed_cosine_pairs(spark, sf_dir)
-    edges = (
+    edges = materialize(
         pairs.select(F.col("va").alias("s"), F.col("vb").alias("d"))
         .unionByName(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-        .localCheckpoint()
     )
-    deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")).localCheckpoint()
-    ranks = e.select("vec_id", F.lit(1.0 / n).alias("rank")).localCheckpoint()
+    deg = materialize(edges.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")))
+    ranks = materialize(e.select("vec_id", F.lit(1.0 / n).alias("rank")))
     for _ in range(_PR_ITERS):
         # dangling (no-outlink) vertices redistribute their mass uniformly —
         # without this the total rank leaks every iteration (the graph is
@@ -790,7 +787,7 @@ def pagerank_similarity_graph(spark, sf_dir):
             .groupBy("vec_id")
             .agg(F.sum("c").alias("in_rank"))
         )
-        ranks = (
+        ranks = materialize(
             e.select("vec_id")
             .join(contrib, "vec_id", "left")
             .select(
@@ -801,7 +798,6 @@ def pagerank_similarity_graph(spark, sf_dir):
                     * (F.coalesce("in_rank", F.lit(0.0)) + F.lit(dangling / n))
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks.select(
         "vec_id", F.round(F.col("rank") * 1000 + 1e-12, 9).alias("rank_permille")
@@ -886,7 +882,7 @@ def graph_label_propagation(spark, sf_dir):
 
     100 TB shape: per iteration one shuffle keyed by destination vertex
     (the neighbor-label count) + one window argmax partitioned by vertex —
-    both partition by high-cardinality vec_id; ``localCheckpoint`` bounds
+    both partition by high-cardinality vec_id; ``materialize`` bounds
     lineage per round exactly as in connected components. LPA's cost is
     O(edges) per iteration with no global state, which is why it's the
     standard billion-node community algorithm (GraphX/GraphFrames ship the
@@ -904,10 +900,9 @@ def _lpa_labels(spark, sf_dir):
 
     e = T(spark, sf_dir, "embeddings")
     pairs = _confirmed_cosine_pairs(spark, sf_dir)
-    edges = (
+    edges = materialize(
         pairs.select(F.col("va").alias("s"), F.col("vb").alias("d"))
         .unionByName(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-        .localCheckpoint()
     )
     labels = e.select("vec_id", F.col("vec_id").alias("label"))
     for _ in range(_LPA_ITERS):
@@ -922,12 +917,11 @@ def _lpa_labels(spark, sf_dir):
             .where(F.col("rn") == 1)
             .select("nid", F.col("label").alias("new_label"))
         )
-        labels = (
+        labels = materialize(
             labels.join(mode, labels["vec_id"] == mode["nid"], "left")
             .select(
                 "vec_id", F.coalesce("new_label", "label").alias("label")
             )
-            .localCheckpoint()
         )
     return labels, edges
 
@@ -1411,9 +1405,9 @@ def graph_triangle_count(spark, sf_dir):
     the standard degree-ordering so high-degree vertices are always the
     closing side."""
     pairs = _confirmed_cosine_pairs(spark, sf_dir, th=_TRI_TH)
-    ed = pairs.select(
-        F.col("vb").alias("lo"), F.col("va").alias("hi")
-    ).localCheckpoint()
+    ed = materialize(
+        pairs.select(F.col("vb").alias("lo"), F.col("va").alias("hi"))
+    )
     e1, e2, e3 = ed.alias("e1"), ed.alias("e2"), ed.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.hi") == F.col("e2.lo"))
@@ -1491,8 +1485,8 @@ def graph_node_jaccard(spark, sf_dir):
     shared neighbor (sym.d) — the same degree-bounded topology as
     graph_triangle_count, never an all-pairs comparison; degrees are a
     single groupBy. The edge list is LSH-bucket-generated and
-    localCheckpoint-ed once, then reused by all three joins."""
-    pairs = _confirmed_cosine_pairs(spark, sf_dir).localCheckpoint()
+    materialized once, then reused by all three joins."""
+    pairs = materialize(_confirmed_cosine_pairs(spark, sf_dir))
     sym = pairs.select(F.col("va").alias("s"), F.col("vb").alias("d")).unionAll(
         pairs.select(F.col("vb").alias("s"), F.col("va").alias("d"))
     )
@@ -1589,28 +1583,25 @@ def graph_kcore_membership(spark, sf_dir):
     100 TB shape: each peel round is one groupBy(vertex) degree count plus
     one semi-join of edges against surviving vertices — O(edges) per
     round, the same bounded-iteration discipline as PageRank/LPA, lineage
-    cut per round with localCheckpoint; the oracle unrolls the identical
+    cut per round with materialize; the oracle unrolls the identical
     {R} rounds."""
     e = T(spark, sf_dir, "embeddings")
     pairs = _confirmed_cosine_pairs(spark, sf_dir)
-    edges = (
+    edges = materialize(
         pairs.select(F.col("va").alias("s"), F.col("vb").alias("d"))
         .unionAll(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-        .localCheckpoint()
     )
     surv = None
     for _ in range(_KCORE_ROUNDS):
-        surv = (
+        surv = materialize(
             edges.groupBy("s")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= _KCORE_K)
             .select(F.col("s").alias("v"))
-            .localCheckpoint()
         )
-        edges = (
+        edges = materialize(
             edges.join(surv.withColumnRenamed("v", "s"), "s", "left_semi")
             .join(surv.withColumnRenamed("v", "d"), "d", "left_semi")
-            .localCheckpoint()
         )
     # core membership = the final round's degree-filtered vertex set (a
     # vertex can survive the round-R cut yet lose its last edges when its
@@ -2026,11 +2017,10 @@ def dedup_ladder_report(spark, sf_dir):
     composition — survivor-set threading included — is hash-checked
     against the oracle replaying the identical three stages."""
     d = T(spark, sf_dir, "documents")
-    k1 = (
+    k1 = materialize(
         d.groupBy(F.md5("text").alias("h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-        .localCheckpoint()
     )
     d1 = d.join(k1, "doc_id", "left_semi")
     bands = lsh_bands(minhash_signatures(d1))
@@ -2059,12 +2049,11 @@ def dedup_ladder_report(spark, sf_dir):
         .filter(jacc >= _LADDER_JACC_TH)
         .select("doc_a", "doc_b")
     )
-    removed2 = (
+    removed2 = materialize(
         confirmed2.select(F.col("doc_b").alias("doc_id"))
         .distinct()
-        .localCheckpoint()
     )
-    k2 = k1.join(removed2, "doc_id", "left_anti").localCheckpoint()
+    k2 = materialize(k1.join(removed2, "doc_id", "left_anti"))
     epairs = _confirmed_cosine_pairs(spark, sf_dir)
     k2v = k2.select(F.col("doc_id").alias("v"))
     confirmed3 = epairs.join(
@@ -2309,7 +2298,7 @@ def graph_bfs_landmarks(spark, sf_dir):
 
     Spark runs textbook frontier BFS: {H} rounds of frontier-joins-adj,
     anti-joined against the visited set so each (landmark, vertex) settles
-    at its first (= minimal) hop count, per-round state localCheckpoint'd.
+    at its first (= minimal) hop count, per-round state materialized.
     The oracle replays it as a UNION-mode (distinct) recursive CTE and
     takes min(d) — identical semantics because BFS's first visit IS the
     min hop distance.
@@ -2322,11 +2311,10 @@ def graph_bfs_landmarks(spark, sf_dir):
     embarrassingly parallel key)."""
     pairs = _confirmed_cosine_pairs(spark, sf_dir, th=_TRI_TH)
     ed = pairs.select(F.col("vb").alias("lo"), F.col("va").alias("hi"))
-    adj = (
+    adj = materialize(
         ed.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
         .union(ed.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
     lm = (
         adj.select("src")
@@ -2335,9 +2323,9 @@ def graph_bfs_landmarks(spark, sf_dir):
         .limit(_BFS_LANDMARKS)
         .select(F.col("src").alias("lmk"))
     )
-    dist = lm.select(
-        "lmk", F.col("lmk").alias("v"), F.lit(0).cast("int").alias("d")
-    ).localCheckpoint()
+    dist = materialize(
+        lm.select("lmk", F.col("lmk").alias("v"), F.lit(0).cast("int").alias("d"))
+    )
     frontier = dist
     for h in range(1, _BFS_HOPS + 1):
         nxt = (
@@ -2348,7 +2336,7 @@ def graph_bfs_landmarks(spark, sf_dir):
         new = nxt.join(dist.select("lmk", "v"), ["lmk", "v"], "left_anti").select(
             "lmk", "v", F.lit(h).cast("int").alias("d")
         )
-        dist = dist.union(new).localCheckpoint()
+        dist = materialize(dist.union(new))
         frontier = new
     return dist.select("lmk", "v", F.col("d").cast("bigint").alias("dist"))
 

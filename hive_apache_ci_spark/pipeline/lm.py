@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..helpers import T, spread
+from ..helpers import T, materialize, spread
 from ..registry import query
 
 _TOPK = 100
@@ -154,18 +154,15 @@ def _doc_ppl(spark, sf_dir):
     from ..helpers import spread
 
     d = spread(T(spark, sf_dir, "documents"), "doc_id")
-    # r12 optimization (guide §2.4): docterm previously fed BOTH the vocab
-    # aggregate and the scoring join — the tokenize explode + (doc, t)
-    # shuffle executed twice, and the join re-shuffled docterm on t next
-    # to vocab's own t-exchange. One localCheckpoint (computed fresh per
-    # invocation) + a sum-over-(PARTITION BY t) window replaces the join:
-    # one tokenize pass and ONE t-exchange total. cnt is the identical
-    # integer sum, so every downstream double is unchanged.
-    docterm = (
+    # docterm feeds BOTH the vocab aggregate and the scoring: one barrier
+    # (computed fresh per invocation) + a sum-over-(PARTITION BY t) window
+    # instead of a join gives one tokenize pass and ONE t-exchange total.
+    # cnt is the identical integer sum, so every downstream double is
+    # unchanged.
+    docterm = materialize(
         _tokens(d)
         .groupBy("doc_id", "t")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
     stats = docterm.agg(
         F.sum("c").cast("double").alias("total"),
@@ -787,14 +784,13 @@ def quality_kn_bigram_perplexity(spark, sf_dir):
         .select("doc_id", F.col("u.w1").alias("w1"), F.col("u.w2").alias("w2"))
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
     )
-    # r12 optimization: bc is consumed by ctx, cont, tt AND the scoring
-    # join — four references, each re-running the bigram explode + (w1,w2)
-    # shuffle. One localCheckpoint (bigram-type grain, vocab-bounded;
-    # recomputed from parquet per invocation) cuts those to one pass.
-    bc = (
+    # bc is consumed by ctx, cont, tt AND the scoring join — four
+    # references, each re-running the bigram explode + (w1,w2) shuffle.
+    # One barrier (bigram-type grain, vocab-bounded; recomputed from
+    # parquet per invocation) cuts those to one pass.
+    bc = materialize(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("double").alias("cb"))
-        .localCheckpoint()
     )
     ctx = bc.groupBy("w1").agg(
         F.sum("cb").alias("ct"), F.count(F.lit(1)).cast("double").alias("nf")

@@ -13,15 +13,9 @@ that at 100 TB:
   reuse the same exchange;
 - posting lists are truncated with a *windowed* row_number BEFORE the
   collect, so per-term state is bounded even for stop-word-frequency terms
-
-r12 ADVICE note: several operators here cut multiply-referenced subtrees
-with ``localCheckpoint()``, which is EAGER — merely *constructing* those
-query DataFrames (e.g. for plan snapshotting or ``explain``) runs the
-checkpointed sub-jobs and pins their results in executor storage for the
-session. That is the intended trade (the checkpoint is re-computed from
-parquet on every invocation, so nothing is cached across runs), but
-callers that only want a plan should expect construction-time Spark jobs.
   (a bare ``collect_list`` would buffer every posting for hot terms);
+- multiply-referenced subtrees are cut with ``helpers.materialize``, so
+  constructing some of these queries already runs Spark jobs (see there);
 - corpus-level scalars (N, avgdl) are single-row aggregates joined in by
   broadcast; the per-term df table is vocabulary-sized (≪ corpus, zipfian)
   and broadcast-joined where used.
@@ -38,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..helpers import T
+from ..helpers import T, materialize
 from ..registry import query
 
 _TOKENS_SQL = """
@@ -226,7 +220,7 @@ def search_bm25_topk(spark, sf_dir):
     # ONE pass over the token explode — per-doc dl and the three per-term
     # tfs come from a single conditional-pivot aggregate (the old shape
     # re-ran the explode for dl, tf and df and joined them back). The
-    # doc-grain aggregate is localCheckpointed so the corpus stats (1 row)
+    # doc-grain aggregate is materialized so the corpus stats (1 row)
     # and the scoring projection don't each re-run the explode. Bitwise
     # equivalence with the unchanged oracle: tf/df/dl/n/avgdl are the same
     # integers, the per-term score expression is operand-for-operand the
@@ -239,10 +233,9 @@ def search_bm25_topk(spark, sf_dir):
         F.count(F.when(F.col("term") == t, F.lit(1))).alias(f"tf_{i}")
         for i, t in enumerate(_BM25_TERMS)
     ]
-    per_doc = (
+    per_doc = materialize(
         toks.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("dl"), *tf_cols)
-        .localCheckpoint()
     )
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n"),
@@ -478,20 +471,17 @@ def search_hybrid_rrf(spark, sf_dir):
     discipline) so both engines rank against the identical query vector."""
     from .similarity import dot_fold
 
-    # localCheckpoint the two tiny arm intermediates (r12 optimization,
-    # guide §3.3 "materialise an intermediate to truncate the plan"): `bm`
-    # (ARM_K rows) feeds both the PRF vector and the fusion join, and `qv`
-    # (1 row) feeds the cosine arm — each reference otherwise instantiates
-    # the whole 14-exchange BM25 dataflow again (measured before-plan:
-    # 32 Exchanges / 20 scans). Intra-query materialization of <=20 rows,
-    # recomputed from parquet on every invocation.
-    bm = (
+    # Materialize the two tiny arm intermediates: `bm` (ARM_K rows) feeds
+    # both the PRF vector and the fusion join, and `qv` (1 row) feeds the
+    # cosine arm — each reference otherwise instantiates the whole
+    # 14-exchange BM25 dataflow again. Intra-query materialization of <=20
+    # rows, recomputed from parquet on every invocation.
+    bm = materialize(
         search_bm25_topk(spark, sf_dir)
         .select(F.col("rk").alias("bm_rk"), "doc_id")
-        .localCheckpoint()
     )
     e = T(spark, sf_dir, "embeddings")
-    qv = _prf_query_vector(bm, e).localCheckpoint()
+    qv = materialize(_prf_query_vector(bm, e))
     cos = dot_fold(F.col("embedding"), F.col("qvec")) / (
         F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
         * F.sqrt(dot_fold(F.col("qvec"), F.col("qvec")))
@@ -668,18 +658,16 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
         dot_fold,
     )
 
-    # Same tiny-intermediate materialization as search_hybrid_rrf (r12):
-    # `bm` is referenced by the PRF vector + fusion, `qv` by the probe
-    # selection, the per-subspace LUT slicing, AND the brute-force recall
-    # comparator — the before-plan instantiated the BM25 subtree so many
-    # times the plan hit 108 Exchanges / 76 scans.
-    bm = (
+    # Same tiny-intermediate materialization as search_hybrid_rrf: `bm` is
+    # referenced by the PRF vector + fusion, `qv` by the probe selection,
+    # the per-subspace LUT slicing, AND the brute-force recall comparator —
+    # each reference would otherwise instantiate the BM25 subtree again.
+    bm = materialize(
         search_bm25_topk(spark, sf_dir)
         .select(F.col("rk").alias("bm_rk"), "doc_id")
-        .localCheckpoint()
     )
     e = T(spark, sf_dir, "embeddings")
-    qv = _prf_query_vector(bm, e).localCheckpoint()
+    qv = materialize(_prf_query_vector(bm, e))
     idx = _ensure_pq_index(spark, sf_dir)
     coarse = spark.read.parquet(os.path.join(idx, "coarse"))
     routing = spark.read.parquet(os.path.join(idx, "routing"))
@@ -730,19 +718,17 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
         .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
     )
     wsem = Window.orderBy("adc_d2", "doc_id")
-    # r13 (r12 VERDICT task 4): `sem` is referenced by BOTH the fusion
-    # join and the recall audit — un-materialized, each reference
-    # re-instantiated the whole probe→cands→codes→ADC arm (the r12 after-
-    # plan still carried 38 Exchanges / 18 parquet scans, two copies of
-    # the arm). localCheckpoint the ≤ARM_K-row rank list once (recomputed
-    # from parquet every invocation, same discipline as `bm`/`qv`).
-    sem = (
+    # `sem` is referenced by BOTH the fusion join and the recall audit —
+    # un-materialized, each reference re-instantiates the whole
+    # probe→cands→codes→ADC arm. Materialize the ≤ARM_K-row rank list once
+    # (recomputed from parquet every invocation, same discipline as
+    # `bm`/`qv`).
+    sem = materialize(
         adc.select(F.col("vec_id").alias("doc_id"), "adc_d2")
         .orderBy("adc_d2", "doc_id")
         .limit(_RRF_ARM_K)
         .withColumn("vec_rk", F.row_number().over(wsem))
         .select("doc_id", "vec_rk")
-        .localCheckpoint()
     )
     cos = dot_fold(F.col("embedding"), F.col("qvec")) / (
         F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..helpers import T, ravg, spread
+from ..helpers import T, materialize, ravg, spread
 from ..registry import query
 
 TOP_K = 5
@@ -820,10 +820,9 @@ def ann_recall_report(spark, sf_dir):
     bounded query set; the recall join is queries*k rows. In production
     the same report runs on a sampled query panel — the shape is
     identical."""
-    truth = (
-        knn_topk_cosine(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()  # feeds the semi-join AND the query-id spine
+    # truth feeds the semi-join AND the query-id spine
+    truth = materialize(
+        knn_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
     )
     ivf = ivf_probe_topk(spark, sf_dir).select("query_id", "neighbor_id")
     hits = (
@@ -1084,7 +1083,7 @@ def kmeans_lloyd(spark, sf_dir):
     100 TB shape: the k×d centroid table is broadcast every round (k·d
     doubles — KBs); assignment is map-side (no shuffle of the corpus);
     the update is ONE groupBy(cid, dim) shuffle of (corpus × d) narrow
-    rows. Lineage is cut per round with localCheckpoint. This is exactly
+    rows. Lineage is cut per round with materialize. This is exactly
     MLlib KMeans' dataflow, re-expressed in DataFrame ops so the
     trajectory is auditable and oracle-able."""
     cent, assign = _kmeans_train(spark, sf_dir)
@@ -1174,12 +1173,11 @@ def _kmeans_train(spark, sf_dir):
                 ).alias("new_cvec")
             )
         )
-        cent = (
+        cent = materialize(
             cent.join(upd, "cid", "left")
             .select("cid", F.coalesce("new_cvec", "cvec").alias("cvec"))
-            .localCheckpoint()
         )
-    assign = assign.localCheckpoint()  # eager: materializes off the cache
+    assign = materialize(assign)  # eager: materializes off the cache
     vv.unpersist(False)
     dd.unpersist(False)
     return cent, assign
@@ -1379,13 +1377,12 @@ def _pq_train(spark, sf_dir, src=None):
                 ).alias("new_cvec")
             )
         )
-        cent = (
+        cent = materialize(
             cent.join(upd, ["s", "cid"], "left")
             .select("s", "cid", F.coalesce("new_cvec", "cvec").alias("cvec"))
-            .localCheckpoint()
         )
-    # final assignment IS consumed repeatedly downstream — checkpoint once
-    assign = assign.localCheckpoint()
+    # final assignment IS consumed repeatedly downstream — materialize once
+    assign = materialize(assign)
     vv.unpersist(False)
     return vv, cent, assign
 
@@ -1487,7 +1484,7 @@ def knn_mmr_rerank(spark, sf_dir):
     window argmax over ≤{C} candidates per query, all queries advancing in
     parallel — so wall-clock is {K} tiny stages regardless of query count.
     Candidate relevances and the {C}×{C} pairwise sims are computed once,
-    quantized to 6dp (argmax inputs to 9dp), localCheckpoint-ed, and reused
+    quantized to 6dp (argmax inputs to 9dp), materialized, and reused
     every step — which is also what pins the greedy trajectory across
     engines for the unrolled DuckDB oracle."""
     from pyspark.sql import Window as W
@@ -1511,7 +1508,7 @@ def knn_mmr_rerank(spark, sf_dir):
         6,
     )
     wq = W.partitionBy("qid")
-    cand = (
+    cand = materialize(
         F.broadcast(q)
         .join(c, F.col("cid") != F.col("qid"))
         .select("qid", "cid", rel.alias("rel"))
@@ -1520,7 +1517,6 @@ def knn_mmr_rerank(spark, sf_dir):
         )
         .filter(F.col("rn") <= _MMR_CAND)
         .select("qid", "cid", "rel")
-        .localCheckpoint()
     )
     ea = e.select(F.col("vec_id").alias("ca"), F.col("embedding").alias("xa"),
                   F.col("nrm").alias("na"))
@@ -1531,14 +1527,13 @@ def knn_mmr_rerank(spark, sf_dir):
         + F.lit(1e-9),
         6,
     )
-    sim = (
+    sim = materialize(
         cand.select("qid", F.col("cid").alias("ca"))
         .join(cand.select("qid", F.col("cid").alias("cb")), "qid")
         .filter(F.col("ca") != F.col("cb"))
         .join(ea, "ca")
         .join(eb, "cb")
         .select("qid", "ca", "cb", s.alias("s"))
-        .localCheckpoint()
     )
     sel = (
         cand.withColumn(
@@ -1571,7 +1566,7 @@ def knn_mmr_rerank(spark, sf_dir):
             .filter(F.col("rn") == 1)
             .select("qid", "cid", "rel", F.lit(t).alias("step"))
         )
-        sel = sel.unionAll(pick).localCheckpoint()
+        sel = materialize(sel.unionAll(pick))
     return sel.select(
         F.col("qid").alias("query_id"),
         F.col("step").alias("rank"),
@@ -1828,11 +1823,12 @@ def _pq_index_dir(sf_dir: str) -> str:
     streaming-state publish protocol) — a rebuild never deletes the dir a
     concurrent reader has already resolved."""
     import os
+    import tempfile
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
     return os.path.join(
-        "/tmp",
+        tempfile.gettempdir(),
         "hive_apache_ci_spark_index",
         f"ivfpq_{_PQ_INDEX_VERSION}_{tag}_{st.st_mtime_ns}_{st.st_size}",
     )
@@ -1854,7 +1850,10 @@ def _ivf_pq_index_frames(spark, sf_dir):
     centroids = dims.groupBy("label", "pos").agg(
         F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
     )
-    coarse = (
+    # coarse (|labels| rows) feeds BOTH its own parquet write and routing's
+    # broadcast join — without the barrier the full embeddings posexplode
+    # + two-shuffle centroid aggregation executes once per consumer.
+    coarse = materialize(
         centroids.groupBy("label")
         .agg(
             F.transform(
@@ -1863,11 +1862,6 @@ def _ivf_pq_index_frames(spark, sf_dir):
             ).alias("cvec")
         )
         .select(F.col("label").alias("c_label"), "cvec")
-        # r12 optimization: coarse (|labels| rows) feeds BOTH its own
-        # parquet write and routing's broadcast join — without the
-        # checkpoint the full embeddings posexplode + two-shuffle centroid
-        # aggregation executes once per consumer (guide §2.4).
-        .localCheckpoint()
     )
     d2 = F.aggregate(
         F.zip_with(
@@ -1933,7 +1927,7 @@ def _ensure_pq_index(spark, sf_dir: str, rebuild: bool = False) -> str:
     coarse, routing, codebook, codes = _ivf_pq_index_frames(spark, sf_dir)
     # r12 optimization (guide §2.6 "overlap independent jobs"): the four
     # index writes share no lineage that still executes (cent/assign are
-    # localCheckpointed by _pq_train, coarse above), so submit them from a
+    # materialized by _pq_train, coarse above), so submit them from a
     # small thread pool — the tail tasks of one write back-fill cores the
     # next would leave idle. FIFO scheduling keeps this deterministic;
     # _SUCCESS is only written after every future resolves.
@@ -2496,13 +2490,11 @@ def ann_matryoshka_recall(spark, sf_dir):
     ranking reuses the knn topology (broadcast queries, per-query window);
     recall joins are id-only. Fully hash-oracled — the sequential fold
     over identical slices is bit-deterministic in both engines."""
-    # checkpoint: `truth` (the expensive brute-force pass) feeds the semi-
-    # join AND the query-id spine for EVERY dim — without the cut it would
-    # recompute 2x per union branch (review-caught; the _pq_train rule)
-    truth = (
-        knn_topk_cosine(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+    # `truth` (the expensive brute-force pass) feeds the semi-join AND the
+    # query-id spine for EVERY dim — without the cut it would recompute 2x
+    # per union branch
+    truth = materialize(
+        knn_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
     )
     parts = []
     for d in _MRL_DIMS:
@@ -2564,11 +2556,9 @@ def ann_nprobe_sweep(spark, sf_dir):
     computed once. At 100 TB this is a sampled-panel job: cost scales with
     panel size x probed-list fraction, never the corpus — exactly why the
     sweep is affordable to run continuously against a production index."""
-    # one brute-force pass for all sweep points (review-caught recompute)
-    truth = (
-        knn_topk_cosine(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+    # one brute-force pass for all sweep points
+    truth = materialize(
+        knn_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
     )
     parts = []
     for np_ in _SWEEP_PROBES:

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..helpers import T
+from ..helpers import T, materialize
 from ..registry import query
 from .text_analysis import STOPWORDS, _STOP_SQL
 
@@ -110,27 +110,27 @@ def _logreg_train(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     a = F.split(F.lower("text"), r"\s+")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    feat = d.select(
-        "doc_id",
-        F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
-        F.lit(1.0).alias("x0"),
-        F.round(F.least(F.size(a) / 100.0, F.lit(2.0)), 6).alias("x1"),
-        F.round(F.size(F.array_distinct(a)) * 1.0 / F.size(a), 6).alias("x2"),
-        F.round(
-            F.size(F.filter(a, lambda t: F.array_contains(stop_arr, t)))
-            * 1.0
-            / F.size(a),
-            6,
-        ).alias("x3"),
-    ).localCheckpoint()
+    feat = materialize(
+        d.select(
+            "doc_id",
+            F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
+            F.lit(1.0).alias("x0"),
+            F.round(F.least(F.size(a) / 100.0, F.lit(2.0)), 6).alias("x1"),
+            F.round(F.size(F.array_distinct(a)) * 1.0 / F.size(a), 6).alias("x2"),
+            F.round(
+                F.size(F.filter(a, lambda t: F.array_contains(stop_arr, t)))
+                * 1.0
+                / F.size(a),
+                6,
+            ).alias("x3"),
+        )
+    )
 
-    # r12 optimization: the model state is 4 doubles — carry it as PYTHON
-    # floats between rounds (the Spark MLlib driver pattern) instead of a
-    # 1-row broadcast DataFrame + localCheckpoint per round. Each round is
-    # still exactly one corpus-scan aggregate; the round-trip collects one
-    # 4-double row (O(1) driver work, not a data collect). Measured warm:
-    # 0.66 s/round -> 0.44 s/round, weights bit-identical (same rounded
-    # expressions; Python float carry is exact IEEE754).
+    # The model state is 4 doubles — carry it as PYTHON floats between
+    # rounds (the Spark MLlib driver pattern), so no per-round barrier is
+    # needed. Each round is exactly one corpus-scan aggregate; the
+    # round-trip collects one 4-double row (O(1) driver work, not a data
+    # collect). Python float carry is exact IEEE754.
     wv = [0.0, 0.0, 0.0, 0.0]
     for _ in range(_LR_ITERS):
         z_lit = F.round(
@@ -179,10 +179,10 @@ def train_logreg_quality(spark, sf_dir):
     weights rounded to 9dp after the gradient step. DuckDB unrolls the
     same {I} rounds.
 
-    100 TB shape: the model state is 4 doubles carried as a 1-row
-    broadcast DataFrame; each round is one corpus scan aggregated into 4
-    partial-summed gradient components (no shuffle wider than the 4-value
-    agg), lineage cut per round with localCheckpoint. Returns the weight
+    100 TB shape: the model state is 4 doubles carried on the driver;
+    each round is one corpus scan aggregated into 4 partial-summed
+    gradient components (no shuffle wider than the 4-value agg) over the
+    materialized feature table. Returns the weight
     vector plus final log-loss/accuracy."""
     feat, w, z = _logreg_train(spark, sf_dir)
     scored = feat.crossJoin(F.broadcast(w))

@@ -48,31 +48,25 @@ RUNTIME_CONFS: dict[str, str] = {
     # Runtime-settable so externally-created (driver) sessions get the tuned
     # parallelism too; AQE coalesces down, so this is an upper bound.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
-    # Join strategy (r12 optimization, guide §3.1): allow shuffled-hash
-    # join wherever the planner's size conditions hold instead of always
-    # sorting both sides (A/B at sf0.1: 0.27-0.86x, median ~0.5x, on the
-    # 12 join-heavy TPC-DS shapes; results hash-identical — strategy never
-    # changes content). Production posture: SHJ spills gracefully since
-    # Spark 3.2, AQE's local-map threshold below bounds the runtime
-    # SMJ->SHJ rewrite to builds that provably fit one map's output, and
-    # bucketed/SMB paths pin SMJ via hint('merge') regardless. Both knobs
-    # env-tunable; set SPARK_GRAFT_PREFER_SMJ=true to restore the old
-    # planner bias on memory-constrained clusters.
-    "spark.sql.join.preferSortMergeJoin": os.environ.get(
-        "SPARK_GRAFT_PREFER_SMJ", "false"
-    ),
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-        "SPARK_GRAFT_SHJ_LOCALMAP", str(64 * 1024 * 1024)
-    ),
+    # Join strategy: allow shuffled-hash join wherever the planner's size
+    # conditions hold instead of always sorting both sides (A/B at sf0.1:
+    # 0.27-0.86x, median ~0.5x, on the 12 join-heavy TPC-DS shapes; results
+    # hash-identical — strategy never changes content). Production posture:
+    # SHJ spills gracefully since Spark 3.2, AQE's local-map threshold below
+    # bounds the runtime SMJ->SHJ rewrite to builds that provably fit one
+    # map's output, and bucketed/SMB paths pin SMJ via hint('merge')
+    # regardless. A memory-constrained cluster restores the sort-merge bias
+    # with get_spark(extra_conf={"spark.sql.join.preferSortMergeJoin":
+    # "true"}).
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(64 * 1024 * 1024),
     # Scan-split sizing: the testdata files are single-digit-MB parquet, so
     # the 128 MB default yields 1-3 splits and leaves 32 cores idle on every
     # scan-heavy stage (measured: q1 0.53s→0.41s, minhash 1.6s→1.3s at
-    # sf0.1 with 16 MB). A deployment knob exactly like shuffle.partitions:
-    # at cluster scale set it so per-task input ≈ 64-128 MB — the point is
-    # splits ≈ a few × total cores, which 16 MB achieves on this rig.
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_SPLIT_BYTES", str(16 * 1024 * 1024)
-    ),
+    # sf0.1 with 16 MB). A deployment sets it through ``extra_conf`` so
+    # per-task input ≈ 64-128 MB — the point is splits ≈ a few × total
+    # cores, which 16 MB achieves on this rig.
+    "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
 }
 
 # Confs that must be set at session-build time (ignored via try/except when
@@ -135,15 +129,23 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default ``*``)
     for the test rig; on a real cluster pass ``None`` after setting the
     master in spark-submit / spark-defaults.
+
+    ``extra_conf`` wins over ``BUILD_CONFS`` and ``RUNTIME_CONFS``: its
+    runtime keys are set after ``apply_runtime_confs``, whose per-application
+    short-circuit then keeps them on every later ``load_tables``. The one
+    exception is ``spark.sql.session.timeZone``, the short-circuit's probe:
+    the oracle comparison needs UTC, and a session off UTC is re-applied.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    extra_conf = extra_conf or {}
     builder = SparkSession.builder.appName(app_name).master(master)
-    for key, value in {**BUILD_CONFS, **RUNTIME_CONFS}.items():
+    for key, value in {**BUILD_CONFS, **RUNTIME_CONFS, **extra_conf}.items():
         builder = builder.config(key, value)
-    if extra_conf:
-        for key, value in extra_conf.items():
-            builder = builder.config(key, value)
-    spark = builder.getOrCreate()
-    return apply_runtime_confs(spark)
+    spark = apply_runtime_confs(builder.getOrCreate())
+    for key, value in extra_conf.items():
+        # static and core confs only take effect through the builder
+        if spark.conf.isModifiable(key):
+            spark.conf.set(key, value)
+    return spark

@@ -24,7 +24,16 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..helpers import RUN_ID, T, committed, money_sum, r2, ravg, run_scratch
+from ..helpers import (
+    RUN_ID,
+    T,
+    committed,
+    materialize,
+    money_sum,
+    r2,
+    ravg,
+    run_scratch,
+)
 from ..registry import query
 
 
@@ -893,13 +902,12 @@ def io_csv_malformed_quarantine(spark, sf_dir):
     )
     # PERMISSIVE keeps parseable fields and stores the raw line alongside;
     # a corrupt-record column query needs the raw row available in the same
-    # pass (Spark docs prescribe cache()) — but a cache() held by a returned
-    # plan leaks storage blocks across a 353-query sweep (r7 ADVICE), so
-    # materialize via an EAGER bounded localCheckpoint instead: same
-    # same-pass guarantee (all columns materialized once), and the blocks
+    # pass. Spark's docs prescribe cache(), but a cache() held by a returned
+    # plan leaks storage blocks across a sweep. The barrier gives the same
+    # same-pass guarantee (all columns materialized once), and its blocks
     # are released with the RDD by the ContextCleaner when the returned
     # DataFrame is dropped, not pinned in the cache registry.
-    back = back.localCheckpoint(eager=True)
+    back = materialize(back)
     raw_line = F.when(
         F.col("_corrupt_record").isNotNull(), F.col("_corrupt_record")
     ).otherwise(F.concat_ws(",", F.col("k"), F.col("name"), F.col("nk")))

@@ -19,13 +19,14 @@ bound the aggregation state exactly as they do here.
 from __future__ import annotations
 
 import os
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
-from ..helpers import ravg
+from ..helpers import materialize, ravg
 from ..registry import query
 
 def _events_schema(ts_type: Ty.DataType) -> Ty.StructType:
@@ -69,7 +70,9 @@ def _staged_events_dir(sf_dir: str) -> str:
 
     src = os.path.join(sf_dir, "events.parquet")
     tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join("/tmp", "hive_apache_ci_spark_stream", tag, "events")
+    out = os.path.join(
+        tempfile.gettempdir(), "hive_apache_ci_spark_stream", tag, "events"
+    )
     marker = os.path.join(out, "events.parquet")
     stamp_path = os.path.join(out, ".source_stamp")
     st = os.stat(src)
@@ -310,21 +313,18 @@ def stream_foreach_batch_sink(spark, sf_dir):
     topology; exactly-once comes from checkpoint + idempotent overwrite of
     per-batch partitions on a real deployment). Returns the sink read back,
     re-aggregated to batch-independent totals. Per-run uuid sink/checkpoint
-    (round-5 hardening, same class as stream_upsert_latest_state: a fixed
-    path let two concurrent runs at one SF clobber each other); the
-    readback is localCheckpointed so the scratch dir is removed eagerly."""
-    import shutil
-    import uuid
-
+    (same class as stream_upsert_latest_state: a fixed path would let two
+    concurrent runs at one SF clobber each other); the
+    readback is materialized so the scratch dirs are removed eagerly."""
     tag = os.path.basename(os.path.normpath(sf_dir))
     sink = os.path.join(
-        "/tmp", "hive_apache_ci_spark_stream", tag, f"sink_fb_{uuid.uuid4().hex}"
+        tempfile.gettempdir(),
+        "hive_apache_ci_spark_stream",
+        tag,
+        f"sink_fb_{uuid.uuid4().hex}",
     )
     run_foreach_batch_phase(events_stream(spark, sf_dir), sink)
-    result = foreach_batch_readback(spark, sink).localCheckpoint()
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(sink + "_ckpt", ignore_errors=True)
-    return result
+    return materialize(foreach_batch_readback(spark, sink), sink, sink + "_ckpt")
 
 
 def run_foreach_batch_phase(source: DataFrame, sink: str) -> None:
@@ -692,7 +692,7 @@ def stream_upsert_latest_state(spark, sf_dir):
     table is key-partitioned and each merge touches only matched
     partitions (Delta/Iceberg MERGE; here copy-on-write parquet).
 
-    Robustness notes (round-5 hardening): the state/checkpoint dirs carry a
+    Robustness notes: the state/checkpoint dirs carry a
     per-run uuid so concurrent runs at the same SF cannot clobber each
     other; "no prior state" is decided by the _SUCCESS commit marker, not
     by catching arbitrary read errors (a transient FS failure now raises
@@ -714,11 +714,13 @@ def stream_upsert_latest_state(spark, sf_dir):
     double-merged — transactional exactly-once over a plain filesystem,
     the same pointer-flip commit protocol as Delta/Iceberg metadata."""
     import shutil
-    import uuid
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     base = os.path.join(
-        "/tmp", "hive_apache_ci_spark_stream", tag, f"upsert_{uuid.uuid4().hex}"
+        tempfile.gettempdir(),
+        "hive_apache_ci_spark_stream",
+        tag,
+        f"upsert_{uuid.uuid4().hex}",
     )
     state_root = os.path.join(base, "state")
     ptr = os.path.join(state_root, "LATEST")
@@ -831,19 +833,17 @@ def stream_upsert_latest_state(spark, sf_dir):
             raise TimeoutError("stream_upsert_latest_state did not finish")
     finally:
         q.stop()
-    # Materialize the final state via localCheckpoint so the per-run /tmp
-    # dir can be removed immediately (the returned DataFrame no longer
-    # references the files on disk).
+    # Materialize the final state so the per-run dir can be removed
+    # immediately (the returned DataFrame no longer reads the files).
     final = live_state()
     if final is None:
         raise OSError("stream finished but no state version was published")
-    result = (
-        spark.read.parquet(final[0])
-        .select("user_id", "last_type", "last_ts", "n_events")
-        .localCheckpoint()
+    return materialize(
+        spark.read.parquet(final[0]).select(
+            "user_id", "last_type", "last_ts", "n_events"
+        ),
+        base,
     )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -964,7 +964,7 @@ def stream_python_datasource(spark, sf_dir):
             raise TimeoutError("python stream source did not drain")
     finally:
         q.stop()
-    got = spark.table(qname).localCheckpoint()
+    got = materialize(spark.table(qname))
     return got.groupBy(F.substring("h", 1, 1).alias("bucket")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("i").cast("bigint").alias("i_sum"),

@@ -15,11 +15,8 @@ Usage:
 
 Shard processes each build a local[$SPARK_GRAFT_CPUS] session; with the
 default 4 shards on the 32-core rig each shard gets CPUS=8 unless
-SPARK_GRAFT_CPUS is already set. Exit codes: 1 if any query line is FAIL;
-2 if the SKIP count (ORACLE_OOM_KNOWN_LIMIT — an oracle resource limit,
-not an engine mismatch) exceeds ``--allow-skips`` (default 0, the
-committed baseline) — so a change that newly pushes an oracle into OOM
-can't silently shrink differential coverage (r9 ADVICE).
+SPARK_GRAFT_CPUS is already set. Exits 1 if any query line is FAIL
+(an oracle OOM included: verify counts ORACLE_OOM_KNOWN_LIMIT as FAIL).
 """
 
 from __future__ import annotations
@@ -32,7 +29,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_LINE = re.compile(r"^(PASS|FAIL|SKIP) (\S+)\s+(.*)$")
+_LINE = re.compile(r"^(PASS|FAIL) (\S+)\s+(.*)$")
 
 
 def run_shard(
@@ -58,13 +55,6 @@ def main() -> int:
     ap.add_argument("--names", default=None,
                     help="comma-separated subset (default: full registry)")
     ap.add_argument("--out", default=None, help="explicit artifact path")
-    ap.add_argument(
-        "--allow-skips", type=int, default=0,
-        help="max tolerated SKIP lines (ORACLE_OOM_KNOWN_LIMIT) before the "
-        "sweep exits nonzero. The committed baseline is 0 (r9 closed the "
-        "last oracle OOMs), so a change that newly pushes a DuckDB oracle "
-        "into its memory cap is LOUD — the query would otherwise silently "
-        "drop out of differential coverage (r9 ADVICE).")
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
@@ -102,19 +92,8 @@ def main() -> int:
         lines.append(f"FAIL {n:34s} NO_OUTPUT (shard crashed?)")
     lines.sort(key=lambda ln: _LINE.match(ln).group(2))
     n_fail = sum(1 for ln in lines if ln.startswith("FAIL"))
-    n_skip = sum(1 for ln in lines if ln.startswith("SKIP"))
-    passed = len(names) - n_fail - n_skip
     rc = 1 if n_fail else 0
-    if n_skip > args.allow_skips:
-        # skips over baseline are a COVERAGE regression, not a pass
-        rc = max(rc, 2)
-    head = f"== {passed}/{len(names)} ok =="
-    if n_skip:
-        head = (f"== {passed} passed, {n_skip} skipped(oracle-limit), "
-                f"{n_fail} failed / {len(names)} ==")
-        if n_skip > args.allow_skips:
-            head += (f" [SKIP COUNT {n_skip} > baseline "
-                     f"{args.allow_skips}: coverage regression]")
+    head = f"== {len(names) - n_fail}/{len(names)} ok =="
     body = "\n".join(lines) + f"\n{head}\nRC={rc}\n"
     sys.stdout.write(body)
 

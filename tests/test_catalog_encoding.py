@@ -226,3 +226,27 @@ def test_sibling_session_gets_runtime_confs(spark):
     apply_runtime_confs(sib)
     assert sib.conf.get("spark.sql.session.timeZone") == "UTC"
     assert sib.conf.get("spark.sql.ansi.enabled") == "false"
+
+
+def test_get_spark_extra_conf_wins_on_first_call(spark, monkeypatch, tmp_path):
+    """On an application's first get_spark, extra_conf must win over
+    RUNTIME_CONFS for the returned session, and a later table load (which
+    re-applies the runtime confs) must keep it."""
+    from hive_apache_ci_spark import session
+
+    extra = {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.join.preferSortMergeJoin": "true",
+    }
+    monkeypatch.setattr(session, "_CONFS_APPLIED", set())  # first-call path
+    pq.write_table(pa.table({"x": [1]}), str(tmp_path / "t.parquet"))
+    try:
+        s = session.get_spark("pytest", extra_conf=extra)
+        for key, value in extra.items():
+            assert s.conf.get(key) == value, key
+        assert load_table(s, str(tmp_path), "t").count() == 1
+        for key, value in extra.items():
+            assert s.conf.get(key) == value, key
+    finally:
+        for key in extra:
+            spark.conf.set(key, session.RUNTIME_CONFS[key])

@@ -24,6 +24,26 @@ def test_query_matches_oracle(spark, duck, name):
     assert res["rows"] >= 0
 
 
+def test_verify_main_fails_on_oracle_oom(monkeypatch, capsys):
+    """An oracle OOM leaves the engine's result unchecked, so verify.main
+    counts it as FAIL (exit 1) exactly as the gate above does, and keeps
+    the status string for diagnosis."""
+    from hive_apache_ci_spark import session, verify
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: None)
+    monkeypatch.setattr(verify, "duck_connect", lambda sf_dir: None)
+    monkeypatch.setattr(
+        verify,
+        "compare_one",
+        lambda spark, con, name, sf_dir: {
+            "name": name, "rows": 3, "status": "ORACLE_OOM_KNOWN_LIMIT"
+        },
+    )
+    assert verify.main(["q_oom"]) == 1
+    out = capsys.readouterr().out
+    assert "FAIL q_oom" in out and "ORACLE_OOM_KNOWN_LIMIT" in out, out
+
+
 def test_approx_count_distinct_error_bound(spark):
     """approx_count_distinct (HLL++, rsd 5%) must stay within 3*rsd of
     exact on every group; the query now computes the verdict in-plan

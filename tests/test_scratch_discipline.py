@@ -1,10 +1,12 @@
-"""Round-6 scratch discipline (r5 VERDICT #2/#7): every write-then-read-back
-query must use a per-run path — no fixed shared /tmp write path anywhere —
-with _SUCCESS-gated readbacks and stale-run GC."""
+"""Scratch discipline: every write-then-read-back query uses a per-run path
+under TMPDIR — no fixed shared /tmp write path anywhere — with
+_SUCCESS-gated readbacks, stale-run GC, and scratch released only through
+``helpers.materialize`` once the result is stored."""
 
 from __future__ import annotations
 
 import os
+import re
 import time
 
 from hive_apache_ci_spark import helpers
@@ -47,25 +49,59 @@ def test_committed_gates_on_success_marker(tmp_path):
     assert helpers.committed(str(d)) == str(d)
 
 
-def test_no_fixed_shared_tmp_write_paths_in_tree():
-    """Grep-clean criterion from r5 VERDICT #2: the only /tmp paths allowed
-    in source are (a) per-run (RUN_ID/uuid in the path), (b) content-
-    addressed with atomic publish (the PQ index, the staged events copy),
-    or (c) the session warehouse (per-run table names)."""
-    import re
+def test_materialize_stores_rows_then_deletes_scratch(spark, tmp_path):
+    """materialize returns df's rows, deletes every scratch dir, and the
+    result still collects afterwards: its plan scans stored rows, not the
+    deleted files."""
+    d, extra = tmp_path / "src", tmp_path / "src_ckpt"
+    spark.range(40).selectExpr("id", "id * 3 AS v").write.parquet(str(d))
+    extra.mkdir()
+    df = spark.read.parquet(str(d))
+    expected = sorted(df.collect())
+    assert "FileScan" in df._jdf.queryExecution().executedPlan().toString()
 
+    out = helpers.materialize(df, str(d), str(extra))
+    assert not d.exists() and not extra.exists()
+    assert sorted(out.collect()) == expected
+    qe = out._jdf.queryExecution()
+    assert "FileScan" not in qe.optimizedPlan().toString()
+    assert "FileScan" not in qe.executedPlan().toString()
+
+
+def _engine_sources():
+    """(path relative to the engine package, source) for each module."""
     root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "hive_apache_ci_spark")
-    offenders = []
     for dirpath, _, files in os.walk(root):
         for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fn)
-            src = open(path).read()
-            for m in re.finditer(r"gettempdir\(\)|[\"']/tmp[\"']", src):
-                line = src[: m.start()].count("\n") + 1
-                offenders.append(f"{os.path.relpath(path, root)}:{line}")
-    allowed = {
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                yield os.path.relpath(path, root), open(path).read()
+
+
+def test_engine_barriers_go_through_materialize():
+    """helpers.materialize is the one place the engine materializes a
+    subtree: no other engine module calls a checkpoint itself."""
+    callers = {
+        rel
+        for rel, src in _engine_sources()
+        if re.search(r"localCheckpoint\(|\.checkpoint\(", src)
+    }
+    assert callers == {"helpers.py"}, callers
+
+
+def test_no_fixed_shared_tmp_write_paths_in_tree():
+    """Every engine write lands under TMPDIR (``tempfile.gettempdir()``),
+    and only where the path is (a) per-run (RUN_ID/uuid in the path) or
+    (b) content-addressed with atomic publish (the PQ index, the staged
+    events copy). The one literal "/tmp" left is session.py's warehouse
+    default (a build conf; bucketed table names carry RUN_ID)."""
+    tmp_roots, literals = set(), []
+    for rel, src in _engine_sources():
+        if "gettempdir()" in src:
+            tmp_roots.add(rel)
+        for m in re.finditer(r"[\"']/tmp\b[^\"'\n]*[\"']", src):
+            literals.append((rel, m.group(0)))
+    allowed_roots = {
         # helpers.run_scratch — the per-run factory itself
         "helpers.py",
         # _staged_events_dir (content-addressed atomic copy), per-run uuid
@@ -73,11 +109,12 @@ def test_no_fixed_shared_tmp_write_paths_in_tree():
         "streaming/jobs.py",
         # _pq_index_dir: content-addressed (recipe+mtime key), atomic publish
         "pipeline/similarity.py",
-        # warehouse dir for bucketed saveAsTable; table names carry RUN_ID
-        "session.py",
     }
-    bad = [o for o in offenders if o.rsplit(":", 1)[0] not in allowed]
-    assert not bad, f"fixed /tmp write paths outside the audited allowlist: {bad}"
+    bad = sorted(tmp_roots - allowed_roots)
+    assert not bad, f"TMPDIR write roots outside the audited allowlist: {bad}"
+    assert literals == [
+        ("session.py", '"/tmp/hive_apache_ci_spark_warehouse"')
+    ], f"literal /tmp paths (use tempfile.gettempdir()): {literals}"
 
 
 def test_index_gc_never_reaps_inflight_builds(tmp_path):
