@@ -19,7 +19,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import run_sql
 from ..helpers import T, r2
 from ..registry import query
 
@@ -72,10 +72,11 @@ def python_udf_registered(spark, sf_dir):
         return "XL" if p >= 400000 else ("L" if p >= 200000 else "S")
 
     spark.udf.register("size_band_udf", band, "string")
-    load_tables(spark, sf_dir, register=True)
-    return spark.sql(
+    return run_sql(
+        spark,
         "SELECT o_orderkey, size_band_udf(o_totalprice) AS size_band "
-        "FROM orders WHERE o_orderkey <= 400"
+        "FROM orders WHERE o_orderkey <= 400",
+        sf_dir,
     )
 
 
@@ -98,10 +99,11 @@ def python_udtf(spark, sf_dir):
                 yield key, part
 
     spark.udtf.register("split_name", SplitName)
-    load_tables(spark, sf_dir, register=True)
-    return spark.sql(
+    return run_sql(
+        spark,
         "SELECT s.r_regionkey, s.part FROM region, "
-        "LATERAL split_name(r_regionkey, r_name) s"
+        "LATERAL split_name(r_regionkey, r_name) s",
+        sf_dir,
     )
 
 
@@ -116,14 +118,15 @@ def transform_using_script(spark, sf_dir):
     """Hive ``TRANSFORM ... USING 'cmd'`` with a REAL external process
     (/bin/cat identity pipe) — ScriptOperator parity including the
     tab-delimited row codec both directions."""
-    load_tables(spark, sf_dir, register=True)
-    return spark.sql(
+    return run_sql(
+        spark,
         """
         SELECT TRANSFORM (c_custkey, c_mktsegment)
                USING 'cat'
                AS (k string, seg string)
         FROM customer WHERE c_custkey <= 200
-        """
+        """,
+        sf_dir,
     )
 
 

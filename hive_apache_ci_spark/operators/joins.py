@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..catalog import run_sql
 from ..helpers import T, money_sum, r2, ts_lit
 from ..registry import query
 
@@ -698,10 +699,8 @@ def tpch_q11_important_stock(spark, sf_dir):
     fraction of the global SUM goes empty as the part catalog grows. The
     threshold is rounded 4dp before the membership cut (2dp part values,
     so cross-engine summation-order noise cannot flip membership)."""
-    from ..catalog import load_tables
-
-    load_tables(spark, sf_dir, register=True)
-    return spark.sql(
+    return run_sql(
+        spark,
         """
         WITH supp_value AS (
           SELECT l_partkey, round(sum(l_extendedprice * l_quantity), 2) AS value
@@ -712,7 +711,8 @@ def tpch_q11_important_stock(spark, sf_dir):
         WHERE value > (SELECT round(avg(value) * 1.5, 4) FROM supp_value)
         ORDER BY value DESC, l_partkey
         LIMIT 50
-        """
+        """,
+        sf_dir,
     )
 
 
@@ -770,10 +770,8 @@ def tpch_q17_small_qty_revenue(spark, sf_dir):
     the SAME fact table keyed by the outer part — the self-referential
     decorrelation pattern (rewritten by Catalyst into an aggregate+join
     reusing the lineitem scan)."""
-    from ..catalog import load_tables
-
-    load_tables(spark, sf_dir, register=True)
-    return spark.sql(
+    return run_sql(
+        spark,
         """
         SELECT round(sum(l.l_extendedprice) / 7.0 + 1e-9, 4) AS avg_yearly
         FROM lineitem l
@@ -781,7 +779,8 @@ def tpch_q17_small_qty_revenue(spark, sf_dir):
         WHERE p.p_size <= 5
           AND l.l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
                               FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-        """
+        """,
+        sf_dir,
     )
 
 

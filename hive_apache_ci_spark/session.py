@@ -47,7 +47,7 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Runtime-settable so externally-created (driver) sessions get the tuned
     # parallelism too; AQE coalesces down, so this is an upper bound.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    "spark.sql.shuffle.partitions": "32",
     # Join strategy: allow shuffled-hash join wherever the planner's size
     # conditions hold instead of always sorting both sides (A/B at sf0.1:
     # 0.27-0.86x, median ~0.5x, on the 12 join-heavy TPC-DS shapes; results

@@ -1,17 +1,16 @@
 #!/usr/bin/env python
-"""Full-registry differential sweep, sharded (r8 VERDICT item 8).
+"""Full-registry differential sweep, sharded.
 
-Commits the verification protocol that previously lived only in session
-notes: round-robin the sorted registry across N concurrent shard
-processes, each running ``python -m hive_apache_ci_spark.verify`` over its
-share of query names, then merge the per-query lines name-sorted into one
-artifact (docs/VERIFY_r{ROUND}_sf{X}.txt — identical format to the r3–r8
-artifacts, ending with "== P/T ok ==" and "RC=N").
+Round-robins the sorted registry across N concurrent shard processes, each
+running ``python -m hive_apache_ci_spark.verify`` over its share of query
+names, then merges the per-query lines name-sorted into one report on
+stdout, ending with "== P/T ok ==" and "RC=N"; ``--out`` also writes it to
+a file.
 
 Usage:
-    python scripts/sweep.py --sf-dir /root/testdata/sf0.01 --round 9
-    python scripts/sweep.py --sf-dir /root/testdata/sf0.1  --round 9 --shards 4
-    python scripts/sweep.py --sf-dir /root/testdata/sf0.01 --names q1,q2  # subset
+    python scripts/sweep.py                                  # sf0.01
+    python scripts/sweep.py --sf-dir DIR --shards 4 --out sweep.txt
+    python scripts/sweep.py --names q1,q2                    # subset
 
 Shard processes each build a local[$SPARK_GRAFT_CPUS] session; with the
 default 4 shards on the 32-core rig each shard gets CPUS=8 unless
@@ -50,11 +49,9 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--shards", type=int, default=4)
-    ap.add_argument("--round", type=int, default=None,
-                    help="write docs/VERIFY_r{N}_sf{X}.txt")
     ap.add_argument("--names", default=None,
                     help="comma-separated subset (default: full registry)")
-    ap.add_argument("--out", default=None, help="explicit artifact path")
+    ap.add_argument("--out", default=None, help="also write the report here")
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
@@ -97,14 +94,10 @@ def main() -> int:
     body = "\n".join(lines) + f"\n{head}\nRC={rc}\n"
     sys.stdout.write(body)
 
-    out = args.out
-    if out is None and args.round is not None:
-        tag = os.path.basename(os.path.normpath(args.sf_dir))
-        out = os.path.join(REPO, "docs", f"VERIFY_r{args.round:02d}_{tag}.txt")
-    if out:
-        with open(out, "w") as fh:
+    if args.out:
+        with open(args.out, "w") as fh:
             fh.write(body)
-        print(f"wrote {out}", file=sys.stderr)
+        print(f"wrote {args.out}", file=sys.stderr)
     return rc
 
 

@@ -154,16 +154,16 @@ def test_parity_only_excluded_from_perf_surfaces():
     """The registry's parity_only flag: the two deliberate
     global-window parity shapes stay in the CORRECTNESS surface but must
     never appear in a performance list — bench headliners or the canary's
-    heavy set — and each must have its scaled twin registered."""
+    heavy sets — and each must have its scaled twin registered."""
     import bench
     from hive_apache_ci_spark.registry import all_queries, parity_only_queries
-    from scripts.sf1_canary import CANARY_QUERIES
+    from scripts.scale_canary import LANES
 
     parity = parity_only_queries()
     assert parity == {"window_ntile", "window_rfm_segmentation"}
-    perf = set(bench.BASELINE_COMPARABLE) | set(bench.EXTRA_HEADLINERS) | set(
-        CANARY_QUERIES
-    )
+    perf = set(bench.BASELINE_COMPARABLE) | set(bench.EXTRA_HEADLINERS)
+    for lane in LANES.values():
+        perf |= set(lane.queries)
     assert not (parity & perf), parity & perf
     qs = all_queries()
     for twin in ("window_ntile_scaled", "window_rfm_scaled"):

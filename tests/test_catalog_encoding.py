@@ -250,3 +250,23 @@ def test_get_spark_extra_conf_wins_on_first_call(spark, monkeypatch, tmp_path):
     finally:
         for key in extra:
             spark.conf.set(key, session.RUNTIME_CONFS[key])
+
+
+def test_engine_reads_no_env_var_but_cpus():
+    """Session behaviour is set by code and ``extra_conf``, not by the
+    environment: the one variable the engine package reads is
+    SPARK_GRAFT_CPUS (the local master's core count)."""
+    import re
+
+    import hive_apache_ci_spark
+
+    root = os.path.dirname(hive_apache_ci_spark.__file__)
+    read = re.compile(r"(?:environ\.get|getenv)\(\s*[\"'](\w+)|environ\[\s*[\"'](\w+)")
+    names, uses = set(), 0
+    for dirpath, _, files in os.walk(root):
+        for fn in (f for f in files if f.endswith(".py")):
+            src = open(os.path.join(dirpath, fn)).read()
+            uses += len(re.findall(r"\benviron\b|\bgetenv\b", src))
+            names |= {a or b for a, b in read.findall(src)}
+    assert names == {"SPARK_GRAFT_CPUS"}, names
+    assert uses == 1, "environment read by a name the guard cannot see"

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) for the pure-Python helpers that gate
-round artifacts: the sf1-canary trend rules (ratio-creep flagging and the
+round artifacts: the scale-canary trend rules (ratio-creep flagging and the
 clobber-proof best-ratio merge) and the matchpath pattern compiler. These
 run no Spark session — hundreds of generated cases per run at unit-test
 cost, covering the input space the example-based tests can't enumerate.
@@ -7,20 +7,11 @@ cost, covering the input space the example-based tests can't enumerate.
 
 from __future__ import annotations
 
-import importlib.util
-import os
 import re
 
 from hypothesis import given, settings, strategies as st
 
-_SCRIPT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "scripts",
-    "sf1_canary.py",
-)
-_spec = importlib.util.spec_from_file_location("sf1_canary_props", _SCRIPT)
-canary = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(canary)
+import scripts.scale_canary as canary
 
 _ratios = st.dictionaries(
     st.text(st.characters(min_codepoint=97, max_codepoint=122), min_size=1, max_size=8),

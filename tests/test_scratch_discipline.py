@@ -68,9 +68,9 @@ def test_materialize_stores_rows_then_deletes_scratch(spark, tmp_path):
     assert "FileScan" not in qe.executedPlan().toString()
 
 
-def _engine_sources():
-    """(path relative to the engine package, source) for each module."""
-    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "hive_apache_ci_spark")
+def _sources(subdir: str = "hive_apache_ci_spark"):
+    """(path relative to ``subdir``, source) for each module under it."""
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), subdir)
     for dirpath, _, files in os.walk(root):
         for fn in files:
             if fn.endswith(".py"):
@@ -83,20 +83,25 @@ def test_engine_barriers_go_through_materialize():
     subtree: no other engine module calls a checkpoint itself."""
     callers = {
         rel
-        for rel, src in _engine_sources()
+        for rel, src in _sources()
         if re.search(r"localCheckpoint\(|\.checkpoint\(", src)
     }
     assert callers == {"helpers.py"}, callers
 
 
 def test_no_fixed_shared_tmp_write_paths_in_tree():
-    """Every engine write lands under TMPDIR (``tempfile.gettempdir()``),
-    and only where the path is (a) per-run (RUN_ID/uuid in the path) or
-    (b) content-addressed with atomic publish (the PQ index, the staged
-    events copy). The one literal "/tmp" left is session.py's warehouse
-    default (a build conf; bucketed table names carry RUN_ID)."""
+    """Every engine and script write lands under TMPDIR
+    (``tempfile.gettempdir()``), and only where the path is (a) per-run
+    (RUN_ID/uuid in the path), (b) content-addressed with atomic publish
+    (the PQ index, the staged events copy) or (c) a corpus built by a fixed
+    recipe and published by a marker written last (the scale canary). The
+    one literal "/tmp" left is session.py's warehouse default (a build conf;
+    bucketed table names carry RUN_ID)."""
     tmp_roots, literals = set(), []
-    for rel, src in _engine_sources():
+    sources = list(_sources()) + [
+        (os.path.join("scripts", rel), src) for rel, src in _sources("scripts")
+    ]
+    for rel, src in sources:
         if "gettempdir()" in src:
             tmp_roots.add(rel)
         for m in re.finditer(r"[\"']/tmp\b[^\"'\n]*[\"']", src):
@@ -109,6 +114,9 @@ def test_no_fixed_shared_tmp_write_paths_in_tree():
         "streaming/jobs.py",
         # _pq_index_dir: content-addressed (recipe+mtime key), atomic publish
         "pipeline/similarity.py",
+        # corpus_dir: sf0.1 replicated by a fixed recipe, published by a
+        # .complete marker written last
+        "scripts/scale_canary.py",
     }
     bad = sorted(tmp_roots - allowed_roots)
     assert not bad, f"TMPDIR write roots outside the audited allowlist: {bad}"
