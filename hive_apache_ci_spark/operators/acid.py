@@ -872,6 +872,8 @@ def stream_acid_ingest_history(spark, sf_dir):
     import shutil
     import time
 
+    from ..streaming.jobs import drain
+
     base = run_scratch("acidstream", sf_dir, "ingest")
     chunks = os.path.join(base, "chunks")
     os.makedirs(chunks, exist_ok=True)
@@ -914,20 +916,14 @@ def stream_acid_ingest_history(spark, sf_dir):
         )
         tbl.commit_delta(delta, read_version=batch_id)
 
-    q = (
+    drain(
         spark.readStream.schema("event_id bigint, user_id bigint")
         .option("maxFilesPerTrigger", 1)
         .parquet(chunks)
         .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", os.path.join(base, "ckpt")),
+        "stream_acid_ingest_history",
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("acid ingest stream did not finish")
-    finally:
-        q.stop()
 
     outs = []
     for v in range(tbl.latest_version() + 1):

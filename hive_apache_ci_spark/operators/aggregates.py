@@ -1104,22 +1104,22 @@ _CM_PROBE_K = 10
 def agg_count_min_sketch(spark, sf_dir):
     """Count-Min sketch point-query frequencies (Cormode & Muthukrishnan
     2005) — the counting sketch next to the repo's HLL (distinct), GK
-    (quantiles) and histogram surfaces: {D} hash rows x {W} cells, each
+    (quantiles) and histogram surfaces: `_CM_DEPTH` hash rows x `_CM_WIDTH` cells, each
     order fans into one cell per row (md5-derived column, replayable),
-    and a key's estimate is the MIN over its {D} cells. Probed on the
-    top-{K} true-frequency customers with BOTH published guarantees
+    and a key's estimate is the MIN over its `_CM_DEPTH` cells. Probed on the
+    top-`_CM_PROBE_K` true-frequency customers with BOTH published guarantees
     graded in-plan, per key: `over_ok` (CM never underestimates —
     structural, must always hold) and `bound_ok` (est <= true + ceil(e/W
-    · N), the eps·N overestimate bound that holds w.p. 1-e^-{D}). The
+    · N), the eps·N overestimate bound that holds w.p. 1-e^-`_CM_DEPTH`). The
     exact `freq` table exists only to select probes and grade the bounds
     — the audit, not the operator.
 
-    100 TB: the sketch build is the whole point — a {D}x-row fan-out
-    partially aggregated into {D}·{W} = 1024 cells (constant size at any
-    corpus), never a key-grouped shuffle; cells broadcast to the probe
-    side. The approx-op discipline: emit exact values next to verdict
-    booleans so the sketch's contract hash-oracles instead of the sketch
-    being waved through rows-only."""
+    100 TB: the sketch build is the whole point — a `_CM_DEPTH`x-row fan-out
+    partially aggregated into `_CM_DEPTH`·`_CM_WIDTH` = 1024 cells
+    (constant size at any corpus), never a key-grouped shuffle; cells
+    broadcast to the probe side. The approx-op discipline: emit exact values
+    next to verdict booleans so the sketch's contract hash-oracles instead
+    of the sketch being waved through rows-only."""
     o = T(spark, sf_dir, "orders")
     n = o.agg(F.count(F.lit(1)).alias("n"))
     rows4 = spark.range(_CM_DEPTH).select(F.col("id").cast("int").alias("r"))
@@ -1177,13 +1177,6 @@ def agg_count_min_sketch(spark, sf_dir):
             6,
         ).alias("rel_err"),
     )
-
-
-agg_count_min_sketch.__doc__ = (
-    agg_count_min_sketch.__doc__.replace("{D}", str(_CM_DEPTH))
-    .replace("{W}", str(_CM_WIDTH))
-    .replace("{K}", str(_CM_PROBE_K))
-)
 
 
 @query(
@@ -1755,21 +1748,21 @@ FROM rep r JOIN summ s ON s.flag = r.flag
 
 @query("agg_bootstrap_ci", oracle=_BOOT_SQL)
 def agg_bootstrap_ci(spark, sf_dir):
-    """Poisson bootstrap (Chamandy et al., Google): {B} resampling
+    """Poisson bootstrap (Chamandy et al., Google): `_BOOT_B` resampling
     replicas of mean(l_extendedprice) per returnflag in ONE pass — each
     row contributes w ~ Poisson(1) copies to each replica, with w drawn
     deterministically from md5(rowkey, replica) through fixed 6dp
     inverse-CDF thresholds. Emits every replica mean plus the empirical
     95% CI and bootstrap SE — the scalable alternative to resample-and-
-    recompute (which would rescan the corpus {B} times and need a global
+    recompute (which would rescan the corpus `_BOOT_B` times and need a global
     row index to sample).
 
     Determinism: the weight is integer and hash-derived (bit-replayable);
     the only float sums are the per-replica weighted means, 4dp-shift-cut;
-    the CI quantiles interpolate over {B} deterministic values.
+    the CI quantiles interpolate over `_BOOT_B` deterministic values.
 
-    100 TB: the x{B} fan is map-side (no shuffle amplification — partial
-    aggregation collapses it to |groups| x {B} cells before the
+    100 TB: the x`_BOOT_B` fan is map-side (no shuffle amplification — partial
+    aggregation collapses it to |groups| x `_BOOT_B` cells before the
     exchange); everything downstream runs over 96 rows. This is why
     Poisson bootstrap IS the web-scale bootstrap: one scan, B counters
     per group, no sampling coordination."""
@@ -1834,9 +1827,6 @@ def agg_bootstrap_ci(spark, sf_dir):
         F.col("flag").alias("l_returnflag"),
         "replica", "n_eff", "boot_mean", "ci_lo", "ci_hi", "boot_se",
     )
-
-
-agg_bootstrap_ci.__doc__ = agg_bootstrap_ci.__doc__.replace("{B}", str(_BOOT_B))
 
 
 # ---- weighted median / percentile ------------------------------------------

@@ -472,11 +472,11 @@ def tablesample_fixed_k(spark, sf_dir):
     """Fixed-size uniform sample without replacement — the third sampling
     surface next to Bernoulli (tablesample_seeded) and bucket
     (tablesample_bucket): rank every row by a salted md5 of its key and
-    keep the {K} smallest. This is the distributed equivalent of
+    keep the `_FIXK` smallest. This is the distributed equivalent of
     reservoir sampling with the properties production wants and a
-    reservoir lacks: the SAME {K} rows on every rerun (md5 order is a
+    reservoir lacks: the SAME `_FIXK` rows on every rerun (md5 order is a
     fixed uniform permutation), stable under partitioning/row order, and
-    mergeable (the union's sample = top-{K} of the parts' top-{K}s — the
+    mergeable (the union's sample = top-`_FIXK` of the parts' top-`_FIXK`s — the
     bottom-k-sketch property). Exact row set, so fully hash-oracled —
     no statistical-bound grading needed.
 
@@ -499,11 +499,6 @@ def tablesample_fixed_k(spark, sf_dir):
             F.row_number().over(w).cast("int").alias("rk"),
         )
     )
-
-
-tablesample_fixed_k.__doc__ = tablesample_fixed_k.__doc__.replace(
-    "{K}", str(_FIXK)
-)
 
 
 _ARROW_MAP_ORACLE = """

@@ -842,14 +842,14 @@ FROM toks t LEFT JOIN perdoc p ON t.doc_id = p.doc_id
 @query("dedup_repeated_segments", oracle=_SEG_DEDUP_SQL)
 def dedup_repeated_segments(spark, sf_dir):
     """CCNet-style repeated-segment removal: cut every non-overlapping
-    {S}-token segment that occurs >= {M} times corpus-wide (boilerplate,
-    headers, license blurbs), then reassemble each document from its
-    surviving segments in order. Per doc: segment count, segments dropped,
-    and the md5 of the reassembled text (so the oracle hash-checks the
-    actual surviving CONTENT, not just counts).
+    `_SEG_LEN`-token segment that occurs >= `_SEG_DUP_MIN` times corpus-wide
+    (boilerplate, headers, license blurbs), then reassemble each document
+    from its surviving segments in order. Per doc: segment count, segments
+    dropped, and the md5 of the reassembled text (so the oracle hash-checks
+    the actual surviving CONTENT, not just counts).
 
     100 TB shape: one explode to (doc, seg_idx, segment); the duplicate
-    table is `groupBy(segment).count() >= {M}` — shuffle keyed on segment
+    table is `groupBy(segment).count() >= _SEG_DUP_MIN` — shuffle keyed on segment
     text, map-side partial counts do the heavy lifting since duplicate
     segments collapse early; the cut is a shuffle anti-join on the same
     key (exchange reuse), never a broadcast of the (potentially huge)
@@ -906,11 +906,6 @@ def dedup_repeated_segments(spark, sf_dir):
     )
 
 
-dedup_repeated_segments.__doc__ = dedup_repeated_segments.__doc__.replace(
-    "{S}", str(_SEG_LEN)
-).replace("{M}", str(_SEG_DUP_MIN))
-
-
 # ---- quality-tier mixture table ------------------------------------------
 
 _N_TIERS = 5
@@ -954,16 +949,16 @@ _N_TIERS = 5
 def corpus_quality_tiers(spark, sf_dir):
     """Quality-tier mixture table: score every document (length +
     lexical-diversity composite, 6dp-quantized), split the corpus into
-    {N} equal-mass tiers by exact score quantiles, and report each tier's
+    `_N_TIERS` equal-mass tiers by exact score quantiles, and report each tier's
     document count and token mass/share — the table a data-mixing stage
     consumes to up/down-sample by quality band (the Llama/Gopher-style
     quality-bucket mix).
 
     Scale shape — the boundary-broadcast discipline (window_ntile_scaled's
     pattern): tier boundaries come from ONE exact-percentile aggregate
-    ({NB} doubles, broadcast), and tier assignment is a comparison chain —
+    (`_N_TIERS - 1` doubles, broadcast), and tier assignment is a comparison chain —
     no global window, no single-partition sort anywhere; the per-tier agg
-    is a {N}-key shuffle with map-side partials. Boundaries and scores are
+    is a `_N_TIERS`-key shuffle with map-side partials. Boundaries and scores are
     rounded to the same 6dp before comparison, so tier membership is
     engine-stable."""
     d = T(spark, sf_dir, "documents")
@@ -1011,11 +1006,6 @@ def corpus_quality_tiers(spark, sf_dir):
             ).alias("token_share"),
         )
     )
-
-
-corpus_quality_tiers.__doc__ = corpus_quality_tiers.__doc__.replace(
-    "{N}", str(_N_TIERS)
-).replace("{NB}", str(_N_TIERS - 1))
 
 
 # ---- round 6: quality-annealed curriculum schedule -----------------------
@@ -1083,7 +1073,7 @@ def corpus_curriculum_schedule(spark, sf_dir):
     standard modern pretraining recipe (uniform warmup → mildly quality-
     tilted main run → strongly quality-upweighted annealing phase): score
     every document with the text_quality_score heuristic, cut the corpus
-    into {D} EQUAL-COUNT quality deciles (quantile boundaries broadcast
+    into `_CURR_DECILES` EQUAL-COUNT quality deciles (quantile boundaries broadcast
     back — no global sort, the window_ntile_scaled pattern), apply each
     phase's decile→weight schedule, and emit per (phase, decile) the doc/
     token counts, the weight, and the normalized token share the sampler
@@ -1155,11 +1145,6 @@ def corpus_curriculum_schedule(spark, sf_dir):
             ).alias("token_share"),
         )
     )
-
-
-corpus_curriculum_schedule.__doc__ = corpus_curriculum_schedule.__doc__.replace(
-    "{D}", str(_CURR_DECILES)
-)
 
 
 # ---- round 6: integer token-budget apportionment (largest remainder) -----
@@ -1315,8 +1300,8 @@ def quality_ks_drift(spark, sf_dir):
     comparison. A detected drift is the signal to re-run calibration
     (quality_calibration_report) before trusting learned-filter cuts.
 
-    The scale trick: the ECDF support is the {B}dp-QUANTIZED score grid —
-    at most ~10^{B} distinct points regardless of corpus size — so the
+    The scale trick: the ECDF support is the `_KS_BIN_DP`dp-QUANTIZED score grid —
+    at most ~10^`_KS_BIN_DP` distinct points regardless of corpus size — so the
     one unpartitioned cumulative window runs over a provably tiny
     relation (the same bounded-support argument as vocab_coverage_topk's
     K=100 window; a raw per-doc ECDF would be the single-partition trap).
@@ -1391,11 +1376,6 @@ def quality_ks_drift(spark, sf_dir):
             (stat_sq > _KS_CRIT_SQ).alias("drift_detected"),
         )
     )
-
-
-quality_ks_drift.__doc__ = quality_ks_drift.__doc__.replace(
-    "{B}", str(_KS_BIN_DP)
-)
 
 
 @query(
@@ -1536,7 +1516,7 @@ def corpus_upsample_epochs(spark, sf_dir):
     < that doc's length — reported). The epochs/repetition step every
     under-represented-language pretraining mix materializes via
     explode(sequence(1, repeats)); the report certifies the assignment
-    with an exact integer digest Σ (doc_id mod {_EPOCH_DIGEST_MOD}) ·
+    with an exact integer digest Σ (doc_id mod `_EPOCH_DIGEST_MOD`) ·
     repeats, so the oracle grades the per-doc repeat vector itself, not
     just the totals.
 
@@ -1656,8 +1636,8 @@ def _cemb_oracle() -> str:
 @query("contamination_embedding", oracle=_cemb_oracle())
 def contamination_embedding(spark, sf_dir):
     """Embedding-level benchmark decontamination: flag corpus vectors whose
-    cosine against any held-out benchmark vector (vec_id % {M} == 0)
-    exceeds {T} — the paraphrase-level contamination screen that
+    cosine against any held-out benchmark vector (vec_id % `_CEMB_MOD` == 0)
+    exceeds `_CEMB_TH` — the paraphrase-level contamination screen that
     complements contamination_ngram's surface-overlap check (SemDeDup-
     style eval-set leakage detection). Per contaminated vector: hit
     count, best similarity, best-matching benchmark id (ties to the
@@ -1721,11 +1701,6 @@ def contamination_embedding(spark, sf_dir):
         F.max("sim").alias("best_sim"),
         best.getField("bid").alias("best_bench_id"),
     )
-
-
-contamination_embedding.__doc__ = contamination_embedding.__doc__.replace(
-    "{M}", str(_CEMB_MOD)
-).replace("{T}", str(_CEMB_TH))
 
 
 # ---- blocklist filtering (C4/RefinedWeb-style word filters) -------------
@@ -1842,7 +1817,7 @@ GROUP BY shard
 @query("corpus_shuffle_shards", oracle=_SHARDS_SQL)
 def corpus_shuffle_shards(spark, sf_dir):
     """Deterministic global shuffle into training shards: every document
-    gets a seeded md5 order key; shard = key mod {N}; within-shard order =
+    gets a seeded md5 order key; shard = key mod `_N_SHARDS`; within-shard order =
     (key, doc_id). The audit report per shard: row/char mass (balance),
     a commutative 32-bit id digest (content identity — two runs or two
     engines producing the same shards sum to the same digest), the shard's
@@ -1887,11 +1862,6 @@ def corpus_shuffle_shards(spark, sf_dir):
     )
 
 
-corpus_shuffle_shards.__doc__ = corpus_shuffle_shards.__doc__.replace(
-    "{N}", str(_N_SHARDS)
-)
-
-
 # ---- round 9: sentence-aware RAG chunking --------------------------------
 
 _SENT_BUDGET = 48  # target tokens per chunk
@@ -1934,7 +1904,7 @@ def doc_chunk_sentences(spark, sf_dir):
     mid-way — the text is split on sentence boundaries ([.!?] + space via
     a backreference rewrite to a \\x01 marker, no lookbehind so the
     same regex family works on RE2-based engines), then sentences pack
-    into ~{B}-token chunks by the running-token-count rule chunk =
+    into ~`_SENT_BUDGET`-token chunks by the running-token-count rule chunk =
     floor((cumsum - toks) / budget) — deterministic, order-preserving,
     and expressible on both engines as one window + one group-by. The
     chunk text is rebuilt in sentence order (position-sorted on both
@@ -1985,8 +1955,3 @@ def doc_chunk_sentences(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_sentences"),
         )
     )
-
-
-doc_chunk_sentences.__doc__ = doc_chunk_sentences.__doc__.replace(
-    "{B}", str(_SENT_BUDGET)
-)

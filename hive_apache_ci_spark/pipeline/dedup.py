@@ -182,8 +182,8 @@ _MINHASH_ORACLE = f"""
 
 @query("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
 def dedup_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH candidate pairs ({N_HASHES} hashes, {N_BANDS} bands x
-    {BAND_ROWS} rows): documents sharing any full band signature. The
+    """MinHash+LSH candidate pairs (`N_HASHES` hashes, `N_BANDS` bands x
+    `BAND_ROWS` rows): documents sharing any full band signature. The
     oracle recomputes identical md5-based signatures in SQL — this is a
     fully-verified LSH, not a rows-only approximation."""
     d = T(spark, sf_dir, "documents")
@@ -321,14 +321,14 @@ _CONTAIN_ORACLE = f"""
 @query("dedup_containment", oracle=_CONTAIN_ORACLE)
 def dedup_containment(spark, sf_dir):
     """Shingle-containment dedup: directed containment
-    C(A→B) = |shingles(A) ∩ shingles(B)| / |shingles(A)| ≥ {TH} flags doc A
-    as (near-)subsumed by doc B — the asymmetric complement of Jaccard that
-    catches a short doc quoted whole inside a long one, which symmetric
-    Jaccard misses because the union is dominated by the long doc
+    C(A→B) = |shingles(A) ∩ shingles(B)| / |shingles(A)| ≥ `_CONTAIN_TH`
+    flags doc A as (near-)subsumed by doc B — the asymmetric complement of
+    Jaccard that catches a short doc quoted whole inside a long one, which
+    symmetric Jaccard misses because the union is dominated by the long doc
     (Broder's containment measure). Same shared-shingle join + >10%-df hot
     cut as ``dedup_ngram_jaccard``: one intersection count per unordered
-    pair, then BOTH directions are scored from that single count (no
-    second pairwise join)."""
+    pair, then BOTH directions are scored from that single count (no second
+    pairwise join)."""
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
     sh0 = d.select("doc_id", F.explode(_shingles(F.col("text"))).alias("shingle"))
     hot = (
@@ -370,9 +370,6 @@ def dedup_containment(spark, sf_dir):
     return fwd.unionAll(rev)
 
 
-dedup_containment.__doc__ = dedup_containment.__doc__.replace("{TH}", str(_CONTAIN_TH))
-
-
 _SIMHASH_BITS = 16
 
 
@@ -398,7 +395,7 @@ _SIMHASH_BITS = 16
     """,
 )
 def dedup_simhash(spark, sf_dir):
-    """SimHash fingerprint ({_SIMHASH_BITS}-bit, md5-nibble parity votes):
+    """SimHash fingerprint (`_SIMHASH_BITS`-bit, md5-nibble parity votes):
     per-bit majority over the document's distinct tokens. Near-dups land at
     small Hamming distance; the fingerprint doubles as a dedup shard key."""
     d = T(spark, sf_dir, "documents")
@@ -461,7 +458,7 @@ def _embedding_dedup_oracle() -> str:
 @query("dedup_embedding_cosine", oracle=_embedding_dedup_oracle())
 def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-dup: LSH-bucketed candidate pairs (never the
-    n² cross product), exact cosine above {_COS_DEDUP_TH} confirms, each
+    n² cross product), exact cosine above `_COS_DEDUP_TH` confirms, each
     vector collapses to its smallest-id confirmed neighbor. Fully oracled —
     DuckDB rebuilds the identical md5-plane LSH index and thresholding.
 
@@ -738,7 +735,7 @@ def _pagerank_oracle() -> str:
 
 @query("pagerank_similarity_graph", oracle=_pagerank_oracle())
 def pagerank_similarity_graph(spark, sf_dir):
-    """PageRank over the confirmed near-dup graph ({_PR_ITERS} fixed
+    """PageRank over the confirmed near-dup graph (`_PR_ITERS` fixed
     power-iterations, damping 0.85) — the link-centrality quality signal
     crawl pipelines attach to documents (CommonCrawl host ranks). Isolated
     vertices hold the teleport mass; each iteration is ONE shuffle keyed by
@@ -746,7 +743,7 @@ def pagerank_similarity_graph(spark, sf_dir):
     ``materialize`` truncates the per-round lineage exactly as in
     `dedup_connected_components`.
 
-    Fully oracled (round 3): DuckDB replays the identical {_PR_ITERS}
+    Fully oracled (round 3): DuckDB replays the identical `_PR_ITERS`
     unrolled iterations over the same LSH-confirmed edge set; per-vertex
     float-sum ordering differs across engines but the graphs are sparse and
     the 9-dp permille rounding absorbs it (verified MATCH at sf0.001 and
@@ -814,7 +811,8 @@ def _lpa_chain_sql() -> str:
     LPA oracle and the modularity readout): per iteration, one
     neighbor-label frequency CTE, one per-node argmax (count desc, label
     asc — deterministic), one carry-forward for isolated nodes. Same
-    LSH-confirmed edge set as PageRank. Ends at l{_LPA_ITERS}."""
+    LSH-confirmed edge set as PageRank. Ends at the ``l`` CTE of round
+    `_LPA_ITERS`."""
     from .similarity import _cos_sql, lsh_tb_cte_sql
 
     parts = [
@@ -873,7 +871,7 @@ def _lpa_oracle() -> str:
 @query("graph_label_propagation", oracle=_lpa_oracle())
 def graph_label_propagation(spark, sf_dir):
     """Community detection by synchronous label propagation over the
-    confirmed near-dup graph ({_LPA_ITERS} fixed iterations): every node
+    confirmed near-dup graph (`_LPA_ITERS` fixed iterations): every node
     starts in its own community and repeatedly adopts the most frequent
     label among its neighbors, ties broken toward the smallest label so the
     update is fully deterministic (async/random-order LPA is the classic
@@ -924,11 +922,6 @@ def _lpa_labels(spark, sf_dir):
             )
         )
     return labels, edges
-
-
-graph_label_propagation.__doc__ = graph_label_propagation.__doc__.replace(
-    "{_LPA_ITERS}", str(_LPA_ITERS)
-)
 
 
 # ---- 9. cluster-size report over the CC dedup ---------------------------
@@ -1189,23 +1182,23 @@ def _bloom_oracle() -> str:
 def dedup_bloom_prefilter(spark, sf_dir):
     """The bloom-tier topology dedup_fingerprint_prefilter's docstring
     names as the past-broadcast upgrade path, delivered (r6 verdict #4):
-    tier 1 is a REAL m-bit / k={K}-hash bloom filter over the base
-    corpus's prefix fingerprints — m = {B}·|fp set| bits (~2 bytes/key vs
-    the fp table's 4), k md5-derived bit positions per key, a document
-    survives only if ALL k of its positions are set. Spark's internal
-    ``bloom_filter_agg``/``might_contain`` pair implements exactly this
-    shape but is not in the public function registry of this build
+    tier 1 is a REAL m-bit / k=`_BLOOM_K`-hash bloom filter over the base
+    corpus's prefix fingerprints — m = `_BLOOM_BITS_PER_KEY`·|fp set| bits
+    (~2 bytes/key vs the fp table's 4), k md5-derived bit positions per key,
+    a document survives only if ALL k of its positions are set. Spark's
+    internal ``bloom_filter_agg``/``might_contain`` pair implements exactly
+    this shape but is not in the public function registry of this build
     (probed: UNRESOLVED_ROUTINE), so the bit array is computed as a
     distinct-positions table — which also makes the filter REPLAYABLE:
-    DuckDB rebuilds the identical bit set, so the candidate tier itself
-    is hash-oracled, not just bounded (no other bloom implementation
-    could be graded this hard). No false negatives structurally: a base
-    key's positions are all set by construction, so an identical incoming
-    fingerprint always passes; false positives (k-position collisions)
-    cost one confirm probe each and the rate is tunable by m — the
-    textbook bloom trade.
+    DuckDB rebuilds the identical bit set, so the candidate tier itself is
+    hash-oracled, not just bounded (no other bloom implementation could be
+    graded this hard). No false negatives structurally: a base key's
+    positions are all set by construction, so an identical incoming
+    fingerprint always passes; false positives (k-position collisions) cost
+    one confirm probe each and the rate is tunable by m — the textbook bloom
+    trade.
 
-    100 TB shape: the bits relation is ~{B} bits/key regardless of key
+    100 TB: the bits relation is ~`_BLOOM_BITS_PER_KEY` bits/key regardless of key
     width and ships as a broadcast (or, past driver memory, stays a
     shuffle semi-join on `pos` — the same plan shape, no rewrite); the
     probe explodes each batch doc into k narrow (pos) rows, so tier-1
@@ -1277,12 +1270,6 @@ def dedup_bloom_prefilter(spark, sf_dir):
         F.when(F.col("dup_of_base").isNotNull(), 1).otherwise(0).alias("is_dup"),
         "dup_of_base",
     )
-
-
-dedup_bloom_prefilter.__doc__ = (
-    dedup_bloom_prefilter.__doc__.replace("{K}", str(_BLOOM_K))
-    .replace("{B}", str(_BLOOM_BITS_PER_KEY))
-)
 
 
 # ---- 11. cross-modal near-dup confirm -----------------------------------
@@ -1572,19 +1559,19 @@ def _kcore_oracle() -> str:
 
 @query("graph_kcore_membership", oracle=_kcore_oracle())
 def graph_kcore_membership(spark, sf_dir):
-    """{K}-core decomposition of the confirmed near-dup graph by iterative
-    peeling ({R} fixed rounds): repeatedly drop vertices with degree < {K}
-    and the edges touching them. The surviving core is the dense
-    duplicate-mass region (clusters worth aggressive collapse); peeled
-    vertices are weakly-attached near-dups that transitive closure would
-    over-merge. Emits per vector the core verdict and its within-core
+    """`_KCORE_K`-core decomposition of the confirmed near-dup graph by iterative
+    peeling (`_KCORE_ROUNDS` fixed rounds): repeatedly drop vertices with
+    degree < `_KCORE_K` and the edges touching them. The surviving core is
+    the dense duplicate-mass region (clusters worth aggressive collapse);
+    peeled vertices are weakly-attached near-dups that transitive closure
+    would over-merge. Emits per vector the core verdict and its within-core
     degree.
 
     100 TB shape: each peel round is one groupBy(vertex) degree count plus
     one semi-join of edges against surviving vertices — O(edges) per
     round, the same bounded-iteration discipline as PageRank/LPA, lineage
     cut per round with materialize; the oracle unrolls the identical
-    {R} rounds."""
+    `_KCORE_ROUNDS` rounds."""
     e = T(spark, sf_dir, "embeddings")
     pairs = _confirmed_cosine_pairs(spark, sf_dir)
     edges = materialize(
@@ -1619,11 +1606,6 @@ def graph_kcore_membership(spark, sf_dir):
             F.coalesce("deg", F.lit(0)).cast("bigint").alias("core_degree"),
         )
     )
-
-
-graph_kcore_membership.__doc__ = graph_kcore_membership.__doc__.replace(
-    "{K}", str(_KCORE_K)
-).replace("{R}", str(_KCORE_ROUNDS))
 
 
 # ---- dedup threshold-sensitivity sweep -----------------------------------
@@ -1798,7 +1780,7 @@ _EVAL_TH = 0.2  # ground-truth Jaccard cutoff
 def dedup_minhash_eval(spark, sf_dir):
     """Index-quality evaluation of the MinHash-LSH candidate generator:
     on a bounded slice, compare its candidate pairs against exact-Jaccard
-    ground truth (>= {TH}) and report precision/recall — the measurement a
+    ground truth (>= `_EVAL_TH`) and report precision/recall — the measurement a
     data team runs before trusting an approximate index at 100 TB, here as
     an ORACLED query (both the index and the truth are deterministic, so
     even the evaluation hash-matches). Exact pairwise truth is affordable
@@ -1882,11 +1864,6 @@ def dedup_minhash_eval(spark, sf_dir):
             ).alias("recall"),
         )
     )
-
-
-dedup_minhash_eval.__doc__ = dedup_minhash_eval.__doc__.replace(
-    "{TH}", str(_EVAL_TH)
-)
 
 
 # ---- dedup ladder funnel report ------------------------------------------
@@ -2008,7 +1985,7 @@ def _ladder_oracle() -> str:
 def dedup_ladder_report(spark, sf_dir):
     """The production dedup LADDER as one composed dataflow, reported as a
     funnel: (1) exact content-hash dedup, (2) MinHash-LSH candidates
-    confirmed by exact shingle Jaccard >= {TH} (cheap surface dup), (3)
+    confirmed by exact shingle Jaccard >= `_LADDER_JACC_TH` (cheap surface dup), (3)
     embedding-cosine near-dup among the survivors (semantic dup) — each
     stage consuming the previous stage's survivor set, which is how the
     stages interact in a real 100 TB corpus build (cheapest filter first,
@@ -2092,11 +2069,6 @@ def dedup_ladder_report(spark, sf_dir):
     )
 
 
-dedup_ladder_report.__doc__ = dedup_ladder_report.__doc__.replace(
-    "{TH}", str(_LADDER_JACC_TH)
-)
-
-
 # ---- round 7: incremental near-dup (MinHash-LSH batch-vs-base) -----------
 
 _MH_SIG_CTES = f"""
@@ -2165,8 +2137,8 @@ def dedup_minhash_incremental(spark, sf_dir):
     corpus's band signatures act as the persisted LSH index, today's batch
     (md5-bucket 20%) computes its own bands and probes them, and each
     surviving (batch, base) candidate is scored by SIGNATURE AGREEMENT —
-    the fraction of the {H} minhashes that coincide, the standard unbiased
-    Jaccard estimate, computed from the 2x{H} ints alone (the raw shingle
+    the fraction of the `N_HASHES` minhashes that coincide, the standard unbiased
+    Jaccard estimate, computed from the 2x`N_HASHES` ints alone (the raw shingle
     sets are never touched post-signature, which is the entire economics
     of storing an LSH index). Per batch doc: candidate count, best base
     match by (agreement desc, base_id) and its agreement score. All
@@ -2174,7 +2146,7 @@ def dedup_minhash_incremental(spark, sf_dir):
     verifies candidates AND scores.
 
     100 TB: base bands are the stored index (band-keyed layout); the probe
-    shuffles only the batch's {B} band rows/doc; agreement joins are keyed
+    shuffles only the batch's `N_BANDS` band rows/doc; agreement joins are keyed
     on candidate doc ids (bounded by candidate volume, which LSH keeps
     sub-quadratic); the per-doc best is a window on the doc-keyed
     exchange, never global."""
@@ -2243,12 +2215,6 @@ def dedup_minhash_incremental(spark, sf_dir):
     )
 
 
-dedup_minhash_incremental.__doc__ = (
-    dedup_minhash_incremental.__doc__.replace("{H}", str(N_HASHES))
-    .replace("{B}", str(N_BANDS))
-)
-
-
 # ---- multi-source BFS from landmark vertices ------------------------------
 
 _BFS_HOPS = 4
@@ -2290,13 +2256,14 @@ def _bfs_oracle() -> str:
 
 @query("graph_bfs_landmarks", oracle=_bfs_oracle())
 def graph_bfs_landmarks(spark, sf_dir):
-    """Multi-source BFS hop distance (<= {H} hops) from {L} landmark
-    vertices over the confirmed near-dup graph — the landmark-distance
-    sketch behind graph dedup triage and approximate shortest-path
-    queries (dist(u,v) <= dist(u,lmk) + dist(lmk,v)). Landmarks are the
-    {L} smallest vertex ids present in the edge set (deterministic).
+    """Multi-source BFS hop distance (<= `_BFS_HOPS` hops) from
+    `_BFS_LANDMARKS` landmark vertices over the confirmed near-dup graph —
+    the landmark-distance sketch behind graph dedup triage and approximate
+    shortest-path queries (dist(u,v) <= dist(u,lmk) + dist(lmk,v)).
+    Landmarks are the `_BFS_LANDMARKS` smallest vertex ids present in the
+    edge set (deterministic).
 
-    Spark runs textbook frontier BFS: {H} rounds of frontier-joins-adj,
+    Spark runs textbook frontier BFS: `_BFS_HOPS` rounds of frontier-joins-adj,
     anti-joined against the visited set so each (landmark, vertex) settles
     at its first (= minimal) hop count, per-round state materialized.
     The oracle replays it as a UNION-mode (distinct) recursive CTE and
@@ -2339,11 +2306,6 @@ def graph_bfs_landmarks(spark, sf_dir):
         dist = materialize(dist.union(new))
         frontier = new
     return dist.select("lmk", "v", F.col("d").cast("bigint").alias("dist"))
-
-
-graph_bfs_landmarks.__doc__ = graph_bfs_landmarks.__doc__.replace(
-    "{H}", str(_BFS_HOPS)
-).replace("{L}", str(_BFS_LANDMARKS))
 
 
 # ---- survivorship: keep the best-quality doc per near-dup cluster ----------
@@ -2502,10 +2464,10 @@ HAVING max(pos_a) - min(pos_a) + {_ESUB_K} >= {_ESUB_MIN_RUN}
 
 @query("dedup_exact_substring", oracle=_ESUB_SQL)
 def dedup_exact_substring(spark, sf_dir):
-    """Maximal cross-document exact-substring runs >= {R} tokens (Lee et
-    al. 2021 exact-substring dedup, seed-and-extend form): {K}-token
+    """Maximal cross-document exact-substring runs >= `_ESUB_MIN_RUN` tokens (Lee et
+    al. 2021 exact-substring dedup, seed-and-extend form): `_ESUB_K`-token
     sliding windows with positions, document-frequency-bounded (windows in
-    >{D} docs are boilerplate and would fan the pair join quadratically —
+    >`_ESUB_MAX_DF` docs are boilerplate and would fan the pair join quadratically —
     cut BEFORE pairing, the dedup_ngram_jaccard discipline), equi-joined
     on window text to seed hit coordinates, then consecutive seeds on the
     same (pair, pos_a - pos_b) diagonal merge into maximal runs via ONE
@@ -2575,13 +2537,6 @@ def dedup_exact_substring(spark, sf_dir):
         .filter(F.col("run_tokens") >= _ESUB_MIN_RUN)
     )
     return runs.select("doc_a", "doc_b", "start_a", "start_b", "run_tokens")
-
-
-dedup_exact_substring.__doc__ = (
-    dedup_exact_substring.__doc__.replace("{R}", str(_ESUB_MIN_RUN))
-    .replace("{K}", str(_ESUB_K))
-    .replace("{D}", str(_ESUB_MAX_DF))
-)
 
 
 # ---- community quality: Newman modularity ---------------------------------

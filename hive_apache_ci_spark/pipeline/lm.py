@@ -70,7 +70,7 @@ FROM topk
 
 @query("vocab_coverage_topk", oracle=_VOCAB_SQL)
 def vocab_coverage_topk(spark, sf_dir):
-    """Vocabulary head report: top-{_TOPK} tokens by corpus count, with
+    """Vocabulary head report: top-`_TOPK` tokens by corpus count, with
     document frequency, token share, and cumulative coverage share.
 
     Scale: the vocab groupBy is the only big shuffle; top-K is Spark's
@@ -265,7 +265,7 @@ FROM cnt ORDER BY n DESC, bigram LIMIT {_BIGRAM_TOPK}
 
 @query("corpus_bigram_counts", oracle=_BIGRAM_SQL)
 def corpus_bigram_counts(spark, sf_dir):
-    """Corpus bigram frequency head (top-{_BIGRAM_TOPK} with doc
+    """Corpus bigram frequency head (top-`_BIGRAM_TOPK` with doc
     frequency) — the n-gram count table LM tokenizer/merge steps consume
     (BPE merge candidates are exactly high-frequency adjacent pairs).
     Non-distinct bigrams per doc (counts weight repetitions), one explode
@@ -306,7 +306,8 @@ def _bpe_ctes() -> str:
     symbol array with a string accumulator whose last token is tested via
     ``LIKE '% ' || l`` (symbols never contain spaces or LIKE wildcards —
     lowercase word chars plus '</w>' and their concatenations). Final
-    segmentation state = s{K}; shared by the learn and encode oracles."""
+    segmentation state is the ``s`` CTE of step `_BPE_MERGES`; shared by the
+    learn and encode oracles."""
     parts = [
         f"""
     tok AS (
@@ -378,7 +379,7 @@ aggregate(
 
 @query("bpe_learn_merges", oracle=_bpe_oracle())
 def bpe_learn_merges(spark, sf_dir):
-    """Distributed BPE tokenizer induction: learn the first {K} merge rules
+    """Distributed BPE tokenizer induction: learn the first `_BPE_MERGES` merge rules
     (Sennrich-style byte-pair encoding over the word-frequency table) and
     emit (step, left_sym, right_sym, pair_count). Each iteration is (1) an
     adjacent-pair count over the current segmentation, (2) a global argmax
@@ -396,7 +397,7 @@ def bpe_learn_merges(spark, sf_dir):
     tokenizer trainers (HuggingFace tokenizers, SentencePiece on Spark)
     structure the counting phase.
 
-    DuckDB oracle: the same {K} iterations unrolled as CTEs (pagerank
+    DuckDB oracle: the same `_BPE_MERGES` iterations unrolled as CTEs (pagerank
     pattern), with the identical fold replayed via list_reduce — exact
     integer counts, so no float tolerance is needed anywhere."""
     _, merges = _bpe_train(spark, sf_dir)
@@ -475,7 +476,7 @@ GROUP BY d.doc_id
 @query("bpe_encode_corpus", oracle=_bpe_encode_oracle())
 def bpe_encode_corpus(spark, sf_dir):
     """BPE ENCODING — the apply side completing bpe_learn_merges: train
-    the {K}-rule merge table, keep the final per-word segmentation (the
+    the `_BPE_MERGES`-rule merge table, keep the final per-word segmentation (the
     subword lexicon), and tokenize the corpus against it: per document,
     word count, subword count after the merges, and subwords-per-word (the
     fertility metric tokenizer teams track). Encoding through the WORD
@@ -485,7 +486,7 @@ def bpe_encode_corpus(spark, sf_dir):
     a Zipf-sized saving (occurrences/type ≫ 1). The join shuffles on the
     word key (AQE broadcasts when the lexicon fits); the per-doc agg is
     the only other shuffle. Fully oracled: the DuckDB side unrolls the
-    same {K} merges and re-derives the identical lexicon."""
+    same `_BPE_MERGES` merges and re-derives the identical lexicon."""
     state, _ = _bpe_train(spark, sf_dir)
     enc = state.select(
         "word", F.size(F.split("sym", " ")).alias("n_sub")
@@ -503,14 +504,6 @@ def bpe_encode_corpus(spark, sf_dir):
             ).alias("subwords_per_word"),
         )
     )
-
-
-bpe_encode_corpus.__doc__ = bpe_encode_corpus.__doc__.replace(
-    "{K}", str(_BPE_MERGES)
-)
-
-
-bpe_learn_merges.__doc__ = bpe_learn_merges.__doc__.replace("{K}", str(_BPE_MERGES))
 
 
 # ---- DSIR-style hashed-feature importance weights ------------------------
@@ -555,12 +548,12 @@ GROUP BY o.doc_id
 def dsir_importance_weights(spark, sf_dir):
     """DSIR-style data selection (Xie et al. 2023): per-document importance
     weight = mean over tokens of ln(p_target/p_source) under add-1-smoothed
-    hashed-unigram LMs (feature space = {B} md5 buckets; target domain =
-    lang='{TGT}' docs, source = the whole corpus). Docs whose token
+    hashed-unigram LMs (feature space = `_DSIR_B` md5 buckets; target domain =
+    lang = `_DSIR_TGT` docs, source = the whole corpus). Docs whose token
     distribution resembles the target get logw > 0 and would be upsampled
     by an importance resampler (sample_weighted_hash is the mechanism).
 
-    100 TB shape: the feature tables collapse to {B} rows each (broadcast,
+    100 TB shape: the feature tables collapse to `_DSIR_B` rows each (broadcast,
     regardless of corpus size) — that collapse is the whole point of
     DSIR's hashing trick; per-doc scoring is one groupBy(doc_id, bucket)
     count plus a broadcast join, so the only corpus-sized shuffle is keyed
@@ -625,11 +618,6 @@ def dsir_importance_weights(spark, sf_dir):
             ).alias("logw"),
         )
     )
-
-
-dsir_importance_weights.__doc__ = dsir_importance_weights.__doc__.replace(
-    "{B}", str(_DSIR_B)
-).replace("{TGT}", _DSIR_TGT)
 
 
 # ---- vocabulary-size OOV sweep -------------------------------------------
@@ -752,7 +740,7 @@ GROUP BY d.doc_id
 @query("quality_kn_bigram_perplexity", oracle=_kn_oracle())
 def quality_kn_bigram_perplexity(spark, sf_dir):
     """Interpolated Kneser-Ney bigram perplexity per document (absolute
-    discount D={D}) — the stronger LM-based quality signal beyond the
+    discount D=`_KN_D`) — the stronger LM-based quality signal beyond the
     add-1 unigram ppl (quality_lm_perplexity): P(w2|w1) = (max(c(w1,w2)-D,
     0) + D·N1+(w1·)·P_cont(w2)) / c(w1·), with the continuation
     probability P_cont(w2) = N1+(·w2)/|bigram types| — the smoothing that
@@ -826,11 +814,6 @@ def quality_kn_bigram_perplexity(spark, sf_dir):
     )
 
 
-quality_kn_bigram_perplexity.__doc__ = quality_kn_bigram_perplexity.__doc__.replace(
-    "{D}", str(_KN_D)
-)
-
-
 # ---- 8. PMI collocation mining ------------------------------------------
 
 _PMI_MIN_CNT = 5   # bigram count floor — kills noise pairs before ranking
@@ -888,8 +871,8 @@ FROM scored ORDER BY pmi DESC, bigram LIMIT {_PMI_TOPK}
 
 @query("quality_pmi_collocations", oracle=_PMI_SQL)
 def quality_pmi_collocations(spark, sf_dir):
-    """Pointwise-mutual-information collocation mining: top-{K} bigrams by
-    PMI = log2(p(xy) / (p(x)p(y))) with a count floor of {M} — the
+    """Pointwise-mutual-information collocation mining: top-`_PMI_TOPK` bigrams by
+    PMI = log2(p(xy) / (p(x)p(y))) with a count floor of `_PMI_MIN_CNT` — the
     association-strength companion to `corpus_bigram_counts`' raw
     frequency head (frequency finds 'of the'; PMI finds the genuinely
     bound pairs a tokenizer should keep whole).
@@ -903,7 +886,7 @@ def quality_pmi_collocations(spark, sf_dir):
     join. Ranking is a distributed TakeOrdered over the floor survivors,
     never a global sort. PMI is a fixed-order sum of log2 terms, rounded
     BEFORE the rank cut (rounded-value ties break on the bigram string),
-    so the top-{K} membership itself is engine-stable."""
+    so the top-`_PMI_TOPK` membership itself is engine-stable."""
     from ..functions.hive_compat import ngram_array
 
     d = T(spark, sf_dir, "documents")
@@ -947,11 +930,6 @@ def quality_pmi_collocations(spark, sf_dir):
     )
 
 
-quality_pmi_collocations.__doc__ = quality_pmi_collocations.__doc__.replace(
-    "{K}", str(_PMI_TOPK)
-).replace("{M}", str(_PMI_MIN_CNT))
-
-
 # ---- greedy decoding from the bigram LM -----------------------------------
 
 _GEN_STEPS = 12
@@ -993,7 +971,7 @@ SELECT step, token, cnt FROM walk
 @query("lm_greedy_generation", oracle=_GEN_SQL)
 def lm_greedy_generation(spark, sf_dir):
     """Greedy (argmax) decoding from the corpus bigram LM: seed with the
-    most frequent token, then {S} steps of next = argmax_w count(prev, w)
+    most frequent token, then `_GEN_STEPS` steps of next = argmax_w count(prev, w)
     — the deterministic skeleton of LM inference (beam width 1,
     temperature 0) run entirely as dataflow: no trained weights, the
     count table IS the model. Emits the decoded sequence with each
@@ -1048,11 +1026,6 @@ def lm_greedy_generation(spark, sf_dir):
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
-
-
-lm_greedy_generation.__doc__ = lm_greedy_generation.__doc__.replace(
-    "{S}", str(_GEN_STEPS)
-)
 
 
 # ---- perplexity-filter threshold sweep -------------------------------------

@@ -26,6 +26,7 @@ from pyspark.sql import types as Ty
 
 from ..helpers import T
 from ..registry import query
+from .similarity import dot_fold
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -421,9 +422,9 @@ WHERE rk = 1
 @query("multimodal_crossmodal_match", oracle=_XM_SQL)
 def multimodal_crossmodal_match(spark, sf_dir):
     """Cross-modal retrieval (CLIP-style topology, stub encoders): a
-    mapInPandas image encoder derives an {D}-dim pseudo-embedding from
+    mapInPandas image encoder derives an `_XM_DIM`-dim pseudo-embedding from
     each binary payload's md5 digest bytes; the caption side is the first
-    {D} dims of the embeddings table; every image matches its best
+    `_XM_DIM` dims of the embeddings table; every image matches its best
     caption by cosine. The stub bodies are swappable for real CLIP
     towers — what the oracle certifies is the TOPOLOGY: Arrow-batched
     encode, broadcast caption tower, pairwise cosine over the candidate
@@ -436,7 +437,7 @@ def multimodal_crossmodal_match(spark, sf_dir):
     100 TB: the caption tower broadcasts (or LSH-buckets, as in
     contamination_embedding, when it outgrows a broadcast); the encode is
     columnar Arrow batches; the match block is map-side. The deliberate
-    {I}x{C} dense block here stands in for the per-bucket block of the
+    `_XM_DOCS`x`_XM_CAPS` dense block here stands in for the per-bucket block of the
     bucketed form."""
     d = with_binary_payload(
         T(spark, sf_dir, "documents").filter(F.col("doc_id") < _XM_DOCS)
@@ -456,11 +457,7 @@ def multimodal_crossmodal_match(spark, sf_dir):
             ).alias("temb"),
         )
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("iemb"), F.col("temb"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = dot_fold("iemb", "temb")
     nrm = lambda c: F.sqrt(  # noqa: E731
         F.aggregate(
             F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
@@ -487,13 +484,6 @@ def multimodal_crossmodal_match(spark, sf_dir):
             "sim",
         )
     )
-
-
-multimodal_crossmodal_match.__doc__ = (
-    multimodal_crossmodal_match.__doc__.replace("{D}", str(_XM_DIM))
-    .replace("{I}", str(_XM_DOCS))
-    .replace("{C}", str(_XM_CAPS))
-)
 
 
 # ---- round 9: REAL image-header decode (pure-Python PNG/JPEG parser) -------

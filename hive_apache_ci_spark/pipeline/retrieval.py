@@ -34,6 +34,24 @@ from pyspark.sql import functions as F
 
 from ..helpers import T, materialize
 from ..registry import query
+from .similarity import (
+    _FULL_D2_SQL,
+    _IVF_PROBE,
+    _PQ_ITERS,
+    _PQ_M,
+    _PQ_SUB,
+    _SUB_D2_SQL,
+    _coarse_ctes,
+    _cos_sql,
+    _ensure_pq_index,
+    _label_order,
+    _pq_ctes,
+    dot_fold,
+    explode_dims,
+    mean_vectors,
+    pq_adc,
+    sq_l2,
+)
 
 _TOKENS_SQL = """
       SELECT doc_id, t AS term
@@ -323,7 +341,7 @@ _QL_ORACLE = f"""
 @query("search_query_likelihood", oracle=_QL_ORACLE)
 def search_query_likelihood(spark, sf_dir):
     """Dirichlet-smoothed query-likelihood retrieval (Zhai & Lafferty):
-    score(q,d) = Σ_t ln((tf_td + μ·p(t|C)) / (|d| + μ)), μ={MU} — the
+    score(q,d) = Σ_t ln((tf_td + μ·p(t|C)) / (|d| + μ)), μ=`_QL_MU` — the
     language-modeling ranking family next to BM25's probabilistic one.
     Smoothing means every document scores against every query term (tf=0
     falls back to the collection model), so the dataflow densifies: doc
@@ -367,11 +385,6 @@ def search_query_likelihood(spark, sf_dir):
     )
 
 
-search_query_likelihood.__doc__ = search_query_likelihood.__doc__.replace(
-    "{MU}", str(_QL_MU)
-)
-
-
 # ---- round 6: hybrid retrieval — reciprocal-rank fusion ------------------
 
 _RRF_K = 60       # the standard RRF damping constant (Cormack et al.)
@@ -379,33 +392,19 @@ _RRF_PRF_DOCS = 5  # BM25 top-N whose embedding mean forms the vector query
 _RRF_ARM_K = 20    # per-arm depth
 _RRF_OUT_K = 10    # fused result depth
 
+
 def _prf_query_vector(bm, e):
     """1-row (qvec) DataFrame: the 6dp-quantized dimension-wise mean of
-    the BM25 top-{P} docs' embeddings — classic vector PRF, shared by the
+    the BM25 top-`_RRF_PRF_DOCS` docs' embeddings — classic vector PRF, shared by the
     brute-force and indexed RRF variants."""
-    qdims = (
-        bm.filter(F.col("bm_rk") <= _RRF_PRF_DOCS)
-        .join(e, bm.doc_id == e.vec_id)
-        .select(F.posexplode("embedding").alias("pos0", "val"))
-        .groupBy((F.col("pos0") + 1).alias("pos"))
-        .agg(
-            F.round(F.avg(F.col("val").cast("double")) + F.lit(1e-12), 6).alias("c")
-        )
-    )
-    return qdims.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))),
-            lambda s: s.getField("c"),
-        ).alias("qvec")
-    )
+    top = bm.filter(F.col("bm_rk") <= _RRF_PRF_DOCS).join(e, bm.doc_id == e.vec_id)
+    return mean_vectors(explode_dims(top)).withColumnRenamed("cvec", "qvec")
 
 
 def _rrf_cos_sql() -> str:
     """Cosine-SQL template imported from similarity (the single source of
     the fold/cast discipline — a determinism fix there must reach this
     oracle too; review-caught duplication)."""
-    from .similarity import _cos_sql
-
     return _cos_sql("e.embedding", "q.qvec")
 
 
@@ -453,10 +452,10 @@ def _rrf_oracle() -> str:
 def search_hybrid_rrf(spark, sf_dir):
     """Hybrid retrieval via reciprocal-rank fusion — the standard way
     production search combines a lexical arm and a vector arm without
-    score calibration (RRF: score = Σ 1/(k + rank), k={K}): arm 1 is the
-    BM25 top-{A} ('hash join scan'); arm 2 ranks the corpus by cosine to a
+    score calibration (RRF: score = Σ 1/(k + rank), k=`_RRF_K`): arm 1 is the
+    BM25 top-`_RRF_ARM_K` ('hash join scan'); arm 2 ranks the corpus by cosine to a
     pseudo-relevance-feedback query vector (the dimension-wise mean of the
-    BM25 top-{P} docs' embeddings — classic vector PRF, so the semantic
+    BM25 top-`_RRF_PRF_DOCS` docs' embeddings — classic vector PRF, so the semantic
     query derives deterministically from the lexical results instead of
     needing an out-of-band query embedding). Ranks fuse on doc_id
     (vec_id ≡ doc_id in this corpus), reciprocal contributions sum in
@@ -467,10 +466,8 @@ def search_hybrid_rrf(spark, sf_dir):
     TakeOrderedAndProject; vector arm: broadcast 1-row query vector,
     map-side cosine, top-k — swap in ivf_pq_search_topk for the
     brute-force arm at corpus scale); fusion itself touches only
-    {A}+{A} id-rank rows. The PRF mean is 6-dp-quantized (the centroid
+    `_RRF_ARM_K`+`_RRF_ARM_K` id-rank rows. The PRF mean is 6-dp-quantized (the centroid
     discipline) so both engines rank against the identical query vector."""
-    from .similarity import dot_fold
-
     # Materialize the two tiny arm intermediates: `bm` (ARM_K rows) feeds
     # both the PRF vector and the fusion join, and `qv` (1 row) feeds the
     # cosine arm — each reference otherwise instantiates the whole
@@ -522,28 +519,10 @@ def search_hybrid_rrf(spark, sf_dir):
     )
 
 
-search_hybrid_rrf.__doc__ = (
-    search_hybrid_rrf.__doc__.replace("{K}", str(_RRF_K))
-    .replace("{A}", str(_RRF_ARM_K))
-    .replace("{P}", str(_RRF_PRF_DOCS))
-)
-
-
 # ---- round 7: hybrid retrieval served from the materialized ANN index ----
 
 
 def _rrf_indexed_oracle() -> str:
-    from .similarity import (
-        _FULL_D2_SQL,
-        _IVF_PROBE,
-        _PQ_ITERS,
-        _PQ_M,
-        _PQ_SUB,
-        _SUB_D2_SQL,
-        _coarse_ctes,
-        _pq_ctes,
-    )
-
     _COS = _rrf_cos_sql()
     qd2 = _FULL_D2_SQL.format(a="q.qvec", b="c.cvec")
     return f"""
@@ -636,7 +615,7 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
     column is never read by the vector arm; its cost is the
     ivf_pq_search_topk serving shape (LUT build + code lookups over
     ~nprobe/K of the codes table). The output adds ``vec_arm_recall`` —
-    the indexed arm's overlap@{A} against the brute-force cosine arm,
+    the indexed arm's overlap@`_RRF_ARM_K` against the brute-force cosine arm,
     computed in-plan — so the quality cost of the arm swap is graded
     next to its rank effects, not assumed. (ADC ranks by L2 on
     unnormalized embeddings while the brute-force arm ranks by cosine, so
@@ -649,14 +628,6 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
     The brute-force comparator stays in-plan ONLY for the audit column —
     drop it in production and the corpus is never scanned at all."""
     import os
-
-    from .similarity import (
-        _IVF_PROBE,
-        _PQ_M,
-        _PQ_SUB,
-        _ensure_pq_index,
-        dot_fold,
-    )
 
     # Same tiny-intermediate materialization as search_hybrid_rrf: `bm` is
     # referenced by the PRF vector + fusion, `qv` by the probe selection,
@@ -673,20 +644,10 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
     routing = spark.read.parquet(os.path.join(idx, "routing"))
     codebook = spark.read.parquet(os.path.join(idx, "codebook"))
     codes = spark.read.parquet(os.path.join(idx, "codes"))
-    qd2 = F.aggregate(
-        F.zip_with(
-            F.col("qvec"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     probes = (
         qv.crossJoin(F.broadcast(coarse))
-        .select("c_label", qd2.alias("d2"))
-        .orderBy(F.col("d2") + F.col("c_label") * 1e-12)
+        .select("c_label", sq_l2("qvec", "cvec").alias("d2"))
+        .orderBy(_label_order())
         .limit(_IVF_PROBE)
         .select("c_label")
     )
@@ -702,21 +663,7 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
             ).alias("qemb"),
         )
     )
-    pd2 = F.round(
-        F.aggregate(
-            F.zip_with("qemb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
-    lut = qsub.join(codebook, "s").select("s", "cid", pd2.alias("pd2"))
-    adc = (
-        cands.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["s", "cid"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
-    )
+    adc = pq_adc(qsub, codebook, cands, codes, [], "vec_id")
     wsem = Window.orderBy("adc_d2", "doc_id")
     # `sem` is referenced by BOTH the fusion join and the recall audit —
     # un-materialized, each reference re-instantiates the whole
@@ -778,11 +725,6 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
     )
 
 
-search_hybrid_rrf_indexed.__doc__ = search_hybrid_rrf_indexed.__doc__.replace(
-    "{A}", str(_RRF_ARM_K)
-)
-
-
 # ---- positional phrase / proximity search ----------------------------------
 
 _PHRASE = ("hash", "join")
@@ -825,12 +767,13 @@ LEFT JOIN (SELECT doc_id, count(*) AS n_phrase,
 @query("search_phrase_positions", oracle=_PHRASE_SQL)
 def search_phrase_positions(spark, sf_dir):
     """Positional phrase + proximity search over a positional inverted
-    index: exact-phrase matches ('{P0} {P1}' = the terms at adjacent
-    positions) and NEAR/{W} proximity matches ('{P1}' within {W} tokens
-    after '{P0}') — the postings-adjacency operator Boolean/phrase IR
-    engines run, next to BM25's ranked family. Emits per matching doc the
-    phrase count, first phrase position, and the proximity count (every
-    near doc appears; phrase columns null/0 when only NEAR matches).
+    index: exact-phrase matches ('`_PHRASE[0]` `_PHRASE[1]`' = the terms at adjacent
+    positions) and NEAR/`_NEAR_W` proximity matches ('`_PHRASE[1]`' within
+    `_NEAR_W` tokens after '`_PHRASE[0]`') — the postings-adjacency operator
+    Boolean/phrase IR engines run, next to BM25's ranked family. Emits per
+    matching doc the phrase count, first phrase position, and the proximity
+    count (every near doc appears; phrase columns null/0 when only NEAR
+    matches).
 
     Pure integer position arithmetic — bit-exact by construction.
 
@@ -875,13 +818,6 @@ def search_phrase_positions(spark, sf_dir):
         "first_pos",
         "n_near",
     )
-
-
-search_phrase_positions.__doc__ = (
-    search_phrase_positions.__doc__.replace("{P0}", _PHRASE[0])
-    .replace("{P1}", _PHRASE[1])
-    .replace("{W}", str(_NEAR_W))
-)
 
 
 # ---- query spell correction (SymSpell deletion-neighborhood join) ----------

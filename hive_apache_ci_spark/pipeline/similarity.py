@@ -16,6 +16,7 @@ bucket is the shuffle key and each bucket's candidates fit an executor.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..helpers import T, materialize, ravg, spread
@@ -23,6 +24,13 @@ from ..registry import query
 
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 are the query vectors
+
+
+# ---- vector kernels: every query below builds on these ---------------------
+#
+# Each kernel is the one Spark spelling of a dataflow its DuckDB oracles
+# spell out in SQL. The casts are free on double inputs: Catalyst drops a
+# double->double cast, so the optimized plan is the same as without it.
 
 
 def dot_fold(a, b):
@@ -33,6 +41,127 @@ def dot_fold(a, b):
 
 def cosine(a, b):
     return dot_fold(a, b) / (F.sqrt(dot_fold(a, a)) * F.sqrt(dot_fold(b, b)))
+
+
+def sq_l2(a, b):
+    """Sequential double-precision squared-L2 distance of two arrays."""
+    sq = F.zip_with(
+        a,
+        b,
+        lambda x, y: (x.cast("double") - y.cast("double"))
+        * (x.cast("double") - y.cast("double")),
+    )
+    return F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def explode_dims(df, *keys, col="embedding"):
+    """(keys..., pos, val): one row per element of the ``col`` array, with
+    1-based ``pos`` and ``val`` cast to double."""
+    return df.select(*keys, F.posexplode(col).alias("pos0", "val_f")).select(
+        *keys,
+        (F.col("pos0") + 1).alias("pos"),
+        F.col("val_f").cast("double").alias("val"),
+    )
+
+
+def mean_vectors(dims, *keys):
+    """(keys..., cvec): per key, the element-wise mean of ``explode_dims``
+    rows. Each element is shifted by 1e-12 and rounded to 6dp BEFORE any
+    distance or argmin reads it: summation-order noise in the mean, across
+    engines or runs, must not flip a near-tie downstream."""
+    cells = dims.groupBy(*keys, "pos").agg(
+        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
+    )
+    return cells.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "c"))),
+            lambda s: s.getField("c"),
+        ).alias("cvec")
+    )
+
+
+def label_centroids(df):
+    """(c_label, cvec): the IVF coarse quantizer, one mean vector per
+    label of ``df``."""
+    return mean_vectors(explode_dims(df, "label"), "label").select(
+        F.col("label").alias("c_label"), "cvec"
+    )
+
+
+def _label_order():
+    """Centroid order for routing: by distance, near-ties to the lower label."""
+    return F.col("d2") + F.col("c_label") * 1e-12
+
+
+def _label_distances(vecs, cvecs, *keys):
+    """(keys..., c_label, d2): every ``embedding`` row of ``vecs`` against
+    every centroid of the broadcast (c_label, cvec) table."""
+    return vecs.join(F.broadcast(cvecs)).select(
+        *keys, "c_label", sq_l2("embedding", "cvec").alias("d2")
+    )
+
+
+def nearest_label(vecs, cvecs, *keys):
+    """(keys..., c_label): each row of ``vecs`` routed to its nearest
+    centroid. A map-side argmin, no sort."""
+    return (
+        _label_distances(vecs, cvecs, *keys)
+        .groupBy(*keys)
+        .agg(F.min_by("c_label", _label_order()).alias("c_label"))
+    )
+
+
+def probe_lists(queries, cvecs, nprobe: int):
+    """(query_id, c_label): each query's ``nprobe`` nearest centroids,
+    ordered as ``nearest_label`` orders them."""
+    w = Window.partitionBy("query_id").orderBy(_label_order())
+    return (
+        _label_distances(queries, cvecs, "query_id")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= nprobe)
+        .select("query_id", "c_label")
+    )
+
+
+def best_label(scored, *keys):
+    """(keys..., pred_label): per key, the c_label with the highest
+    ``score``; near-ties go to the lower label."""
+    return scored.groupBy(*keys).agg(
+        F.max_by("c_label", F.col("score") - F.col("c_label") * 1e-12).alias(
+            "pred_label"
+        )
+    )
+
+
+def assign_nearest(pairs, *keys):
+    """Lloyd assign step: ``pairs`` holds (keys..., emb, cid, cvec) rows;
+    per key, keep the cid nearest by squared-L2 rounded to 9dp, ties to the
+    lower cid. Returns (keys..., cid, d2). ``min_by`` on the (d2, cid)
+    struct is a partial-aggregable hash aggregate: no per-key sort."""
+    scored = pairs.select(
+        *keys, "cid", F.round(sq_l2("emb", "cvec"), 9).alias("d2")
+    )
+    return (
+        scored.groupBy(*keys)
+        .agg(F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("m"))
+        .select(*keys, F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
+    )
+
+
+def pq_adc(qsub, codebook, cands, codes, qkeys, vkey):
+    """PQ asymmetric distance: a lookup table of 9dp partial distances from
+    each query sub-vector (qkeys..., s, qemb) to every (s, cid, cvec)
+    codeword, summed over each candidate's stored (vkey, s, cid) codes and
+    rounded to 8dp. Returns (qkeys..., vkey, adc_d2)."""
+    lut = qsub.join(codebook, "s").select(
+        *qkeys, "s", "cid", F.round(sq_l2("qemb", "cvec"), 9).alias("pd2")
+    )
+    return (
+        cands.join(codes, vkey)
+        .join(F.broadcast(lut), [*qkeys, "s", "cid"])
+        .groupBy(*qkeys, vkey)
+        .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
+    )
 
 
 _DOT_SQL = (
@@ -66,11 +195,9 @@ _KNN_TOPK_ORACLE = f"""
 
 @query("knn_topk_cosine", oracle=_KNN_TOPK_ORACLE)
 def knn_topk_cosine(spark, sf_dir):
-    """Brute-force top-k cosine neighbors for the first {N_QUERIES} vectors
+    """Brute-force top-k cosine neighbors for the first `N_QUERIES` vectors
     — the exact-ANN baseline. Query side is broadcast (tiny); ranking is a
     per-query window with vec_id tiebreak."""
-    from pyspark.sql import Window
-
     e = T(spark, sf_dir, "embeddings").withColumn(
         # norms once per vector, not once per (query, candidate) pair — the
         # sequential fold is deterministic, so sim doubles are unchanged
@@ -370,8 +497,6 @@ def knn_lsh_topk(spark, sf_dir):
     tests/test_pipeline.py additionally bounds recall vs the brute-force
     baseline. The scale path: (table, bucket) is the shuffle key, so
     candidate generation is an equi-join, not a cross join."""
-    from pyspark.sql import Window
-
     base = T(spark, sf_dir, "embeddings")
     tb = lsh_table_buckets(base.select("vec_id", "embedding"))
     # ids-only through bucket join + DISTINCT; vectors re-attached once per
@@ -483,18 +608,10 @@ def ivf_centroids(spark, sf_dir):
 
     Scale: one shuffle keyed by (label, dim) — 640 cells regardless of
     corpus size; the centroid table is broadcastable forever after."""
-    e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
+    dims = explode_dims(T(spark, sf_dir, "embeddings"), "label")
+    # the cells of mean_vectors, kept unassembled: the report sums c*c per
+    # label
     centroids = dims.groupBy("label", "pos").agg(
-        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
-        # repo-wide discipline: cross-engine/run summation-order noise in
-        # the mean must not flip near-tie coarse assignments (ADVICE r4).
         F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
     )
     return centroids.groupBy("label").agg(
@@ -532,47 +649,12 @@ def ivf_assign(spark, sf_dir):
     At 100 TB this is THE ANN scale path: assign once, shuffle by
     (centroid bucket), search within buckets only."""
     e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
+    v = e.filter(F.col("vec_id") < 200).select(
+        "vec_id", F.col("label").alias("true_label"), "embedding"
     )
-    centroids = dims.groupBy("label", "pos").agg(
-        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
-        # repo-wide discipline: cross-engine/run summation-order noise in
-        # the mean must not flip near-tie coarse assignments (ADVICE r4).
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvecs = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    v = e.filter(F.col("vec_id") < 200).select("vec_id", F.col("label").alias("true_label"), "embedding")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = v.join(F.broadcast(cvecs)).select(
-        "vec_id", "true_label", "c_label", d2.alias("d2")
-    )
-    return scored.groupBy("vec_id", "true_label").agg(
-        F.min_by("c_label", F.col("d2") + F.col("c_label") * 1e-12).alias(
-            "assigned_label"
-        )
-    )
+    return nearest_label(
+        v, label_centroids(e), "vec_id", "true_label"
+    ).withColumnRenamed("c_label", "assigned_label")
 
 
 _IVF_PROBE = 2  # nprobe: centroids searched per query
@@ -666,8 +748,6 @@ def ivf_probe_topk(spark, sf_dir):
 def _ivf_search(spark, sf_dir, nprobe: int):
     """Top-k IVF search (shared with ann_nprobe_sweep): rank the shared
     candidate sims and keep TOP_K."""
-    from pyspark.sql import Window
-
     sims = _ivf_candidate_sims(spark, sf_dir, nprobe)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim_raw").desc(), F.col("neighbor_id")
@@ -687,73 +767,35 @@ def _ivf_candidate_sims(spark, sf_dir, nprobe: int):
     the shared pre-ranking dataflow for top-k AND radius search."""
     e = T(spark, sf_dir, "embeddings")
     assigned, probes = _ivf_routing(spark, sf_dir, nprobe)
-    cands = (
+    return _ivf_score_cands(e, _probed_cands(probes, assigned))
+
+
+def _probed_cands(probes, routing):
+    """(query_id, neighbor_id): every vector routed to one of the query's
+    probed lists, the query itself excluded."""
+    return (
         F.broadcast(probes)
-        .join(assigned, "c_label")
+        .join(routing, "c_label")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    return _ivf_score_cands(e, cands)
 
 
 def _ivf_routing(spark, sf_dir, nprobe: int):
     """(assigned, probes) — the IVF routing tables: every corpus vector's
     inverted-list assignment and every query's nprobe probed lists.
     Shared by search (candidate generation) and the traffic report."""
-    from pyspark.sql import Window
-
     e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
+    cvecs = label_centroids(e)
+    assigned = nearest_label(e.select("vec_id", "embedding"), cvecs, "vec_id")
+    return assigned, probe_lists(_query_vectors(e), cvecs, nprobe)
+
+
+def _query_vectors(e):
+    """(query_id, embedding): the query panel."""
+    return e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "embedding"
     )
-    centroids = dims.groupBy("label", "pos").agg(
-        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
-        # repo-wide discipline: cross-engine/run summation-order noise in
-        # the mean must not flip near-tie coarse assignments (ADVICE r4).
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvecs = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    tiebreak = F.col("d2") + F.col("c_label") * 1e-12
-    assigned = (
-        e.select("vec_id", "embedding")
-        .join(F.broadcast(cvecs))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min_by("c_label", tiebreak).alias("c_label"))
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(tiebreak)
-    probes = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .join(F.broadcast(cvecs))
-        .select("query_id", "c_label", d2.alias("d2"))
-        .withColumn("rk", F.row_number().over(wprobe))
-        .filter(F.col("rk") <= nprobe)
-        .select("query_id", "c_label")
-    )
-    return assigned, probes
 
 
 def _ivf_score_cands(e, cands):
@@ -808,8 +850,8 @@ def _ivf_score_cands(e, cands):
 )
 def ann_recall_report(spark, sf_dir):
     """ANN index EVALUATION (the companion to `dedup_minhash_eval`): per
-    query, recall@{TOP_K} of the IVF index search (`ivf_probe_topk` —
-    exact cosine within nprobe={_IVF_PROBE} probed lists) against the
+    query, recall@`TOP_K` of the IVF index search (`ivf_probe_topk` —
+    exact cosine within nprobe=`_IVF_PROBE` probed lists) against the
     brute-force truth (`knn_topk_cosine`) — the standard index-quality
     report every ANN deployment runs before trusting an index, computed
     entirely in-engine by composing the two dataflows. Both sides are
@@ -876,7 +918,7 @@ def _rp_oracle() -> str:
 
 @query("embedding_random_projection", oracle=_rp_oracle())
 def embedding_random_projection(spark, sf_dir):
-    """Johnson-Lindenstrauss sketch: 64-dim float vectors → {_RP_DIMS}-dim
+    """Johnson-Lindenstrauss sketch: 64-dim float vectors → `_RP_DIMS`-dim
     via a deterministic ±1/sqrt(k) projection (md5-derived rows — no model
     state to ship, any executor regenerates the matrix). The ANN
     compression step that makes a 100 TB vector corpus memory-resident:
@@ -940,19 +982,15 @@ def _sq_stats_sql() -> str:
 )
 def embedding_scalar_quantize(spark, sf_dir):
     """Scalar (int8-style) quantization: per-dimension global [min, max]
-    ranges (one tiny agg, broadcast) map each float to a 0..{_SQ_LEVELS}
+    ranges (one tiny agg, broadcast) map each float to a 0..`_SQ_LEVELS`
     code — 4x smaller vectors for ANN candidate scoring, re-ranked in
     float32 later. Emits per-vector code checksum/min/max so the entire
     64-code vector is hash-verified against DuckDB computing the identical
     quantizer. Map-side after one broadcastable stats agg."""
     e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        (F.col("pos0") + 1).alias("pos"), F.col("val_f").cast("double").alias("val")
-    )
     stats = (
-        dims.groupBy("pos")
+        explode_dims(e)
+        .groupBy("pos")
         .agg(F.min("val").alias("dmin"), F.max("val").alias("dmax"))
         .agg(
             F.transform(
@@ -1004,8 +1042,8 @@ def _kmeans_ctes() -> str:
     means are rounded to 6dp — rounding the shared state each round is
     what keeps both engines' trajectories bit-identical despite unordered
     float summation (same discipline as the PageRank/LPA oracles). Final
-    assignment = a{ITERS}, final centroids = c{ITERS}; shared by the
-    k-means and SemDeDup oracles."""
+    assignment and centroids are the ``a``/``c`` CTEs of round
+    `_KM_ITERS`; shared by the k-means and SemDeDup oracles."""
     parts = [
         f"""
     vv AS (
@@ -1072,8 +1110,8 @@ def _kmeans_oracle() -> str:
 
 @query("kmeans_lloyd", oracle=_kmeans_oracle())
 def kmeans_lloyd(spark, sf_dir):
-    """Distributed Lloyd k-means over the embedding corpus: k={K} seeds
-    (the k smallest vec_ids — deterministic, no RNG state), {I} fixed
+    """Distributed Lloyd k-means over the embedding corpus: k=`_KM_K` seeds
+    (the k smallest vec_ids — deterministic, no RNG state), `_KM_ITERS` fixed
     iterations of assign (squared-L2 argmin, centroid-id tie-break) +
     update (per-dimension mean). Per-round centroid means are rounded to
     6dp and distances to 9dp BEFORE the argmin on both engines, pinning
@@ -1121,39 +1159,16 @@ def _kmeans_train(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
     ).persist()
-    dd = (
-        vv.select("vec_id", F.posexplode("emb").alias("pos0", "val"))
-        .select("vec_id", (F.col("pos0") + 1).alias("pos"), "val")
-        .persist()
-    )
+    dd = explode_dims(vv, "vec_id", col="emb").persist()
     cent = (
         vv.orderBy("vec_id")
         .limit(_KM_K)
         .select(F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("emb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
     assign = None
     for _ in range(_KM_ITERS):
-        scored = vv.crossJoin(F.broadcast(cent)).select(
-            "vec_id", "cid", d2.alias("d2")
-        )
         # per-round assign is not checkpointed — see _pq_train.
-        # Argmin via min_by on the (d2, cid) struct — identical ordering to
-        # the former row_number window but a plain partial-aggregable
-        # hash-agg: no per-vector sort exchange per Lloyd round (the shape
-        # ivf_pq_topk's router already uses).
-        assign = (
-            scored.groupBy("vec_id")
-            .agg(F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("m"))
-            .select("vec_id", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
-        )
+        assign = assign_nearest(vv.crossJoin(F.broadcast(cent)), "vec_id")
         # centroid update stays the posexplode -> (cid,pos) avg ->
         # collect_list two-shuffle shape HERE: the one-pass 64-wide avg
         # aggregate used by _pq_train was A/B-measured SLOWER at full dim
@@ -1161,17 +1176,8 @@ def _kmeans_train(spark, sf_dir):
         # and raising the limit produces methods past the JIT size cap —
         # interpreted either way). dd is persisted, so the explosion is
         # paid once per build, not once per round.
-        upd = (
-            assign.join(dd, "vec_id")
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg("val") + F.lit(1e-12), 6).alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s.getField("c"),
-                ).alias("new_cvec")
-            )
+        upd = mean_vectors(assign.join(dd, "vec_id"), "cid").withColumnRenamed(
+            "cvec", "new_cvec"
         )
         cent = materialize(
             cent.join(upd, "cid", "left")
@@ -1181,11 +1187,6 @@ def _kmeans_train(spark, sf_dir):
     vv.unpersist(False)
     dd.unpersist(False)
     return cent, assign
-
-
-kmeans_lloyd.__doc__ = kmeans_lloyd.__doc__.replace("{K}", str(_KM_K)).replace(
-    "{I}", str(_KM_ITERS)
-)
 
 
 # ---- Product quantization (per-subspace Lloyd codebooks) -----------------
@@ -1199,10 +1200,11 @@ _PQ_ITERS = 2
 def _pq_ctes(src: str = "embeddings") -> str:
     """Unrolled per-subspace Lloyd rounds as a CTE body (no WITH, no final
     SELECT) — the k-means oracle with a subspace key `s` carried through
-    every CTE, so all {M} codebooks train in the same unrolled SQL
+    every CTE, so all `_PQ_M` codebooks train in the same unrolled SQL
     (per-round 6dp centroid / 9dp distance quantization pins the
-    trajectory, as in _kmeans_oracle). Final codebook = c{ITERS}, final
-    assignment = a{ITERS}; shared by the PQ-codes and IVF-PQ oracles."""
+    trajectory, as in _kmeans_oracle). Final codebook and assignment are
+    the ``c``/``a`` CTEs of round `_PQ_ITERS`; shared by the PQ-codes and
+    IVF-PQ oracles."""
     parts = [
         f"""
     vv AS (
@@ -1271,16 +1273,16 @@ def _pq_oracle() -> str:
 
 @query("embedding_pq_codes", oracle=_pq_oracle())
 def embedding_pq_codes(spark, sf_dir):
-    """Product quantization: split each embedding into {M} subspaces of
-    {SUB} dims, train a {K}-entry Lloyd codebook per subspace ({I} fixed
-    rounds, seeds = the {K} smallest vec_ids' sub-vectors), and emit each
+    """Product quantization: split each embedding into `_PQ_M` subspaces of
+    `_PQ_SUB` dims, train a `_PQ_K`-entry Lloyd codebook per subspace (`_PQ_ITERS` fixed
+    rounds, seeds = the `_PQ_K` smallest vec_ids' sub-vectors), and emit each
     vector's code word ('c0|c1|...') plus total squared reconstruction
-    error. PQ compresses {M}x{SUB} floats to {M} small ints — the memory
+    error. PQ compresses `_PQ_M`x`_PQ_SUB` floats to `_PQ_M` small ints — the memory
     side of IVF-PQ ANN (ivf_* ops are the routing side).
 
-    All {M} codebooks train in ONE dataflow: subspace id `s` rides along
+    All `_PQ_M` codebooks train in ONE dataflow: subspace id `s` rides along
     as a grouping key, so per round there is one broadcast of the (s, cid)
-    centroid table ({M}·{K} rows), one map-side argmin, and one
+    centroid table (`_PQ_M`·`_PQ_K` rows), one map-side argmin, and one
     groupBy(s, cid, pos) shuffle of narrow rows — identical topology to
     kmeans_lloyd, M codebooks for the price of one. Per-round 6dp/9dp
     quantization makes the full trajectory (and thus the codes) carry a
@@ -1320,6 +1322,13 @@ def _pq_subvectors(spark, e):
     )
 
 
+def _pq_encode(vv, cent):
+    """(vec_id, s, cid, d2): each (vec_id, s, emb) sub-vector's nearest
+    codeword in the broadcast (s, cid, cvec) codebook — the PQ assign step,
+    in training and when encoding against a frozen codebook."""
+    return assign_nearest(vv.join(F.broadcast(cent), "s"), "vec_id", "s")
+
+
 def _pq_train(spark, sf_dir, src=None):
     """Shared PQ training dataflow: returns (vv sub-vectors, final (s, cid)
     codebook, final (vec_id, s, cid, d2) assignment) after the fixed Lloyd
@@ -1338,29 +1347,12 @@ def _pq_train(spark, sf_dir, src=None):
     cent = vv.join(F.broadcast(seeds), "vec_id").select(
         "s", F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("emb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
     assign = None
     for _ in range(_PQ_ITERS):
-        scored = vv.join(F.broadcast(cent), "s").select(
-            "vec_id", "s", "cid", d2.alias("d2")
-        )
         # assign carries NO cross-round state (next round scores from vv +
         # cent only), so it is not checkpointed per round — each barrier
         # was a full extra job; only the tiny cent table pins the lineage.
-        # min_by on the (d2, cid) struct = the old row_number ordering with
-        # no per-(vec,subspace) sort exchange (see _kmeans_train).
-        assign = (
-            scored.groupBy("vec_id", "s")
-            .agg(F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("m"))
-            .select("vec_id", "s", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
-        )
+        assign = _pq_encode(vv, cent)
         # one-pass centroid update (see _kmeans_train r8 note): _PQ_SUB
         # per-dimension avg expressions in a single (s, cid) aggregation —
         # one shuffle, no x{sub} posexplode; 6dp(+1e-12) per dimension
@@ -1385,14 +1377,6 @@ def _pq_train(spark, sf_dir, src=None):
     assign = materialize(assign)
     vv.unpersist(False)
     return vv, cent, assign
-
-
-embedding_pq_codes.__doc__ = (
-    embedding_pq_codes.__doc__.replace("{M}", str(_PQ_M))
-    .replace("{SUB}", str(_PQ_SUB))
-    .replace("{K}", str(_PQ_K))
-    .replace("{I}", str(_PQ_ITERS))
-)
 
 
 # ---- MMR diversified re-ranking ------------------------------------------
@@ -1476,17 +1460,17 @@ def _mmr_oracle() -> str:
 @query("knn_mmr_rerank", oracle=_mmr_oracle())
 def knn_mmr_rerank(spark, sf_dir):
     """Maximal-marginal-relevance re-ranking (Carbonell & Goldstein 1998):
-    for each query, greedily pick {K} results from its top-{C} cosine
+    for each query, greedily pick `_MMR_K` results from its top-`_MMR_CAND` cosine
     candidates maximizing λ·relevance − (1−λ)·max-similarity-to-already-
-    selected (λ={L}) — the diversity-aware retrieval pass RAG pipelines
+    selected (λ=`_MMR_LAMBDA`) — the diversity-aware retrieval pass RAG pipelines
     run after ANN. Greedy selection is inherently sequential, but only in
-    the {K}-step depth: each step is one (query-keyed) join + anti-join +
-    window argmax over ≤{C} candidates per query, all queries advancing in
-    parallel — so wall-clock is {K} tiny stages regardless of query count.
-    Candidate relevances and the {C}×{C} pairwise sims are computed once,
-    quantized to 6dp (argmax inputs to 9dp), materialized, and reused
-    every step — which is also what pins the greedy trajectory across
-    engines for the unrolled DuckDB oracle."""
+    the `_MMR_K`-step depth: each step is one (query-keyed) join + anti-join +
+    window argmax over ≤`_MMR_CAND` candidates per query, all queries advancing in
+    parallel — so wall-clock is `_MMR_K` tiny stages regardless of query count.
+    Candidate relevances and the `_MMR_CAND`×`_MMR_CAND` pairwise sims are
+    computed once, quantized to 6dp (argmax inputs to 9dp), materialized,
+    and reused every step — which is also what pins the greedy trajectory
+    across engines for the unrolled DuckDB oracle."""
     from pyspark.sql import Window as W
 
     e = T(spark, sf_dir, "embeddings").withColumn(
@@ -1573,13 +1557,6 @@ def knn_mmr_rerank(spark, sf_dir):
         F.col("cid").alias("neighbor_id"),
         "rel",
     )
-
-
-knn_mmr_rerank.__doc__ = (
-    knn_mmr_rerank.__doc__.replace("{K}", str(_MMR_K))
-    .replace("{C}", str(_MMR_CAND))
-    .replace("{L}", str(_MMR_LAMBDA))
-)
 
 
 # ---- IVF-PQ: coarse routing + asymmetric-distance scoring ----------------
@@ -1681,101 +1658,40 @@ def _ivf_pq_oracle() -> str:
 @query("ivf_pq_topk", oracle=_ivf_pq_oracle())
 def ivf_pq_topk(spark, sf_dir):
     """IVF-PQ ANN search (Jégou et al. 2011) — the two halves joined:
-    IVF routing (label-mean coarse centroids, nprobe={P}) picks candidate
+    IVF routing (label-mean coarse centroids, nprobe=`_IVF_PROBE`) picks candidate
     inverted lists exactly as in ivf_probe_topk, and candidates are scored
     by PQ ASYMMETRIC DISTANCE: each query precomputes a lookup table of
-    partial distances to every codebook entry ({M}·{K} values per query),
-    and a candidate's distance is the SUM of {M} table lookups keyed by its
+    partial distances to every codebook entry (`_PQ_M`·`_PQ_K` values per query),
+    and a candidate's distance is the SUM of `_PQ_M` table lookups keyed by its
     stored code — no candidate vector is ever touched at query time, which
-    is the entire memory story of IVF-PQ at 100 TB (codes are {M} small
-    ints vs {M}×{SUB} floats; the corpus embedding column is read once at
+    is the entire memory story of IVF-PQ at 100 TB (codes are `_PQ_M` small
+    ints vs `_PQ_M`×`_PQ_SUB` floats; the corpus embedding column is read once at
     index build, never at search).
 
     Topology: codebooks from the shared _pq_train dataflow; the LUT is
-    queries×{M}×{K} rows — broadcast; scoring is one join from candidates
-    to their codes (shuffle keyed on neighbor id) plus {M} broadcast-hash
+    queries×`_PQ_M`×`_PQ_K` rows — broadcast; scoring is one join from candidates
+    to their codes (shuffle keyed on neighbor id) plus `_PQ_M` broadcast-hash
     lookups, then a per-query top-K window. Everything is quantized
     (9dp partials, 8dp sums) so ranks are engine-stable."""
-    from pyspark.sql import Window
-
     vv, cent, assign = _pq_train(spark, sf_dir)
-    e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
-        # repo-wide discipline: cross-engine/run summation-order noise in
-        # the mean must not flip near-tie coarse assignments (ADVICE r4).
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvl = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    tiebreak = F.col("d2") + F.col("c_label") * 1e-12
-    assigned = (
-        e.select("vec_id", "embedding")
-        .join(F.broadcast(cvl))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min_by("c_label", tiebreak).alias("c_label"))
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(tiebreak)
-    probes = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .join(F.broadcast(cvl))
-        .select("query_id", "c_label", d2.alias("d2"))
-        .withColumn("rk", F.row_number().over(wprobe))
-        .filter(F.col("rk") <= _IVF_PROBE)
-        .select("query_id", "c_label")
-    )
-    cands = (
-        F.broadcast(probes)
-        .join(assigned, "c_label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
+    assigned, probes = _ivf_routing(spark, sf_dir, _IVF_PROBE)
     qsub = vv.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "s", F.col("emb").alias("qemb")
     )
-    pd2 = F.round(
-        F.aggregate(
-            F.zip_with("qemb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
-    lut = qsub.join(cent, "s").select("query_id", "s", "cid", pd2.alias("pd2"))
-    codes = assign.select(
-        F.col("vec_id").alias("neighbor_id"), "s", "cid"
-    )
-    adc = (
-        cands.join(codes, "neighbor_id")
-        .join(F.broadcast(lut), ["query_id", "s", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
+    return _ivf_pq_rank(probes, assigned, qsub, cent, assign)
+
+
+def _ivf_pq_rank(probes, routing, qsub, codebook, codes):
+    """Top-K by ADC over the probed lists: (query_id, neighbor_id, rank,
+    adc_d2) — the search half shared by the train-and-search query and the
+    index-served one."""
+    adc = pq_adc(
+        qsub,
+        codebook,
+        _probed_cands(probes, routing),
+        codes.select(F.col("vec_id").alias("neighbor_id"), "s", "cid"),
+        ["query_id"],
+        "neighbor_id",
     )
     w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
     return (
@@ -1783,14 +1699,6 @@ def ivf_pq_topk(spark, sf_dir):
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "adc_d2")
     )
-
-
-ivf_pq_topk.__doc__ = (
-    ivf_pq_topk.__doc__.replace("{P}", str(_IVF_PROBE))
-    .replace("{M}", str(_PQ_M))
-    .replace("{K}", str(_PQ_K))
-    .replace("{SUB}", str(_PQ_SUB))
-)
 
 
 # ---- IVF-PQ index lifecycle: build/materialize once, search many ---------
@@ -1840,51 +1748,12 @@ def _ivf_pq_index_frames(spark, sf_dir):
     codebook (s, cid, cvec), codes (vec_id, s, cid)."""
     _vv, cent, assign = _pq_train(spark, sf_dir)
     e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
     # coarse (|labels| rows) feeds BOTH its own parquet write and routing's
     # broadcast join — without the barrier the full embeddings posexplode
     # + two-shuffle centroid aggregation executes once per consumer.
-    coarse = materialize(
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    routing = (
-        e.select("vec_id", "embedding")
-        .join(F.broadcast(coarse))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(
-            F.min_by("c_label", F.col("d2") + F.col("c_label") * 1e-12).alias(
-                "c_label"
-            )
-        )
-    )
-    codes = assign.select("vec_id", "s", "cid")
-    return coarse, routing, cent, codes
+    coarse = materialize(label_centroids(e))
+    routing = nearest_label(e.select("vec_id", "embedding"), coarse, "vec_id")
+    return coarse, routing, cent, assign.select("vec_id", "s", "cid")
 
 
 def _resolve_pq_index(root: str) -> str | None:
@@ -2061,42 +1930,13 @@ def ivf_pq_search_topk(spark, sf_dir):
     index, same oracle)."""
     import os
 
-    from pyspark.sql import Window
-
     idx = _ensure_pq_index(spark, sf_dir)
     coarse = spark.read.parquet(os.path.join(idx, "coarse"))
     routing = spark.read.parquet(os.path.join(idx, "routing"))
     codebook = spark.read.parquet(os.path.join(idx, "codebook"))
     codes = spark.read.parquet(os.path.join(idx, "codes"))
-    e = T(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("d2") + F.col("c_label") * 1e-12
-    )
-    probes = (
-        q.join(F.broadcast(coarse))
-        .select("query_id", "c_label", d2.alias("d2"))
-        .withColumn("rk", F.row_number().over(wprobe))
-        .filter(F.col("rk") <= _IVF_PROBE)
-        .select("query_id", "c_label")
-    )
-    cands = (
-        F.broadcast(probes)
-        .join(routing, "c_label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
+    q = _query_vectors(T(spark, sf_dir, "embeddings"))
+    probes = probe_lists(q, coarse, _IVF_PROBE)
     sub = spark.range(_PQ_M).select(F.col("id").cast("int").alias("s"))
     qsub = (
         q.crossJoin(F.broadcast(sub))
@@ -2109,30 +1949,7 @@ def ivf_pq_search_topk(spark, sf_dir):
             ).alias("qemb"),
         )
     )
-    pd2 = F.round(
-        F.aggregate(
-            F.zip_with("qemb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
-    lut = qsub.join(codebook, "s").select("query_id", "s", "cid", pd2.alias("pd2"))
-    adc = (
-        cands.join(
-            codes.select(F.col("vec_id").alias("neighbor_id"), "s", "cid"),
-            "neighbor_id",
-        )
-        .join(F.broadcast(lut), ["query_id", "s", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "adc_d2")
-    )
+    return _ivf_pq_rank(probes, routing, qsub, codebook, codes)
 
 
 @query(
@@ -2154,11 +1971,11 @@ def ivf_pq_search_topk(spark, sf_dir):
     """,
 )
 def ann_pq_recall_report(spark, sf_dir):
-    """Quantization-loss EVALUATION: per-query recall@{TOP_K} of the full
+    """Quantization-loss EVALUATION: per-query recall@`TOP_K` of the full
     IVF-PQ search (coarse routing + ADC code-lookup scoring) against the
     brute-force cosine truth. `ann_recall_report` isolates what IVF
     ROUTING loses (exact distances inside probed lists); this report adds
-    what PQ QUANTIZATION loses on top (distances approximated from {M}
+    what PQ QUANTIZATION loses on top (distances approximated from `_PQ_M`
     codebook lookups) — the two reports together are how production picks
     nprobe and codebook size against a recall target. Deterministic on
     both sides, fully hash-oracled (the oracle nests both dataflows'
@@ -2182,11 +1999,6 @@ def ann_pq_recall_report(spark, sf_dir):
             ).alias("recall_at_k"),
         )
     )
-
-
-ann_pq_recall_report.__doc__ = ann_pq_recall_report.__doc__.replace(
-    "{M}", str(_PQ_M)
-)
 
 
 # ---- SemDeDup: semantic dedup within k-means clusters --------------------
@@ -2226,9 +2038,9 @@ def _semdedup_oracle() -> str:
 def dedup_semdedup_clusters(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): semantic near-dup removal that only
     compares embeddings WITHIN their k-means cluster — cluster first (the
-    shared fixed-iteration Lloyd dataflow, k={K}), then exact cosine among
+    shared fixed-iteration Lloyd dataflow, k=`_KM_K`), then exact cosine among
     cluster members, then keep the smallest vec_id of each close group
-    (removed = some smaller-id clustermate is above cosine {TH}). Emits
+    (removed = some smaller-id clustermate is above cosine `_SEMDEDUP_TH`). Emits
     per vector: cluster, close-neighbor count, removal verdict.
 
     100 TB shape: this is the dedup topology for corpora where LSH recall
@@ -2277,11 +2089,6 @@ def dedup_semdedup_clusters(spark, sf_dir):
         .otherwise(0)
         .alias("removed"),
     )
-
-
-dedup_semdedup_clusters.__doc__ = dedup_semdedup_clusters.__doc__.replace(
-    "{K}", str(_KM_K)
-).replace("{TH}", str(_SEMDEDUP_TH))
 
 
 # ---- cluster topic report (cluster-then-describe) ------------------------
@@ -2403,8 +2210,6 @@ def _knn_trunc(spark, sf_dir, d: int):
     """Brute-force top-k by cosine over the FIRST d dims only (matryoshka
     prefix): same dataflow as knn_topk_cosine with the embedding sliced
     before any arithmetic — norms are prefix norms."""
-    from pyspark.sql import Window
-
     e = T(spark, sf_dir, "embeddings").select(
         "vec_id", F.slice("embedding", 1, d).alias("emb")
     )
@@ -2479,8 +2284,8 @@ def _matryoshka_oracle() -> str:
 
 @query("ann_matryoshka_recall", oracle=_matryoshka_oracle())
 def ann_matryoshka_recall(spark, sf_dir):
-    """Matryoshka-truncation evaluation: recall@{TOP_K} per query when
-    ranking by cosine over only the FIRST d dims (d ∈ {_MRL_DIMS}) against
+    """Matryoshka-truncation evaluation: recall@`TOP_K` per query when
+    ranking by cosine over only the FIRST d dims (d ∈ `_MRL_DIMS`) against
     the full-dim brute-force truth — the report that decides how far a
     matryoshka-trained embedding can be truncated before retrieval quality
     degrades. Truncation is THE cheap scale lever for 100 TB ANN: a 16-of-
@@ -2547,8 +2352,8 @@ def _nprobe_sweep_oracle() -> str:
 
 @query("ann_nprobe_sweep", oracle=_nprobe_sweep_oracle())
 def ann_nprobe_sweep(spark, sf_dir):
-    """IVF tuning curve: mean recall@{TOP_K} over the query panel as a
-    function of nprobe ∈ {_SWEEP_PROBES} — the sweep every ANN deployment
+    """IVF tuning curve: mean recall@`TOP_K` over the query panel as a
+    function of nprobe ∈ `_SWEEP_PROBES` — the sweep every ANN deployment
     runs to pick its latency/recall operating point (recall must be
     monotone in nprobe; at nprobe = n_centroids the search is exhaustive
     within assignment and recall is limited only by routing loss). Each
@@ -2604,30 +2409,6 @@ def _ingest_split(e):
     return (
         tagged.filter(F.col("bk") < _INGEST_SPLIT).drop("bk"),
         tagged.filter(F.col("bk") >= _INGEST_SPLIT).drop("bk"),
-    )
-
-
-def _encode_frozen(spark, batch, cent):
-    """Encode a batch against a FROZEN codebook: per-subspace nearest-
-    codeword argmin via broadcast cent + map-side min_by — encode cost is
-    ∝ batch, never corpus. Returns (vec_id, s, cid, d2)."""
-    dvv = _pq_subvectors(spark, batch)
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("emb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
-    return (
-        dvv.join(F.broadcast(cent), "s")
-        .select("vec_id", "s", "cid", d2.alias("d2"))
-        .groupBy("vec_id", "s")
-        .agg(F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("m"))
-        .select(
-            "vec_id", "s", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2")
-        )
     )
 
 
@@ -2699,7 +2480,7 @@ def ivf_pq_ingest_delta(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings")
     base, delta = _ingest_split(e)
     _, cent, base_assign = _pq_train(spark, sf_dir, src=base)
-    dassign = _encode_frozen(spark, delta, cent)
+    dassign = _pq_encode(_pq_subvectors(spark, delta), cent)
     nb = base_assign.groupBy("s", "cid").agg(F.count(F.lit(1)).alias("n_base"))
     nd = dassign.groupBy("s", "cid").agg(
         F.count(F.lit(1)).alias("n_delta"),
@@ -2839,8 +2620,9 @@ def ivf_pq_retrain_decision(spark, sf_dir):
     compression and probe selectivity). Verdicts at both grains: per-
     codeword ``err_drift``/``occ_skew`` booleans, and the per-subspace
     ``retrain_subspace`` + ``reason`` an index operator would alert on
-    (subspace-weighted err ratio > {R} OR any codeword holding > {O} of
-    the subspace, i.e. 2x the uniform 1/K share).
+    (subspace-weighted err ratio > `_RETRAIN_ERR_RATIO` OR any codeword
+    holding > `_RETRAIN_OCC_SHARE` of the subspace, i.e. 2x the uniform 1/K
+    share).
 
     100 TB shape: everything derives from two (s, cid)-keyed ledgers
     (M*K rows each — 16 here) already produced by the ingest dataflow:
@@ -2853,7 +2635,7 @@ def ivf_pq_retrain_decision(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings")
     base, delta = _ingest_split(e)
     _, cent, base_assign = _pq_train(spark, sf_dir, src=base)
-    dassign = _encode_frozen(spark, delta, cent)
+    dassign = _pq_encode(_pq_subvectors(spark, delta), cent)
     nb = base_assign.groupBy("s", "cid").agg(
         F.count(F.lit(1)).alias("n_base"),
         F.round(F.sum("d2") + F.lit(1e-9), 4).alias("base_err"),
@@ -2959,12 +2741,6 @@ def ivf_pq_retrain_decision(spark, sf_dir):
     )
 
 
-ivf_pq_retrain_decision.__doc__ = (
-    ivf_pq_retrain_decision.__doc__.replace("{R}", str(_RETRAIN_ERR_RATIO))
-    .replace("{O}", str(_RETRAIN_OCC_SHARE))
-)
-
-
 # ---- round 7: inverted-list merge-compact --------------------------------
 
 _VEC_H32_SQL = (
@@ -3019,42 +2795,8 @@ def ivf_pq_merge_compact(spark, sf_dir):
     sorting: content equality reduces to an O(1) comparison per list."""
     e = T(spark, sf_dir, "embeddings")
     base, _delta = _ingest_split(e)
-    dims = base.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvl = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    tiebreak = F.col("d2") + F.col("c_label") * 1e-12
-    assigned = (
-        e.select("vec_id", "embedding")
-        .join(F.broadcast(cvl))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min_by("c_label", tiebreak).alias("c_label"))
+    assigned = nearest_label(
+        e.select("vec_id", "embedding"), label_centroids(base), "vec_id"
     )
     bucket = (
         F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
@@ -3113,7 +2855,7 @@ _ANN_FILTERED_ORACLE = f"""
 
 @query("ann_filtered_topk", oracle=_ANN_FILTERED_ORACLE)
 def ann_filtered_topk(spark, sf_dir):
-    """Filtered ANN: top-{K} cosine neighbors restricted to candidates
+    """Filtered ANN: top-`_FILT_TOPK` cosine neighbors restricted to candidates
     sharing the query's label — the metadata-constrained search every
     production vector store serves ("nearest docs in MY tenant / of THIS
     language"). The constraint is fused into the search as a JOIN KEY,
@@ -3129,8 +2871,6 @@ def ann_filtered_topk(spark, sf_dir):
     layout applied to vectors). Queries stay broadcast; ranking is a
     per-query window over one label's candidates with vec_id tiebreak,
     never a global sort."""
-    from pyspark.sql import Window
-
     e = T(spark, sf_dir, "embeddings").withColumn(
         "nrm", F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
     )
@@ -3178,11 +2918,6 @@ def ann_filtered_topk(spark, sf_dir):
     )
 
 
-ann_filtered_topk.__doc__ = ann_filtered_topk.__doc__.replace(
-    "{K}", str(_FILT_TOPK)
-)
-
-
 # ---- radius (range) search over the IVF index ------------------------------
 
 _RANGE_R = 0.15
@@ -3200,7 +2935,7 @@ _RANGE_ORACLE = (
 @query("ann_range_search", oracle=_RANGE_ORACLE)
 def ann_range_search(spark, sf_dir):
     """Radius (range) search over the IVF index: ALL neighbors with cosine
-    >= {R} within the probed inverted lists, per query — the
+    >= `_RANGE_R` within the probed inverted lists, per query — the
      'everything this similar' operator (dedup sweeps, recommendation
     fan-outs, contamination screens) next to top-k's 'the k most
     similar'. Shares the exact candidate-generation dataflow with
@@ -3217,8 +2952,6 @@ def ann_range_search(spark, sf_dir):
     probed lists, never corpus); the radius variant returns an unbounded-
     per-query result by SEMANTICS, so downstream consumers paginate on
     (query_id, rank) rather than collecting."""
-    from pyspark.sql import Window
-
     sims = _ivf_candidate_sims(spark, sf_dir, _IVF_PROBE)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim_raw").desc(), F.col("neighbor_id")
@@ -3229,9 +2962,6 @@ def ann_range_search(spark, sf_dir):
         .filter(F.col("sim") >= _RANGE_R)
         .select("query_id", "neighbor_id", "rank", "sim")
     )
-
-
-ann_range_search.__doc__ = ann_range_search.__doc__.replace("{R}", str(_RANGE_R))
 
 
 # ---- probe-traffic / hot-list report over the IVF index ---------------------

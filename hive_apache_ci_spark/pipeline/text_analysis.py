@@ -268,7 +268,7 @@ FROM toks t LEFT JOIN fp ON t.doc_id = fp.doc_id
 @query("text_winnow_fingerprints", oracle=_WINNOW_SQL)
 def text_winnow_fingerprints(spark, sf_dir):
     """Winnowing document fingerprints (the MOSS algorithm): hash every
-    {K}-token k-gram, slide a window of {W} consecutive k-gram hashes, and
+    `_WIN_K`-token k-gram, slide a window of `_WIN_W` consecutive k-gram hashes, and
     select each window's minimum (rightmost position on ties) — the
     guaranteed-coverage local sampling scheme for substring-level dup
     detection. Emits per doc the fingerprint count, density (theoretical
@@ -276,10 +276,10 @@ def text_winnow_fingerprints(spark, sf_dir):
     hashes, so the oracle pins the exact fingerprint SET, not just counts.
 
     100 TB shape: everything is per-document — one explode to k-grams, a
-    {W}-row window min on the (doc, pos)-sorted exchange, and a {W}-wide
+    `_WIN_W`-row window min on the (doc, pos)-sorted exchange, and a `_WIN_W`-wide
     self-join to find the rightmost argmin (bounded blowup, never
     corpus-pairwise); the final digest is one groupBy(doc_id). Documents
-    with fewer than {W} k-grams emit zero fingerprints by construction."""
+    with fewer than `_WIN_W` k-grams emit zero fingerprints by construction."""
     from pyspark.sql import Window as W
 
     d = spread(T(spark, sf_dir, "documents"), "doc_id")
@@ -359,11 +359,6 @@ def text_winnow_fingerprints(spark, sf_dir):
             F.coalesce("digest", F.lit("")).alias("fp_digest"),
         )
     )
-
-
-text_winnow_fingerprints.__doc__ = text_winnow_fingerprints.__doc__.replace(
-    "{K}", str(_WIN_K)
-).replace("{W}", str(_WIN_W))
 
 
 # ---- round 7: Flesch-Kincaid readability ---------------------------------
@@ -499,7 +494,7 @@ _ZIPF_TOPK = 200
 )
 def text_zipf_fit(spark, sf_dir):
     """Zipf's-law fit per language: OLS of ln(frequency) on ln(rank) over
-    each language's top-{K} corpus token frequencies — slope ≈ −1 with
+    each language's top-`_ZIPF_TOPK` corpus token frequencies — slope ≈ −1 with
     high r² is the signature of natural language, so a corpus slice
     whose slope collapses toward 0 (flat = synthetic/boilerplate) or
     whose r² craters (bimodal = mixed template+prose) fails the
@@ -515,7 +510,7 @@ def text_zipf_fit(spark, sf_dir):
     100 TB: tokenization fans out map-side; (lang, token) counts
     collapse by partial agg; the rank window rides a lang-keyed exchange
     over distinct terms (vocabulary-sized, not corpus-sized); the OLS
-    reduces {K} rows per lang to 5 moments. One corpus scan."""
+    reduces `_ZIPF_TOPK` rows per lang to 5 moments. One corpus scan."""
     d = T(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -555,9 +550,6 @@ def text_zipf_fit(spark, sf_dir):
         .alias("intercept"),
         F.round(num * num / (dxx * dyy) + F.lit(1e-9), 4).alias("r2"),
     )
-
-
-text_zipf_fit.__doc__ = text_zipf_fit.__doc__.replace("{K}", str(_ZIPF_TOPK))
 
 
 # ---- RAKE keyword extraction ----------------------------------------------
@@ -620,7 +612,7 @@ def text_keyword_rake(spark, sf_dir):
     """RAKE keyword extraction (Rose et al. 2010): candidate phrases are
     maximal stopword-free token runs; each word scores degree/frequency
     (degree = total length of phrases it appears in — co-occurrence mass);
-    a phrase scores the sum of its member word scores; top-{K} phrases.
+    a phrase scores the sum of its member word scores; top-`_RAKE_K` phrases.
     The classic cheap unsupervised keyword surface for corpus triage.
 
     Phrase assembly is gaps-and-islands (pos - row_number within doc over
@@ -632,7 +624,7 @@ def text_keyword_rake(spark, sf_dir):
 
     100 TB: token explode is map-side; island grouping shuffles on
     (doc_id) once; word stats shuffle on token; phrase-score shuffles on
-    phrase text; the only global structure is the final top-{K}
+    phrase text; the only global structure is the final top-`_RAKE_K`
     (orderBy().limit() = distributed TakeOrderedAndProject). Nothing is
     ever pairwise."""
     from pyspark.sql import Window
@@ -681,9 +673,6 @@ def text_keyword_rake(spark, sf_dir):
         F.row_number().over(wr).alias("rk"),
         "phrase", "n_words", "n_occ", "score",
     )
-
-
-text_keyword_rake.__doc__ = text_keyword_rake.__doc__.replace("{K}", str(_RAKE_K))
 
 
 # ---- label-noise audit: lang label vs lang-ID prediction --------------------

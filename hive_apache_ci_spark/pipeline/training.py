@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..helpers import T, materialize
 from ..registry import query
+from .similarity import best_label, dot_fold, explode_dims, mean_vectors
 from .text_analysis import STOPWORDS, _STOP_SQL
 
 _LR_ITERS = 4
@@ -58,8 +59,9 @@ def _z_sql(w: str) -> str:
 
 
 def _logreg_chain_sql() -> str:
-    """The unrolled training CTE chain (feat, w0..w{ITERS}) — shared by the
-    trainer oracle and the round-6 calibration-report oracle."""
+    """The unrolled training CTE chain (feat, then one ``w`` CTE per round
+    through `_LR_ITERS`) — shared by the trainer oracle and the round-6
+    calibration-report oracle."""
     parts = [
         f"WITH {_feat_sql()},",
         "    w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)",
@@ -166,7 +168,7 @@ def _logreg_train(spark, sf_dir):
 
 @query("train_logreg_quality", oracle=_logreg_oracle())
 def train_logreg_quality(spark, sf_dir):
-    """Batch-GD logistic regression (lr={LR}, {I} fixed full-batch rounds,
+    """Batch-GD logistic regression (lr=`_LR_RATE`, `_LR_ITERS` fixed full-batch rounds,
     w init 0) predicting lang='en' from per-doc surface features (capped
     length, type-token ratio, stopword fraction + bias) — the quality /
     language classifier training step of an LLM data pipeline, expressed
@@ -177,7 +179,7 @@ def train_logreg_quality(spark, sf_dir):
     term order and quantized to 9dp BEFORE the sigmoid (so libm exp()
     differences see identical inputs and contribute ≤1 ulp); per-round
     weights rounded to 9dp after the gradient step. DuckDB unrolls the
-    same {I} rounds.
+    same `_LR_ITERS` rounds.
 
     100 TB shape: the model state is 4 doubles carried on the driver;
     each round is one corpus scan aggregated into 4 partial-summed
@@ -215,11 +217,6 @@ def train_logreg_quality(spark, sf_dir):
         )
         weights = row if weights is None else weights.unionAll(row)
     return weights.crossJoin(F.broadcast(metrics))
-
-
-train_logreg_quality.__doc__ = train_logreg_quality.__doc__.replace(
-    "{LR}", str(_LR_RATE)
-).replace("{I}", str(_LR_ITERS))
 
 
 # ---- round 6: classifier calibration (reliability diagram) ---------------
@@ -264,7 +261,7 @@ def quality_calibration_report(spark, sf_dir):
     can drive downstream sampling weights (a classifier can be accurate
     yet badly calibrated, which silently skews probability-weighted corpus
     mixing): score every document with the SAME trained model as
-    `train_logreg_quality` (shared `_logreg_train`), bucket into {B}
+    `train_logreg_quality` (shared `_logreg_train`), bucket into `_CAL_BINS`
     EQUAL-COUNT bins by p-quantile boundaries, and report per bin the
     document count, mean predicted probability, and empirical positive
     rate — calibration = the last two agreeing per bin. Equal-count (not
@@ -276,7 +273,7 @@ def quality_calibration_report(spark, sf_dir):
     discipline) and bin assignment is pure comparison against them. Scale:
     NO global sort/window — the boundaries are a 4-value aggregate
     broadcast back (the window_ntile_scaled pattern), so the report is one
-    corpus scan + one {B}-row aggregate at any corpus size."""
+    corpus scan + one `_CAL_BINS`-row aggregate at any corpus size."""
     feat, w, z = _logreg_train(spark, sf_dir)
     p = F.round(1.0 / (1.0 + F.exp(-z)), 6)
     scored = feat.crossJoin(F.broadcast(w)).select(
@@ -304,11 +301,6 @@ def quality_calibration_report(spark, sf_dir):
             F.round(F.avg("y") + F.lit(1e-9), 4).alias("empirical_rate"),
         )
     )
-
-
-quality_calibration_report.__doc__ = quality_calibration_report.__doc__.replace(
-    "{B}", str(_CAL_BINS)
-)
 
 
 # ---- round 7: standardized-coefficient importance report -----------------
@@ -587,41 +579,18 @@ def _heldout_centroid_scores(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings")
     tr = e.filter(F.col("vec_id") % 5 != 0)
     te = e.filter(F.col("vec_id") % 5 == 0)
-    dims = tr.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvec = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "c"))),
-        lambda s: s.getField("c"),
-    )
-    cvecs = (
-        centroids.groupBy("label")
-        .agg(cvec.alias("cvec"))
-        .select(
-            F.col("label").alias("c_label"),
-            "cvec",
-            F.sqrt(
-                F.aggregate("cvec", F.lit(0.0), lambda acc, x: acc + x * x)
-            ).alias("cnorm"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with("embedding", "cvec", lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    cvecs = mean_vectors(explode_dims(tr, "label"), "label").select(
+        F.col("label").alias("c_label"),
+        "cvec",
+        F.sqrt(
+            F.aggregate("cvec", F.lit(0.0), lambda acc, x: acc + x * x)
+        ).alias("cnorm"),
     )
     return te.crossJoin(F.broadcast(cvecs)).select(
         "vec_id",
         "label",
         "c_label",
-        (dot / F.col("cnorm")).alias("score"),
+        (dot_fold("embedding", "cvec") / F.col("cnorm")).alias("score"),
     )
 
 
@@ -695,12 +664,7 @@ def classify_centroid_eval(spark, sf_dir):
     corpus-sized shuffle. Argmax ties broken by an epsilon-scaled label
     term mirrored in the oracle; centroid values 6dp-quantized before any
     dot product (repo discipline, ADVICE r4)."""
-    scored = _heldout_centroid_scores(spark, sf_dir)
-    pred = scored.groupBy("vec_id", "label").agg(
-        F.max_by("c_label", F.col("score") - F.col("c_label") * 1e-12).alias(
-            "pred_label"
-        )
-    )
+    pred = best_label(_heldout_centroid_scores(spark, sf_dir), "vec_id", "label")
     cells = pred.groupBy("label", "pred_label").agg(F.count("*").alias("n"))
     rowtot = cells.groupBy("label").agg(F.sum("n").alias("row_n"))
     tot = cells.agg(
@@ -807,14 +771,7 @@ def train_kfold_cv(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings").withColumn(
         "fold", F.col("vec_id") % 5
     )
-    dims = e.select(
-        "fold", "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "fold",
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
+    dims = explode_dims(e, "fold", "label")
     per_flp = dims.groupBy("fold", "label", "pos").agg(
         F.sum("val").alias("s"), F.count("*").alias("n")
     )
@@ -847,11 +804,6 @@ def train_kfold_cv(spark, sf_dir):
             ).alias("cnorm"),
         )
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "cvec", lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     scored = e.join(
         F.broadcast(cvecs), e.fold == cvecs.c_fold
     ).select(
@@ -859,13 +811,9 @@ def train_kfold_cv(spark, sf_dir):
         "fold",
         "label",
         "c_label",
-        (dot / F.col("cnorm")).alias("score"),
+        (dot_fold("embedding", "cvec") / F.col("cnorm")).alias("score"),
     )
-    pred = scored.groupBy("vec_id", "fold", "label").agg(
-        F.max_by("c_label", F.col("score") - F.col("c_label") * 1e-12).alias(
-            "pred_label"
-        )
-    )
+    pred = best_label(scored, "vec_id", "fold", "label")
     perfold = pred.groupBy("fold").agg(
         F.count("*").cast("bigint").alias("n_eval"),
         F.round(
@@ -1054,12 +1002,7 @@ def quality_cohen_kappa(spark, sf_dir):
 
     100 TB shape: reuses the broadcast-centroid scoring pass; po/pe are
     |L|-cell marginal aggregates — nothing after the scan scales."""
-    scored = _heldout_centroid_scores(spark, sf_dir)
-    pred = scored.groupBy("vec_id", "label").agg(
-        F.max_by("c_label", F.col("score") - F.col("c_label") * 1e-12).alias(
-            "pred_label"
-        )
-    )
+    pred = best_label(_heldout_centroid_scores(spark, sf_dir), "vec_id", "label")
     tot = pred.agg(
         F.count("*").alias("n"),
         F.avg(

@@ -635,15 +635,15 @@ def _z_value_sql(x: str, y: str, spark_syntax: bool) -> str:
 def io_zorder_layout(spark, sf_dir):
     """Z-order (Morton-curve) clustering layout — the multi-column
     file-skipping primitive behind Delta/Iceberg `OPTIMIZE ZORDER BY`:
-    interleave the low {B} bits of two join/filter keys into a z-value,
-    range-bucket on its top {L2} bits, and report per-bucket min/max of
+    interleave the low `_Z_BITS` bits of two join/filter keys into a z-value,
+    range-bucket on its top `_Z_BUCKETS_LOG2` bits, and report per-bucket min/max of
     BOTH keys. Because the curve preserves locality in both dimensions at
     once, every bucket covers a bounded rectangle of (orderkey, partkey) —
     so parquet footer min/max stats prune files for predicates on EITHER
     key, which a single-column sort cannot do. At 100 TB the layout step
     is `repartitionByRange(zval) + sortWithinPartitions(zval)` before the
     write (io_sorted_layout is the one-dimensional form), with keys
-    range-normalized to {B}-bit grid cells from one broadcast min/max
+    range-normalized to `_Z_BITS`-bit grid cells from one broadcast min/max
     scalar (exactly how engines bin z-order on arbitrary key domains);
     this query is
     the layout auditor: the per-bucket key-range report IS the skipping
@@ -681,11 +681,6 @@ def io_zorder_layout(spark, sf_dir):
     )
 
 
-io_zorder_layout.__doc__ = io_zorder_layout.__doc__.replace(
-    "{B}", str(_Z_BITS)
-).replace("{L2}", str(_Z_BUCKETS_LOG2))
-
-
 # ---- Python DataSource API (Spark 4.0 custom connector) ------------------
 
 _PYDS_ROWS = 1000
@@ -705,7 +700,7 @@ def io_python_datasource(spark, sf_dir):
     """Custom connector via the Spark 4 Python DataSource API (the
     pure-Python successor to DataSource V2 for source authoring — the
     extension point Hive served with custom SerDes/StorageHandlers): a
-    registered `DataSource` whose reader declares {P} `InputPartition`s,
+    registered `DataSource` whose reader declares `_PYDS_PARTS` `InputPartition`s,
     each generating its deterministic row slice executor-side. This is
     the template for bespoke 100 TB ingests (internal APIs, tensor
     stores, proprietary formats): partition planning happens driver-side
@@ -747,11 +742,6 @@ def io_python_datasource(spark, sf_dir):
 
     spark.dataSource.register(RangeDocSource)
     return spark.read.format("hive_apache_ci_rangedoc").load()
-
-
-io_python_datasource.__doc__ = io_python_datasource.__doc__.replace(
-    "{P}", str(_PYDS_PARTS)
-)
 
 
 _CATALOG_ORACLE = "\nUNION ALL\n".join(
@@ -997,10 +987,10 @@ FROM assigned a GROUP BY a.s_after
 @query("io_consistent_hash_shards", oracle=_CH_SQL)
 def io_consistent_hash_shards(spark, sf_dir):
     """Consistent-hashing shard assignment + reshard audit: documents land
-    on a {V}-virtual-node md5 ring of {S0} shards, then the ring grows to
-    {S1} shards and the report shows, per new shard, how many docs stayed
+    on a `_CH_V`-virtual-node md5 ring of `_CH_S0` shards, then the ring grows to
+    `_CH_S1` shards and the report shows, per new shard, how many docs stayed
     vs arrived and the global moved share — which consistent hashing
-    bounds near 1/{S1} (~11%), where naive mod-sharding moves ~8/9 of the
+    bounds near 1/`_CH_S1` (~11%), where naive mod-sharding moves ~8/9 of the
     corpus. The layout op behind any incremental reshard / cache ring /
     partition-evolution story.
 
@@ -1101,13 +1091,6 @@ def io_consistent_hash_shards(spark, sf_dir):
             ).alias("moved_share"),
         )
     )
-
-
-io_consistent_hash_shards.__doc__ = (
-    io_consistent_hash_shards.__doc__.replace("{V}", str(_CH_V))
-    .replace("{S0}", str(_CH_S0))
-    .replace("{S1}", str(_CH_S1))
-)
 
 
 # ---- XML roundtrip (Spark 4 native XML datasource) --------------------------

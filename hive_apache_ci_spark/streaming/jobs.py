@@ -25,8 +25,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
+from pyspark.sql.streaming import DataStreamWriter
 
-from ..helpers import materialize, ravg
+from ..helpers import materialize, ravg, run_scratch
 from ..registry import query
 
 def _events_schema(ts_type: Ty.DataType) -> Ty.StructType:
@@ -136,6 +137,24 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+_DRAIN_TIMEOUT_S = 300
+
+
+def drain(writer: DataStreamWriter, name: str) -> None:
+    """Run ``writer`` with ``Trigger.AvailableNow`` until it has processed
+    every input available at start, then stop it. Raises ``TimeoutError``
+    naming the query if that takes more than ``_DRAIN_TIMEOUT_S``; the
+    query is stopped either way."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"streaming query {name} did not finish in {_DRAIN_TIMEOUT_S}s"
+            )
+    finally:
+        q.stop()
+
+
 def _run_to_memory(
     stream_df: DataFrame, mode: str = "complete", checkpoint: str | None = None
 ) -> DataFrame:
@@ -143,22 +162,11 @@ def _run_to_memory(
     memory sink and return the materialized table. ``checkpoint`` makes the
     run resumable (restart/resume equivalence tests)."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    w = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-    )
+    w = stream_df.writeStream.format("memory").queryName(name).outputMode(mode)
     if checkpoint is not None:
         w = w.option("checkpointLocation", checkpoint)
-    q = w.start()
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError(f"streaming query {name} did not finish in 300s")
-    finally:
-        q.stop()
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    drain(w, name)
+    return stream_df.sparkSession.table(name)
 
 
 # Restartable-job registry: name -> {mode, build, post, acc}.
@@ -316,13 +324,7 @@ def stream_foreach_batch_sink(spark, sf_dir):
     (same class as stream_upsert_latest_state: a fixed path would let two
     concurrent runs at one SF clobber each other); the
     readback is materialized so the scratch dirs are removed eagerly."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    sink = os.path.join(
-        tempfile.gettempdir(),
-        "hive_apache_ci_spark_stream",
-        tag,
-        f"sink_fb_{uuid.uuid4().hex}",
-    )
+    sink = run_scratch("stream", sf_dir, f"sink_fb_{uuid.uuid4().hex}")
     run_foreach_batch_phase(events_stream(spark, sf_dir), sink)
     return materialize(foreach_batch_readback(spark, sink), sink, sink + "_ckpt")
 
@@ -342,17 +344,12 @@ def run_foreach_batch_phase(source: DataFrame, sink: str) -> None:
             .parquet(sink)
         )
 
-    q = (
-        source.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", sink + "_ckpt")
-        .start()
+    drain(
+        source.writeStream.foreachBatch(write_batch).option(
+            "checkpointLocation", sink + "_ckpt"
+        ),
+        "foreach_batch_sink",
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("foreachBatch stream did not finish in 300s")
-    finally:
-        q.stop()
 
 
 def foreach_batch_readback(spark: SparkSession, sink: str) -> DataFrame:
@@ -715,13 +712,7 @@ def stream_upsert_latest_state(spark, sf_dir):
     the same pointer-flip commit protocol as Delta/Iceberg metadata."""
     import shutil
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "hive_apache_ci_spark_stream",
-        tag,
-        f"upsert_{uuid.uuid4().hex}",
-    )
+    base = run_scratch("stream", sf_dir, f"upsert_{uuid.uuid4().hex}")
     state_root = os.path.join(base, "state")
     ptr = os.path.join(state_root, "LATEST")
     ckpt = os.path.join(base, "ckpt")
@@ -820,19 +811,12 @@ def stream_upsert_latest_state(spark, sf_dir):
         if live is not None:
             shutil.rmtree(live[0], ignore_errors=True)
 
-    src = events_stream(spark, sf_dir)
-    q = (
-        src
+    drain(
+        events_stream(spark, sf_dir)
         .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "stream_upsert_latest_state",
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("stream_upsert_latest_state did not finish")
-    finally:
-        q.stop()
     # Materialize the final state so the per-run dir can be removed
     # immediately (the returned DataFrame no longer reads the files).
     final = live_state()
@@ -855,7 +839,7 @@ _PYSS_BATCH = 16      # rows per micro-batch offset advance
 
 class _PyFeedStreamReader:
     """SimpleDataSourceStreamReader emitting a deterministic bounded feed:
-    offsets advance {_PYSS_BATCH} rows per micro-batch until {_PYSS_N}.
+    offsets advance `_PYSS_BATCH` rows per micro-batch until `_PYSS_N`.
     readBetweenOffsets makes replay exact — a restarted query re-reads any
     uncommitted span and lands on the identical rows (exactly-once)."""
 
@@ -998,13 +982,9 @@ def stream_state_store_reader(spark, sf_dir):
     parallelizes like the stream itself and never replays the source.
 
     Cites SURVEY.md §2.10 (state management row)."""
-    import uuid as _uuid
-
-    from ..helpers import run_scratch
-
     src = events_stream(spark, sf_dir)
     agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = run_scratch("stream", sf_dir, "ssr_ckpt_" + _uuid.uuid4().hex[:8])
+    ckpt = run_scratch("stream", sf_dir, "ssr_ckpt_" + uuid.uuid4().hex[:8])
     _run_to_memory(agg, "complete", checkpoint=ckpt)
     st = spark.read.format("statestore").load(ckpt)
     return st.select(

@@ -1055,7 +1055,7 @@ def events_downsample_lttb(spark, sf_dir):
     """Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013) —
     the standard visually-faithful decimation dashboards run before
     plotting a dense series: per event_type, keep first + last point and,
-    from each of {B} equal-COUNT middle buckets, the point forming the
+    from each of `_LTTB_OUT - 2` equal-COUNT middle buckets, the point forming the
     largest triangle with its neighbor buckets' anchors. This is the
     PARALLEL variant (anchors = neighbor-bucket MEANS, fixed up front)
     rather than the sequential original (anchor = previously selected
@@ -1071,7 +1071,7 @@ def events_downsample_lttb(spark, sf_dir):
     the per-bucket argmax tie-breaks on (ts, event_id).
 
     100 TB: one (type)-keyed window for idx/n, one (type, bucket) shuffle
-    for means and argmax — the anchors table is {N}·|types| rows
+    for means and argmax — the anchors table is `_LTTB_OUT`·|types| rows
     (broadcast); no global sort, no collect. At extreme per-type density,
     sub-key the window by coarse time range and LTTB each range."""
     from pyspark.sql import Window
@@ -1184,12 +1184,6 @@ def events_downsample_lttb(spark, sf_dir):
         )
     )
     return sel.unionByName(ends)
-
-
-events_downsample_lttb.__doc__ = (
-    events_downsample_lttb.__doc__.replace("{B}", str(_LTTB_OUT - 2))
-    .replace("{N}", str(_LTTB_OUT))
-)
 
 
 # ---- round 7: CUSUM changepoint detection --------------------------------
@@ -2095,7 +2089,7 @@ FROM ev
 def events_forecast_backtest(spark, sf_dir):
     """Rolling-origin forecast backtest of the Holt linear smoother: for
     each series, train on the first 60% / 80% of hourly buckets, forecast
-    h=1..{H} ahead, and score absolute percentage error against the
+    h=1..`_BT_H` ahead, and score absolute percentage error against the
     held-out actuals — the evaluation loop that decides whether
     events_holt_linear's model is trustworthy before anyone alarms on it
     (training-set fit like SSE cannot say that; only out-of-sample error
@@ -3186,7 +3180,7 @@ FROM rates
 def events_slo_burn_rate(spark, sf_dir):
     """Multi-window SLO burn-rate alerting (Google SRE workbook): per hour
     the 1h and trailing-6h error-budget burn rates (observed error rate /
-    allowed rate for an {SLO}% success SLO) and the page condition —
+    allowed rate for a `_SLO_TARGET` success SLO) and the page condition —
     BOTH windows burning (short window > 2x budget AND long window > 1x)
     — the standard rule that pages on real sustained burn while ignoring
     blips the long window absorbs. The query every SRE alerting pipeline
@@ -3231,11 +3225,6 @@ def events_slo_burn_rate(spark, sf_dir):
         burn6.alias("burn_6h"),
         ((burn1 > 2.0) & (burn6 > 1.0)).alias("page"),
     )
-
-
-events_slo_burn_rate.__doc__ = events_slo_burn_rate.__doc__.replace(
-    "{SLO}", str(int(_SLO_TARGET * 100))
-)
 
 
 # ---- drift monitoring: Population Stability Index ---------------------------

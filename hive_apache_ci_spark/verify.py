@@ -15,6 +15,7 @@ values exactly, and additionally reports whether a failure would pass at
 
 from __future__ import annotations
 
+import argparse
 import math
 import sys
 from collections import Counter
@@ -141,16 +142,15 @@ def main(argv: list[str]) -> int:
     from .session import get_spark
 
     sf_dir = "/root/testdata/sf0.001"
-    names = []
-    it = iter(argv)
-    for a in it:
-        if a == "--sf-dir":
-            sf_dir = next(it)
-        else:
-            names.append(a)
+    ap = argparse.ArgumentParser(prog="python -m hive_apache_ci_spark.verify")
+    ap.add_argument("--sf-dir", default=sf_dir)
+    ap.add_argument("names", nargs="*", help="queries to check (default: all)")
+    # intermixed: names may come before or after --sf-dir
+    args = ap.parse_intermixed_args(argv)
+    sf_dir = args.sf_dir
     spark = get_spark("verify")
     con = duck_connect(sf_dir)
-    targets = names or sorted(all_queries().keys())
+    targets = args.names or sorted(all_queries().keys())
     failures = 0
     for name in targets:
         try:

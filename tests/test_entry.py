@@ -78,3 +78,28 @@ def test_coverage_doc_counts_match_registry():
     assert nq == len(all_queries()), (nq, len(all_queries()))
     assert no == len(all_oracles()), (no, len(all_oracles()))
     assert nr == len(all_queries()) - len(all_oracles())
+
+
+def test_query_docstrings_name_constants_not_placeholders():
+    """A docstring names the constant it describes (e.g. `_KM_ITERS`); no
+    registered query shows a raw ``{NAME}`` placeholder, and no engine
+    module rewrites a docstring at import time."""
+    import os
+    import re
+
+    from hive_apache_ci_spark.registry import all_queries
+
+    raw = {
+        name
+        for name, fn in all_queries().items()
+        if re.search(r"\{[A-Z_][A-Z0-9_]*\}", fn.__doc__ or "")
+    }
+    assert not raw, sorted(raw)
+    rewrites = []
+    for dirpath, _, files in os.walk("hive_apache_ci_spark"):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                if re.search(r"(?m)^\w+\.__doc__ = ", open(path).read()):
+                    rewrites.append(path)
+    assert not rewrites, rewrites

@@ -44,6 +44,17 @@ def test_verify_main_fails_on_oracle_oom(monkeypatch, capsys):
     assert "FAIL q_oom" in out and "ORACLE_OOM_KNOWN_LIMIT" in out, out
 
 
+def test_verify_main_rejects_sf_dir_without_value(capsys):
+    """A bare ``--sf-dir`` is a usage error (exit 2 with a message), not a
+    traceback."""
+    from hive_apache_ci_spark import verify
+
+    with pytest.raises(SystemExit) as exc:
+        verify.main(["--sf-dir"])
+    assert exc.value.code == 2
+    assert "--sf-dir" in capsys.readouterr().err
+
+
 def test_approx_count_distinct_error_bound(spark):
     """approx_count_distinct (HLL++, rsd 5%) must stay within 3*rsd of
     exact on every group; the query now computes the verdict in-plan

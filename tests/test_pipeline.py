@@ -548,3 +548,97 @@ def test_parse_wav_header_edge_cases():
     # fmt chunk present but truncated container: no data chunk -> no dur
     wav2 = b"RIFF" + (100).to_bytes(4, "little") + b"WAVE" + chunk(b"fmt ", fmt)
     assert parse_wav_header(wav2) == ("wav", 2, 16000, 16, None)
+
+
+def test_vector_kernels_match_plain_python(spark):
+    """sq_l2, mean_vectors and nearest_label on a tiny in-memory frame,
+    against the same arithmetic in plain Python: a float32 input is widened
+    to double before the fold, a mean that lands exactly on a 6dp
+    half-boundary rounds up, and two equidistant centroids route to the
+    lower label."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from hive_apache_ci_spark.pipeline.similarity import (
+        explode_dims,
+        mean_vectors,
+        nearest_label,
+        sq_l2,
+    )
+
+    a = [0.1, 2.5, -3.0]  # stored as float32: 0.1 widens inexactly
+    b = [0.5, 2.0, 1.0]
+    want = 0.0
+    for x, y in zip(a, b):
+        x = float(np.float32(x))
+        want += (x - y) * (x - y)
+    got = (
+        spark.createDataFrame([(a, b)], "a array<float>, b array<double>")
+        .select(sq_l2("a", "b").alias("d2"))
+        .first()
+        .d2
+    )
+    assert got == want
+
+    vecs = [("k", [1.0, 0.000001, -0.000001]), ("k", [2.0, 0.0, 0.0])]
+    df = spark.createDataFrame(vecs, "key string, embedding array<double>")
+    got = mean_vectors(explode_dims(df, "key"), "key").first().cvec
+
+    def mean6(xs):
+        m = Decimal(repr(sum(xs) / len(xs) + 1e-12))
+        return float(m.quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+    want = [mean6([v[1][d] for v in vecs]) for d in range(3)]
+    # +-5e-07 sit on the half-boundary; the 1e-12 shift sends both up
+    assert want == [1.5, 0.000001, 0.0]
+    assert got == want
+
+    cvecs = spark.createDataFrame(
+        [(7, [0.0, 1.0]), (3, [1.0, 0.0])], "c_label int, cvec array<double>"
+    )
+    q = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [0.0, 2.0])], "vec_id int, embedding array<double>"
+    )
+    routed = {r.vec_id: r.c_label for r in nearest_label(q, cvecs, "vec_id").collect()}
+    assert routed == {1: 3, 2: 7}
+
+
+def _enclosing_functions(pattern):
+    """{(module, innermost function)} of every engine source match."""
+    import ast
+    import re
+
+    from .test_scratch_discipline import _sources
+
+    found = set()
+    for rel, src in _sources():
+        hits = [src.count("\n", 0, m.start()) + 1 for m in re.finditer(pattern, src)]
+        if not hits:
+            continue
+        defs = [
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for line in hits:
+            inside = [d for d in defs if d.lineno <= line <= d.end_lineno]
+            inner = min(inside, key=lambda d: d.end_lineno - d.lineno, default=None)
+            found.add((rel, inner.name if inner else None))
+    return found
+
+
+def test_vector_kernels_have_one_definition():
+    """Each vector kernel is written once: the squared-difference lambda
+    only in sq_l2, a posexplode of an embedding array only in
+    explode_dims, and the nearest-label argmin only in nearest_label."""
+    sim = "pipeline/similarity.py"
+    assert _enclosing_functions(
+        r"lambda\s+(\w+),\s*(\w+):\s*\(\s*\1\b[^-\n]*-\s*\2\b"
+    ) == {(sim, "sq_l2")}
+    assert _enclosing_functions(
+        r"posexplode\((?:col\)|(?:F\.col\()?[\"'](?:embedding|emb)[\"'])"
+    ) == {(sim, "explode_dims")}
+    assert _enclosing_functions(r"min_by\(\s*[\"']c_label[\"']") == {
+        (sim, "nearest_label")
+    }

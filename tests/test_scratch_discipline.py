@@ -109,8 +109,7 @@ def test_no_fixed_shared_tmp_write_paths_in_tree():
     allowed_roots = {
         # helpers.run_scratch — the per-run factory itself
         "helpers.py",
-        # _staged_events_dir (content-addressed atomic copy), per-run uuid
-        # stream sinks
+        # _staged_events_dir (content-addressed atomic copy)
         "streaming/jobs.py",
         # _pq_index_dir: content-addressed (recipe+mtime key), atomic publish
         "pipeline/similarity.py",

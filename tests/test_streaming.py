@@ -221,19 +221,16 @@ def _write_halves(spark, base):
 def _run_phase(spark, out_df, mode, ckpt):
     import uuid
 
+    from hive_apache_ci_spark.streaming.jobs import drain
+
     name = f"restart_{uuid.uuid4().hex[:10]}"
-    q = (
+    drain(
         out_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        name,
     )
-    try:
-        assert q.awaitTermination(300)
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -243,20 +240,17 @@ def _run_phase_to_parquet(out_df, mode, ckpt, sink):
     append every emitted micro-batch to a parquet dir — the accumulated
     rows across phases are exactly the union a one-shot run would emit."""
 
+    from hive_apache_ci_spark.streaming.jobs import drain
+
     def dump(batch_df, batch_id):
         batch_df.write.mode("append").parquet(sink)
 
-    q = (
+    drain(
         out_df.writeStream.foreachBatch(dump)
         .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        sink,
     )
-    try:
-        assert q.awaitTermination(300)
-    finally:
-        q.stop()
 
 
 def test_stream_restart_resume_equivalence(spark, tmp_path):
