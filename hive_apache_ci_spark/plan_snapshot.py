@@ -134,6 +134,9 @@ _RULES: tuple[tuple[re.Pattern[str], str], ...] = (
     # `NativeMethodAccessorImpl.java:0` under some JVMs, `<unknown>:0`
     # under others); normalize the whole callsite token, which may end its line
     (re.compile(r"localCheckpoint at [^,\n]+"), "localCheckpoint at <SITE>"),
+    # Spark 4's common-expression aliases carry a session-global counter
+    # (_common_expr_1 on one build, _common_expr_3 on the next)
+    (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
 )
 
 

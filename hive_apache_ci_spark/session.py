@@ -69,12 +69,20 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
 }
 
-# Confs that must be set at session-build time (ignored via try/except when
-# applied to an already-running session).
+# Confs that must be set at session-build time. Only ``get_spark`` applies
+# them, through the builder; a session that is already running ignores them.
 BUILD_CONFS: dict[str, str] = {
     "spark.driver.memory": "8g",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
+    # JVM-wide cache of Janino-compiled codegen classes (Spark's default is
+    # 100, held as 4 LRU segments of 25). One warm pass of the 12 olap_mix
+    # queries needs ~227 classes and one of pipeline_write ~140-150, so at
+    # 100 every warm query recompiled all of its code; at 1000 a warm pass
+    # compiles 0-1 (perfbench --trace 1).
+    # The conf is static: only sessions built by get_spark get the larger
+    # cache, and a session someone else already started keeps the default.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # managed-table location for bucketed saveAsTable (SMB joins) — keep the
     # repo clean and scratch-resident
     "spark.sql.warehouse.dir": "/tmp/hive_apache_ci_spark_warehouse",

@@ -96,3 +96,17 @@ def test_checkpoint_callsite_rule_stops_at_line_end():
         "Arguments: [a#N], MapPartitionsRDD[NL] at localCheckpoint at <SITE>\n"
         "(2) HashAggregate [codegen id : 1]\n"
     )
+
+
+def test_common_expr_alias_counter_is_normalized():
+    """Spark 4 numbers common-expression aliases with a session-global
+    counter; two builds of one plan differ only in it and must normalize
+    identically."""
+    raw = (
+        "(3) Project\n"
+        "Output [2]: [a#1, _common_expr_{n}#7]\n"
+        "Input [1]: [a#1]\n"
+    )
+    one = normalize_plan_text(raw.format(n=1))
+    assert one == normalize_plan_text(raw.format(n=3))
+    assert "_common_expr_N#N" in one
