@@ -212,6 +212,12 @@ def ngram_array(tokens: Column, n: int) -> Column:
     return F.when(sz >= n, acc).otherwise(F.array().cast("array<string>"))
 
 
+def shingles(text: Column, n: int = 2) -> Column:
+    """Distinct n-token shingles of the lowercased, whitespace-split text.
+    Oracle mirror: ``list_distinct`` over the same n-gram ``list_transform``."""
+    return F.array_distinct(ngram_array(F.split(F.lower(text), r"\s+"), n))
+
+
 def _spread_text(df: DataFrame, text_col: str) -> DataFrame:
     """Column-prune to the text column, then round-robin repartition to the
     configured shuffle-partition count BEFORE the gram explode. A small

@@ -94,6 +94,14 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def md5_int(col, hex_chars: int = 15) -> Column:
+    """The engine's one md5-to-integer hash: the first ``hex_chars`` hex
+    digits of ``md5(col)`` as a BIGINT. 15 digits (60 bits) stay positive
+    in a signed 64-bit long; 8 digits give a 32-bit hash. Oracle mirror:
+    ``CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)``."""
+    return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("bigint")
+
+
 def r2(c: Column) -> Column:
     """Round to 2 decimals — for SUMs of doubles, where cross-engine
     accumulation-order differences live in the ~1e-7 relative tail."""

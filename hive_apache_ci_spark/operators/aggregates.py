@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..helpers import T, materialize, r2, r4, ravg
+from ..helpers import T, materialize, md5_int, r2, r4, ravg
 from ..registry import query
 
 
@@ -1126,21 +1126,9 @@ def agg_count_min_sketch(spark, sf_dir):
 
     def cm_col(key_col):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            key_col.cast("string"),
-                            F.lit(":"),
-                            F.col("r").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int(
+                F.concat(key_col.cast("string"), F.lit(":"), F.col("r").cast("string"))
+            )
             % _CM_WIDTH
         )
 
@@ -1776,23 +1764,15 @@ def agg_bootstrap_ci(spark, sf_dir):
     ).withColumn(
         "u",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("l_orderkey").cast("string"),
-                            F.lit("-"),
-                            F.col("l_linenumber").cast("string"),
-                            F.lit("-"),
-                            F.col("b").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int(
+                F.concat(
+                    F.col("l_orderkey").cast("string"),
+                    F.lit("-"),
+                    F.col("l_linenumber").cast("string"),
+                    F.lit("-"),
+                    F.col("b").cast("string"),
+                )
+            )
             % 1000000
         )
         / F.lit(1000000.0),

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..catalog import run_sql
-from ..helpers import T, r2
+from ..helpers import T, md5_int, r2
 from ..registry import query
 
 
@@ -324,21 +324,13 @@ def tablesample_bucket(spark, sf_dir):
     the files, not a 1/32 filter over all of them."""
     l = T(spark, sf_dir, "lineitem")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        F.col("l_orderkey").cast("string"),
-                        F.col("l_linenumber").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(
+            F.concat_ws(
+                "_",
+                F.col("l_orderkey").cast("string"),
+                F.col("l_linenumber").cast("string"),
+            )
+        )
         % 32
     )
     return l.filter(bucket == 0).select("l_orderkey", "l_linenumber", "l_quantity")

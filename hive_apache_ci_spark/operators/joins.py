@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..catalog import run_sql
-from ..helpers import T, money_sum, r2, ts_lit
+from ..helpers import T, md5_int, money_sum, r2, ts_lit
 from ..registry import query
 
 
@@ -1047,15 +1047,7 @@ def join_spatial_grid(spark, sf_dir):
 
     def coord(axis: str):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("c_custkey").cast("string"), F.lit(axis))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int(F.concat(F.col("c_custkey").cast("string"), F.lit(axis)))
             % 1000000
         ) / F.lit(1000000.0) * F.col("L")
 

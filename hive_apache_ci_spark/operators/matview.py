@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..helpers import T, committed, ravg, run_scratch
+from ..helpers import T, committed, md5_int, ravg, run_scratch
 from ..registry import query
 
 
@@ -104,11 +104,7 @@ def mv_incremental_refresh(spark, sf_dir):
     both sides are partitioned by bucket so the merge co-locates."""
     e = T(spark, sf_dir, "events")
     bucket = (F.floor(F.col("ts").cast("long") / 3600) * 3600).cast("long")
-    split = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
+    split = md5_int(F.col("event_id").cast("string")) % 10
     tagged = e.select(
         bucket.alias("bucket"), "event_type", "value", split.alias("bk")
     )

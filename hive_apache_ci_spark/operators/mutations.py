@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..helpers import T, r2, ravg
+from ..helpers import T, md5_int, r2, ravg
 from ..registry import query
 
 # Source relation for the merge: per-customer finalized-order revenue at a
@@ -246,13 +246,7 @@ def table_diff_snapshots(spark, sf_dir):
     At 100 TB both snapshots partition by the join key (co-located diff);
     emitting only differences keeps the output ∝ drift, not table size."""
     o = T(spark, sf_dir, "orders")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15), 16, 10
-        )
-        .cast("bigint")
-        % 20
-    )
+    bucket = md5_int(F.col("o_orderkey").cast("string")) % 20
     base = o.select("o_orderkey", F.round("o_totalprice", 2).alias("price"))
     kept = o.filter(bucket != 0).select(
         "o_orderkey",

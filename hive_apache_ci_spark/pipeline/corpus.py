@@ -34,8 +34,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..functions.hive_compat import ngram_array
-from ..helpers import T, spread
+from ..functions.hive_compat import ngram_array, shingles
+from ..helpers import T, md5_int, spread
 from ..registry import query
 
 # ---- shared shingle SQL (DuckDB side) -----------------------------------
@@ -57,13 +57,9 @@ def _shingles_spark(df, n: int):
     """(doc_id, shingle) distinct n-token shingles — one explode, JVM-side.
     Spread by doc first so the tokenize+ngram work parallelizes even when
     the corpus arrives as one input split (helpers.spread)."""
-    toks = F.split(F.lower(F.col("text")), r"\s+")
     return (
         spread(df, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(ngram_array(toks, n))).alias("shingle"),
-        )
+        .select("doc_id", F.explode(shingles(F.col("text"), n)).alias("shingle"))
         .filter(F.col("shingle") != "")
     )
 
@@ -169,11 +165,7 @@ def split_decontaminated(spark, sf_dir):
         .select("doc_id")
         .distinct()
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 1000
-    )
+    bucket = md5_int(F.col("doc_id").cast("string")) % 1000
     n_tok = F.size(
         F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
     )
@@ -406,11 +398,7 @@ def sample_stratified_hash(spark, sf_dir):
     state, reproducible on reruns and across engines, pure map-side
     filter — zero shuffles."""
     d = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 1000
-    )
+    bucket = md5_int(F.col("doc_id").cast("string")) % 1000
     rate = F.coalesce(
         *[F.when(F.col("lang") == k, F.lit(v)) for k, v in _RATES.items()],
         F.lit(0),
@@ -516,8 +504,8 @@ def pack_sequences_greedy(spark, sf_dir):
     hash-bucket the corpus (bucket = md5 % 8) and pack WITHIN each bucket
     independently via Arrow-batched applyInPandas — packing parallelism =
     bucket count, and each bucket's packing is fully deterministic (docs
-    processed in (n_tokens desc, doc_id) order). FULLY HASH-ORACLED since
-    round 5: a recursive CTE replays the first-fit loop exactly — per
+    processed in (n_tokens desc, doc_id) order). FULLY HASH-ORACLED: a
+    recursive CTE replays the first-fit loop exactly — per
     step it carries each bucket's open-pack remainders as a list, places
     the next document at the first fitting index (list_position on the
     >=-mask) or appends a new pack, mirroring the imperative Python
@@ -529,11 +517,7 @@ def pack_sequences_greedy(spark, sf_dir):
     docs = d.select(
         "doc_id",
         toks.alias("n_tokens"),
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-            .cast("bigint")
-            % _N_BUCKETS
-        ).alias("bucket"),
+        (md5_int(F.col("doc_id").cast("string")) % _N_BUCKETS).alias("bucket"),
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -632,7 +616,7 @@ def heavy_hitters_twophase(spark, sf_dir):
             F.round(F.col("cnt") * 1.0 / F.col("n") + F.lit(1e-9), 6).alias("share"),
         )
     )
-    # '__total__' audit row (r11): on a FLAT corpus (the bijected sf1/sf10
+    # '__total__' audit row: on a FLAT corpus (the bijected sf1/sf10
     # replication spreads token mass over |vocab| x copies tokens) the
     # CORRECT hitter set is empty — no token reaches N/32. The summary row
     # keeps the differential check non-vacuous at every SF while leaving
@@ -746,11 +730,7 @@ def corpus_end_to_end(spark, sf_dir):
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 1000
-    )
+    bucket = md5_int(F.col("doc_id").cast("string")) % 1000
     rate = F.coalesce(
         *[F.when(F.col("lang") == k, F.lit(v)) for k, v in _RATES.items()],
         F.lit(0),
@@ -789,11 +769,7 @@ def sample_weighted_hash(spark, sf_dir):
     reruns, and partitionings, pure map-side filter, zero shuffles."""
     d = T(spark, sf_dir, "documents")
     keep_p = F.least(F.col("n_chars").cast("double") / 400.0, F.lit(1.0))
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 1000
-    ) / 1000.0
+    u = (md5_int(F.col("doc_id").cast("string")) % 1000) / 1000.0
     return d.filter(u < keep_p).select(
         "doc_id", "lang", F.round(keep_p, 6).alias("keep_p")
     )
@@ -1008,7 +984,7 @@ def corpus_quality_tiers(spark, sf_dir):
     )
 
 
-# ---- round 6: quality-annealed curriculum schedule -----------------------
+# ---- quality-annealed curriculum schedule --------------------------------
 
 _CURR_DECILES = 10
 _CURR_PHASES = ("warmup", "main", "anneal")
@@ -1147,7 +1123,7 @@ def corpus_curriculum_schedule(spark, sf_dir):
     )
 
 
-# ---- round 6: integer token-budget apportionment (largest remainder) -----
+# ---- integer token-budget apportionment (largest remainder) --------------
 
 _BUDGET_TOKENS = 1_000_000
 
@@ -1230,7 +1206,7 @@ def corpus_token_budget_alloc(spark, sf_dir):
     )
 
 
-# ---- round 7: KS two-sample drift monitor --------------------------------
+# ---- KS two-sample drift monitor -----------------------------------------
 
 # Kolmogorov-Smirnov critical value for alpha=0.05, squared form:
 # c(a) = sqrt(-ln(a/2)/2); the verdict compares D^2 * n1*n2/(n1+n2)
@@ -1324,11 +1300,7 @@ def quality_ks_drift(spark, sf_dir):
         + F.lit(1e-9),
         6,
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
+    bucket = md5_int(F.col("doc_id").cast("string")) % 10
     q = d.select(
         F.round(quality + F.lit(1e-9), _KS_BIN_DP).alias("s"),
         bucket.alias("bk"),
@@ -1843,8 +1815,7 @@ def corpus_shuffle_shards(spark, sf_dir):
         (F.conv(F.substring(okey, 1, 15), 16, 10).cast("bigint") % _N_SHARDS)
         .cast("int")
         .alias("shard"),
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
+        md5_int(F.col("doc_id").cast("string"), 8)
         .alias("d32"),
     )
     w = Window.partitionBy("shard").orderBy("okey", "doc_id")
@@ -1862,7 +1833,7 @@ def corpus_shuffle_shards(spark, sf_dir):
     )
 
 
-# ---- round 9: sentence-aware RAG chunking --------------------------------
+# ---- sentence-aware RAG chunking -----------------------------------------
 
 _SENT_BUDGET = 48  # target tokens per chunk
 

@@ -22,8 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.hive_compat import ngram_array
-from ..helpers import T, materialize, spread
+from ..functions.hive_compat import shingles
+from ..helpers import T, materialize, md5_int, spread
 from ..registry import query
 
 N_HASHES = 16
@@ -71,9 +71,8 @@ def dedup_normalized(spark, sf_dir):
     """Dedup after canonicalization (lowercase + whitespace collapse) —
     catches trivially-reformatted copies exact dedup misses."""
     d = T(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return (
-        d.select("doc_id", F.md5(norm).alias("content_hash"))
+        d.select("doc_id", F.md5(_normalized_text()).alias("content_hash"))
         .groupBy("content_hash")
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
@@ -82,9 +81,9 @@ def dedup_normalized(spark, sf_dir):
     )
 
 
-def _shingles(text_col):
-    """Distinct 2-token shingles of the lowercased text."""
-    return F.array_distinct(ngram_array(F.split(F.lower(text_col), r"\s+"), 2))
+def _normalized_text():
+    """Canonical text: trimmed, lowercased, whitespace runs collapsed."""
+    return F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
 
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime) — universal-hash modulus
@@ -110,7 +109,7 @@ def minhash_signatures(df, id_col: str = "doc_id", text_col: str = "text"):
     # CPU-heavy (but byte-light) stage back to one task (helpers.spread).
     sh = (
         spread(df, id_col)
-        .select(F.col(id_col), F.explode(_shingles(F.col(text_col))).alias("shingle"))
+        .select(F.col(id_col), F.explode(shingles(F.col(text_col))).alias("shingle"))
         .filter(F.col("shingle") != "")
         .withColumn("m", F.md5("shingle"))
         .select(
@@ -146,6 +145,22 @@ def lsh_bands(sig, id_col: str = "doc_id"):
         ]
     )
     return sig.select(F.col(id_col), F.posexplode(bands).alias("band", "band_sig"))
+
+
+def _lsh_pairs(bands):
+    """(doc_a, doc_b), doc_a < doc_b: distinct document pairs that share
+    any full band signature — the LSH candidate set."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
 
 
 _MINHASH_ORACLE = f"""
@@ -187,22 +202,57 @@ def dedup_minhash_lsh(spark, sf_dir):
     oracle recomputes identical md5-based signatures in SQL — this is a
     fully-verified LSH, not a rows-only approximation."""
     d = T(spark, sf_dir, "documents")
-    bands = lsh_bands(minhash_signatures(d))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _lsh_pairs(lsh_bands(minhash_signatures(d)))
 
 
 _JACCARD_MAX_DF = 12  # drop shingles present in >12 of the 120 docs (10%)
+
+
+def _shingle_rows(docs):
+    """(doc_id, shingle): one row per distinct 2-token shingle of a doc."""
+    return docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle"))
+
+
+def _cut_hot(sh, max_df=_JACCARD_MAX_DF):
+    """Drop shingles present in more than ``max_df`` docs (stopword
+    bigrams like "of the") BEFORE any pairwise join: they add candidate
+    pairs quadratically in their doc frequency while carrying no dedup
+    signal, and at 100 TB one hot shingle would funnel millions of rows
+    through a single join key."""
+    hot = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_df)
+        .select("shingle")
+    )
+    # hot set is tiny by construction (only high-df shingles) → broadcast anti
+    return sh.join(F.broadcast(hot), "shingle", "left_anti")
+
+
+def _shingle_overlap(sh):
+    """(doc_a, doc_b, c, na, nb) for each doc pair (doc_a < doc_b) sharing
+    a shingle: ``c`` shared shingles, ``na``/``nb`` each doc's shingle
+    count. Keyed by shared shingle, so the n² cross product is never
+    materialized; every score built from it is a ratio of exact integers."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = sh.alias("a"), sh.alias("b")
+    common = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return (
+        common.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
+        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
+        .select(
+            "doc_a", "doc_b", "c",
+            F.col("sa.n").alias("na"), F.col("sb.n").alias("nb"),
+        )
+    )
 
 _JACCARD_ORACLE = f"""
     WITH sh0 AS (
@@ -238,40 +288,13 @@ def dedup_ngram_jaccard(spark, sf_dir):
     shingle (never materializes the full n^2 cross product) — the
     verification layer for MinHash candidates.
 
-    Document-frequency cut: shingles appearing in >10% of the docs
-    (stopword bigrams like "of the") are dropped BEFORE the pairwise join —
-    they contribute candidate pairs quadratically in their doc frequency
-    while carrying no dedup signal; at 100 TB one hot shingle would
-    otherwise funnel millions of rows through a single join key. Sizes are
+    Shingles in >10% of the docs are cut first (``_cut_hot``). Sizes are
     recomputed post-cut, so Jaccard is exact over the retained shingle
     sets (the oracle applies the identical cut)."""
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    sh0 = d.select("doc_id", F.explode(_shingles(F.col("text"))).alias("shingle"))
-    hot = (
-        sh0.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > _JACCARD_MAX_DF)
-        .select("shingle")
-    )
-    # hot set is tiny by construction (only >10%-df shingles) → broadcast anti
-    sh = sh0.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jacc = F.col("c") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("c"))
+    jacc = F.col("c") * 1.0 / (F.col("na") + F.col("nb") - F.col("c"))
     return (
-        common.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
+        _shingle_overlap(_cut_hot(_shingle_rows(d)))
         .filter(jacc >= 0.08)
         .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
     )
@@ -330,33 +353,7 @@ def dedup_containment(spark, sf_dir):
     pair, then BOTH directions are scored from that single count (no second
     pairwise join)."""
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    sh0 = d.select("doc_id", F.explode(_shingles(F.col("text"))).alias("shingle"))
-    hot = (
-        sh0.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > _JACCARD_MAX_DF)
-        .select("shingle")
-    )
-    sh = sh0.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    scored = (
-        common.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b", "c",
-            F.col("sa.n").alias("na"), F.col("sb.n").alias("nb"),
-        )
-    )
+    scored = _shingle_overlap(_cut_hot(_shingle_rows(d)))
     fwd = scored.where(F.col("c") * 1.0 / F.col("na") >= _CONTAIN_TH).select(
         F.col("doc_a").alias("doc_sub"),
         F.col("doc_b").alias("doc_sup"),
@@ -539,6 +536,13 @@ def _confirmed_cosine_pairs(spark, sf_dir, th=_COS_DEDUP_TH):
     )
 
 
+def _symmetric_edges(pairs):
+    """(s, d): both directions of each undirected (va, vb) pair."""
+    return pairs.select(F.col("va").alias("s"), F.col("vb").alias("d")).unionByName(
+        pairs.select(F.col("vb").alias("s"), F.col("va").alias("d"))
+    )
+
+
 # ---- 7. connected-components dedup (fixpoint) ---------------------------
 
 
@@ -647,11 +651,7 @@ def dedup_connected_components(spark, sf_dir):
     computing min reachable id — an independent transitive-closure
     implementation."""
     e = T(spark, sf_dir, "embeddings")
-    pairs = _confirmed_cosine_pairs(spark, sf_dir)
-    edges = pairs.select(
-        F.col("va").alias("s"), F.col("vb").alias("d")
-    ).unionByName(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-    edges = materialize(edges)
+    edges = materialize(_symmetric_edges(_confirmed_cosine_pairs(spark, sf_dir)))
     labels = materialize(e.select("vec_id", F.col("vec_id").alias("label")))
     labels, _rounds = cc_fixpoint(labels, edges)
     return labels.select(
@@ -743,7 +743,7 @@ def pagerank_similarity_graph(spark, sf_dir):
     ``materialize`` truncates the per-round lineage exactly as in
     `dedup_connected_components`.
 
-    Fully oracled (round 3): DuckDB replays the identical `_PR_ITERS`
+    Fully oracled: DuckDB replays the identical `_PR_ITERS`
     unrolled iterations over the same LSH-confirmed edge set; per-vertex
     float-sum ordering differs across engines but the graphs are sparse and
     the 9-dp permille rounding absorbs it (verified MATCH at sf0.001 and
@@ -757,11 +757,7 @@ def pagerank_similarity_graph(spark, sf_dir):
         return e.select(
             "vec_id", (F.col("vec_id") * 0.0).alias("rank_permille")
         )
-    pairs = _confirmed_cosine_pairs(spark, sf_dir)
-    edges = materialize(
-        pairs.select(F.col("va").alias("s"), F.col("vb").alias("d"))
-        .unionByName(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-    )
+    edges = materialize(_symmetric_edges(_confirmed_cosine_pairs(spark, sf_dir)))
     deg = materialize(edges.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")))
     ranks = materialize(e.select("vec_id", F.lit(1.0 / n).alias("rank")))
     for _ in range(_PR_ITERS):
@@ -897,11 +893,7 @@ def _lpa_labels(spark, sf_dir):
     from pyspark.sql import Window as W
 
     e = T(spark, sf_dir, "embeddings")
-    pairs = _confirmed_cosine_pairs(spark, sf_dir)
-    edges = materialize(
-        pairs.select(F.col("va").alias("s"), F.col("vb").alias("d"))
-        .unionByName(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-    )
+    edges = materialize(_symmetric_edges(_confirmed_cosine_pairs(spark, sf_dir)))
     labels = e.select("vec_id", F.col("vec_id").alias("label"))
     for _ in range(_LPA_ITERS):
         counts = (
@@ -977,6 +969,58 @@ _INC_BUCKET = (
 )
 
 
+def _batch_bucket():
+    """md5 doc bucket in [0, 10) (oracle: ``_INC_BUCKET``): buckets < 8
+    are the base corpus, the rest (~20%) today's batch."""
+    return md5_int(F.col("doc_id").cast("string")) % 10
+
+
+def _split_base_batch(d, **cols):
+    """(base, batch) of ``d`` by ``_batch_bucket``, each carrying the
+    named ``cols``; the base side's doc_id is renamed ``base_id``."""
+    hashed = d.select(
+        "doc_id", *[c.alias(k) for k, c in cols.items()], _batch_bucket().alias("bk")
+    )
+    base = hashed.filter(F.col("bk") < 8).select(
+        F.col("doc_id").alias("base_id"), *cols
+    )
+    return base, hashed.filter(F.col("bk") >= 8).select("doc_id", *cols)
+
+
+def _fingerprinted_split(d):
+    """Base/batch split carrying the normalized-text hash ``h`` and the
+    prefix fingerprint ``fp`` (32-bit hash of the first 40 normalized
+    chars) that the two-tier prefilters screen on."""
+    norm = _normalized_text()
+    return _split_base_batch(
+        d, h=F.md5(norm), fp=F.substring(F.md5(F.substring(norm, 1, 40)), 1, 8)
+    )
+
+
+def _confirm_screened(cand, non, base):
+    """Tier 2 of the two-tier prefilters: each ``cand`` batch doc (passed
+    the screen) is confirmed against the base by normalized hash, its
+    ``dup_of_base`` the min matching base_id; each ``non`` doc was screened
+    out. Emits (doc_id, was_candidate, is_dup, dup_of_base)."""
+    conf = (
+        cand.join(base.select("h", "base_id"), "h", "left")
+        .groupBy("doc_id")
+        .agg(F.min("base_id").cast("bigint").alias("dup_of_base"))
+        .select("doc_id", F.lit(1).alias("was_candidate"), "dup_of_base")
+    )
+    non = non.select(
+        "doc_id",
+        F.lit(0).alias("was_candidate"),
+        F.lit(None).cast("bigint").alias("dup_of_base"),
+    )
+    return conf.unionByName(non).select(
+        "doc_id",
+        "was_candidate",
+        F.when(F.col("dup_of_base").isNotNull(), 1).otherwise(0).alias("is_dup"),
+        "dup_of_base",
+    )
+
+
 @query(
     "dedup_incremental_batch",
     oracle=f"""
@@ -1007,17 +1051,7 @@ def dedup_incremental_batch(spark, sf_dir):
     fits. Base/increment here is a deterministic md5 80/20 split of
     `documents` (the same bucket idiom as split_train_valid_test)."""
     d = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    hashed = d.select("doc_id", F.md5(norm).alias("h"), bucket.alias("bk"))
-    base = hashed.filter(F.col("bk") < 8).select(
-        F.col("doc_id").alias("base_id"), "h"
-    )
-    inc = hashed.filter(F.col("bk") >= 8).select("doc_id", "h")
+    base, inc = _split_base_batch(d, h=F.md5(_normalized_text()))
     return (
         inc.join(base, "h", "left")
         .groupBy("doc_id")
@@ -1088,45 +1122,16 @@ def dedup_fingerprint_prefilter(spark, sf_dir):
     shuffles to the corpus hash table's bucketed layout. Cites
     dedup_incremental_batch's 80/20 md5 split (same base/batch
     stand-in)."""
-    d = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    hashed = d.select(
-        "doc_id",
-        F.md5(norm).alias("h"),
-        F.substring(F.md5(F.substring(norm, 1, 40)), 1, 8).alias("fp"),
-        bucket.alias("bk"),
-    )
-    base = hashed.filter(F.col("bk") < 8).select(
-        F.col("doc_id").alias("base_id"), "h", "fp"
-    )
-    inc = hashed.filter(F.col("bk") >= 8).select("doc_id", "h", "fp")
+    base, inc = _fingerprinted_split(T(spark, sf_dir, "documents"))
     fps = base.select("fp").distinct()
-    conf = (
-        inc.join(F.broadcast(fps), "fp", "left_semi")
-        .join(base.select("h", "base_id"), "h", "left")
-        .groupBy("doc_id")
-        .agg(F.min("base_id").cast("bigint").alias("dup_of_base"))
-        .select("doc_id", F.lit(1).alias("was_candidate"), "dup_of_base")
-    )
-    non = inc.join(F.broadcast(fps), "fp", "left_anti").select(
-        "doc_id",
-        F.lit(0).alias("was_candidate"),
-        F.lit(None).cast("bigint").alias("dup_of_base"),
-    )
-    return conf.unionByName(non).select(
-        "doc_id",
-        "was_candidate",
-        F.when(F.col("dup_of_base").isNotNull(), 1).otherwise(0).alias("is_dup"),
-        "dup_of_base",
+    return _confirm_screened(
+        inc.join(F.broadcast(fps), "fp", "left_semi"),
+        inc.join(F.broadcast(fps), "fp", "left_anti"),
+        base,
     )
 
 
-# ---- round 7: bloom-filter prefilter (the stated upgrade path) -----------
+# ---- bloom-filter prefilter (the stated upgrade path) --------------------
 
 _BLOOM_K = 3             # hash functions
 _BLOOM_BITS_PER_KEY = 16 # m = 16 * |base fp set|  => ~0.1% fp rate at k=3
@@ -1181,7 +1186,7 @@ def _bloom_oracle() -> str:
 @query("dedup_bloom_prefilter", oracle=_bloom_oracle())
 def dedup_bloom_prefilter(spark, sf_dir):
     """The bloom-tier topology dedup_fingerprint_prefilter's docstring
-    names as the past-broadcast upgrade path, delivered (r6 verdict #4):
+    names as the past-broadcast upgrade path:
     tier 1 is a REAL m-bit / k=`_BLOOM_K`-hash bloom filter over the base
     corpus's prefix fingerprints — m = `_BLOOM_BITS_PER_KEY`·|fp set| bits
     (~2 bytes/key vs the fp table's 4), k md5-derived bit positions per key,
@@ -1204,38 +1209,14 @@ def dedup_bloom_prefilter(spark, sf_dir):
     probe explodes each batch doc into k narrow (pos) rows, so tier-1
     cost is k·|batch|, never corpus-sized; tier 2 is identical to the fp
     variant (pytest-pinned equal on the confirm columns)."""
-    d = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    hashed = d.select(
-        "doc_id",
-        F.md5(norm).alias("h"),
-        F.substring(F.md5(F.substring(norm, 1, 40)), 1, 8).alias("fp"),
-        bucket.alias("bk"),
-    )
-    base = hashed.filter(F.col("bk") < 8).select(
-        F.col("doc_id").alias("base_id"), "h", "fp"
-    )
-    inc = hashed.filter(F.col("bk") >= 8).select("doc_id", "h", "fp")
+    base, inc = _fingerprinted_split(T(spark, sf_dir, "documents"))
     fps = base.select("fp").distinct()
     mtab = fps.agg(
         (F.count(F.lit(1)) * _BLOOM_BITS_PER_KEY).cast("bigint").alias("m")
     )
     seeds = spark.range(_BLOOM_K).select(F.col("id").cast("int").alias("i"))
     pos = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("fp"), F.lit(":"), F.col("i").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(F.concat(F.col("fp"), F.lit(":"), F.col("i").cast("string")))
         % F.col("m")
     )
     bits = (
@@ -1252,23 +1233,10 @@ def dedup_bloom_prefilter(spark, sf_dir):
         .groupBy("doc_id", "h")
         .agg(F.min(F.coalesce("hit", F.lit(0))).alias("allhit"))
     )
-    conf = (
-        screened.filter(F.col("allhit") == 1)
-        .join(base.select("h", "base_id"), "h", "left")
-        .groupBy("doc_id")
-        .agg(F.min("base_id").cast("bigint").alias("dup_of_base"))
-        .select("doc_id", F.lit(1).alias("was_candidate"), "dup_of_base")
-    )
-    non = screened.filter(F.col("allhit") == 0).select(
-        "doc_id",
-        F.lit(0).alias("was_candidate"),
-        F.lit(None).cast("bigint").alias("dup_of_base"),
-    )
-    return conf.unionByName(non).select(
-        "doc_id",
-        "was_candidate",
-        F.when(F.col("dup_of_base").isNotNull(), 1).otherwise(0).alias("is_dup"),
-        "dup_of_base",
+    return _confirm_screened(
+        screened.filter(F.col("allhit") == 1),
+        screened.filter(F.col("allhit") == 0),
+        base,
     )
 
 
@@ -1321,7 +1289,7 @@ def dedup_semantic_text_confirm(spark, sf_dir):
     is a per-row array_intersect/array_union — map-side after the two
     joins. No explode: per-doc shingle arrays stay packed."""
     docs = T(spark, sf_dir, "documents").select(
-        "doc_id", _shingles(F.col("text")).alias("sh")
+        "doc_id", shingles(F.col("text")).alias("sh")
     )
     pairs = _confirmed_cosine_pairs(spark, sf_dir)
     sa = docs.select(F.col("doc_id").alias("va"), F.col("sh").alias("sha"))
@@ -1474,9 +1442,7 @@ def graph_node_jaccard(spark, sf_dir):
     single groupBy. The edge list is LSH-bucket-generated and
     materialized once, then reused by all three joins."""
     pairs = materialize(_confirmed_cosine_pairs(spark, sf_dir))
-    sym = pairs.select(F.col("va").alias("s"), F.col("vb").alias("d")).unionAll(
-        pairs.select(F.col("vb").alias("s"), F.col("va").alias("d"))
-    )
+    sym = _symmetric_edges(pairs)
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     x = sym.select(F.col("s").alias("va"), F.col("d").alias("w"))
     y = sym.select(F.col("s").alias("vb"), F.col("d").alias("w"))
@@ -1573,11 +1539,7 @@ def graph_kcore_membership(spark, sf_dir):
     cut per round with materialize; the oracle unrolls the identical
     `_KCORE_ROUNDS` rounds."""
     e = T(spark, sf_dir, "embeddings")
-    pairs = _confirmed_cosine_pairs(spark, sf_dir)
-    edges = materialize(
-        pairs.select(F.col("va").alias("s"), F.col("vb").alias("d"))
-        .unionAll(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-    )
+    edges = materialize(_symmetric_edges(_confirmed_cosine_pairs(spark, sf_dir)))
     surv = None
     for _ in range(_KCORE_ROUNDS):
         surv = materialize(
@@ -1663,36 +1625,10 @@ def dedup_threshold_sweep(spark, sf_dir):
     ratio of exact integers, so the ≥-cuts are bit-identical across
     engines with no epsilon games."""
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    sh0 = d.select("doc_id", F.explode(_shingles(F.col("text"))).alias("shingle"))
-    hot = (
-        sh0.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > _JACCARD_MAX_DF)
-        .select("shingle")
-    )
-    sh = sh0.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    pairs = (
-        common.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("c") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("c"))).alias(
-                "jacc"
-            ),
-        )
+    pairs = _shingle_overlap(_cut_hot(_shingle_rows(d))).select(
+        "doc_a",
+        "doc_b",
+        (F.col("c") * 1.0 / (F.col("na") + F.col("nb") - F.col("c"))).alias("jacc"),
     )
     th = spark.createDataFrame(
         [(t,) for t in _SWEEP_THRESHOLDS], ["threshold"]
@@ -1788,45 +1724,13 @@ def dedup_minhash_eval(spark, sf_dir):
     sample a block, brute-force it, score the index against it. All
     counts are exact integers; P/R are ratios of those integers."""
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    sh = (
-        d.select(
-            "doc_id", F.explode(_shingles(F.col("text"))).alias("shingle")
-        )
-        .filter(F.col("shingle") != "")
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    sh = _shingle_rows(d).filter(F.col("shingle") != "")
     truth = (
-        common.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
-        .filter(
-            F.col("c") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("c"))
-            >= _EVAL_TH
-        )
+        _shingle_overlap(sh)
+        .filter(F.col("c") * 1.0 / (F.col("na") + F.col("nb") - F.col("c")) >= _EVAL_TH)
         .select("doc_a", "doc_b")
     )
-    bands = lsh_bands(minhash_signatures(d))
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_sig") == F.col("y.band_sig"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _lsh_pairs(lsh_bands(minhash_signatures(d)))
     n_truth = truth.agg(F.count(F.lit(1)).alias("v"))
     n_cand = cand.agg(F.count(F.lit(1)).alias("v"))
     n_tp = cand.join(truth, ["doc_a", "doc_b"]).agg(
@@ -2000,21 +1904,10 @@ def dedup_ladder_report(spark, sf_dir):
         .select("doc_id")
     )
     d1 = d.join(k1, "doc_id", "left_semi")
-    bands = lsh_bands(minhash_signatures(d1))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _lsh_pairs(lsh_bands(minhash_signatures(d1)))
     packed = d1.select(
         "doc_id",
-        F.filter(_shingles(F.col("text")), lambda x: x != "").alias("s"),
+        F.filter(shingles(F.col("text")), lambda x: x != "").alias("s"),
     )
     pa = packed.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
     pb = packed.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
@@ -2069,7 +1962,7 @@ def dedup_ladder_report(spark, sf_dir):
     )
 
 
-# ---- round 7: incremental near-dup (MinHash-LSH batch-vs-base) -----------
+# ---- incremental near-dup (MinHash-LSH batch-vs-base) --------------------
 
 _MH_SIG_CTES = f"""
     sh AS (
@@ -2151,12 +2044,7 @@ def dedup_minhash_incremental(spark, sf_dir):
     sub-quadratic); the per-doc best is a window on the doc-keyed
     exchange, never global."""
     d = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
-    tagged = d.withColumn("bk", bucket)
+    tagged = d.withColumn("bk", _batch_bucket())
     base_docs = tagged.filter(F.col("bk") < 8).drop("bk")
     inc_docs = tagged.filter(F.col("bk") >= 8).drop("bk")
     sig_all = minhash_signatures(d)  # one signature pass, split below

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..helpers import T, materialize, spread
+from ..helpers import T, materialize, md5_int, spread
 from ..registry import query
 
 _TOPK = 100
@@ -214,11 +214,7 @@ def split_train_valid_test(spark, sf_dir):
     never migrates between splits when the corpus grows — pure map-side
     classify plus a 3-group aggregate."""
     d = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 1000
-    )
+    bucket = md5_int(F.col("doc_id").cast("string")) % 1000
     n_tok = F.size(
         F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
     )
@@ -559,10 +555,7 @@ def dsir_importance_weights(spark, sf_dir):
     count plus a broadcast join, so the only corpus-sized shuffle is keyed
     on (doc, bucket). No vocab-sized state anywhere."""
     d = spread(T(spark, sf_dir, "documents"), "doc_id")
-    bucket = (
-        F.conv(F.substring(F.md5("t"), 1, 15), 16, 10).cast("bigint")
-        % _DSIR_B
-    )
+    bucket = md5_int("t") % _DSIR_B
     occ = (
         d.select(
             "doc_id",
@@ -604,7 +597,7 @@ def dsir_importance_weights(spark, sf_dir):
         .agg(
             F.any_value("lang").alias("lang"),
             F.sum("c").cast("bigint").alias("n_tokens"),
-            # + 0.0 after the round (r11): a mean lr in (-5e-7, 0) —
+            # + 0.0 after the round: a mean lr in (-5e-7, 0) —
             # produced by the bijected sf1 corpus — rounds to -0.0 in
             # DuckDB (sign-preserving) but +0.0 in Spark (BigDecimal
             # HALF_UP drops the sign), and the value hash distinguishes
@@ -699,7 +692,7 @@ def vocab_truncation_oov(spark, sf_dir):
     )
 
 
-# ---- round 6: interpolated Kneser-Ney bigram LM perplexity ---------------
+# ---- interpolated Kneser-Ney bigram LM perplexity ------------------------
 
 _KN_D = 0.75  # absolute discount
 

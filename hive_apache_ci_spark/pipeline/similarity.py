@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..helpers import T, materialize, ravg, spread
+from ..helpers import T, materialize, md5_int, ravg, spread
 from ..registry import query
 
 TOP_K = 5
@@ -2400,11 +2400,7 @@ def _ingest_split(e):
     """(base, delta) corpus split by md5(vec_id) decimal bucket — the
     deterministic stand-in for 'yesterday's corpus vs today's ingest
     batch', shared by ivf_pq_ingest_delta and ivf_pq_retrain_decision."""
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
+    bucket = md5_int(F.col("vec_id").cast("string")) % 10
     tagged = e.withColumn("bk", bucket)
     return (
         tagged.filter(F.col("bk") < _INGEST_SPLIT).drop("bk"),
@@ -2798,15 +2794,9 @@ def ivf_pq_merge_compact(spark, sf_dir):
     assigned = nearest_label(
         e.select("vec_id", "embedding"), label_centroids(base), "vec_id"
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
+    bucket = md5_int(F.col("vec_id").cast("string")) % 10
     tag = e.select("vec_id", bucket.alias("bk"))
-    h32 = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    h32 = md5_int(F.col("vec_id").cast("string"), 8)
     return (
         assigned.join(tag, "vec_id")
         .groupBy("c_label")

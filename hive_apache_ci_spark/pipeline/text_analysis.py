@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..helpers import T, spread
+from ..helpers import T, md5_int, spread
 from ..registry import query
 
 STOPWORDS = ("the", "a", "of", "and", "in", "to", "is")
@@ -299,8 +299,7 @@ def text_winnow_fingerprints(spark, sf_dir):
         .select(
             "doc_id",
             F.col("i").alias("pos"),
-            F.conv(F.substring(F.md5(gram), 1, 15), 16, 10)
-            .cast("bigint")
+            md5_int(gram)
             .alias("h"),
         )
     )

@@ -124,8 +124,11 @@ _RULES: tuple[tuple[re.Pattern[str], str], ...] = (
     (re.compile(r"\d+ paths"), "<n> paths"),
     # cached-plan object addresses (defensive; pure queries shouldn't hit)
     (re.compile(r"@[0-9a-f]{6,}"), "@ADDR"),
-    # run-scratch ids that leak into view names if a query registers temps
+    # run-scratch ids that leak into view names if a query registers temps,
+    # and their underscore form in per-run catalog table names
+    # (orders_smb_sf0_001_run_<hex>)
     (re.compile(r"run-[0-9a-f]{12}"), "run-ID"),
+    (re.compile(r"run_[0-9a-f]{12}"), "run_ID"),
     # localCheckpoint scans embed a session-global RDD counter
     # (MapPartitionsRDD[26] in a fresh session, [8] mid-suite) — r12, the
     # checkpointed-arm plans (search_bm25_topk) made this reachable

@@ -29,6 +29,7 @@ from ..helpers import (
     T,
     committed,
     materialize,
+    md5_int,
     money_sum,
     r2,
     ravg,
@@ -905,7 +906,7 @@ def io_csv_malformed_quarantine(spark, sf_dir):
         F.col("k"),
         F.regexp_extract(F.col("_corrupt_record"), r"^(\d+),", 1).cast("bigint"),
     )
-    h32 = F.conv(F.substring(F.md5(raw_line), 1, 8), 16, 10).cast("bigint")
+    h32 = md5_int(raw_line, 8)
     return (
         back.select(
             F.when(F.col("_corrupt_record").isNotNull(), F.lit("quarantined"))
@@ -1011,21 +1012,11 @@ def io_consistent_hash_shards(spark, sf_dir):
             "shard int, r int",
         )
         pos = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("shard").cast("string"),
-                            F.lit(":"),
-                            F.col("r").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int(
+                F.concat(
+                    F.col("shard").cast("string"), F.lit(":"), F.col("r").cast("string")
+                )
+            )
             % _CH_RING
         )
         return nodes.select(pos.alias("pos"), "shard").agg(
@@ -1042,14 +1033,7 @@ def io_consistent_hash_shards(spark, sf_dir):
 
     docs = d.select(
         "doc_id",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("bigint")
-            % _CH_RING
-        ).alias("dp"),
+        (md5_int(F.col("doc_id").cast("string")) % _CH_RING).alias("dp"),
     )
     assigned = (
         docs.crossJoin(F.broadcast(ring_df(_CH_S0).select(F.col("ring").alias("r0"))))

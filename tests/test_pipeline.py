@@ -642,3 +642,91 @@ def test_vector_kernels_have_one_definition():
     assert _enclosing_functions(r"min_by\(\s*[\"']c_label[\"']") == {
         (sim, "nearest_label")
     }
+
+
+def test_dedup_kernels_have_one_definition():
+    """Each dedup/graph kernel and the md5 hash is written once: the
+    md5-to-integer hash only in md5_int (plus simhash's per-bit nibble),
+    the LSH band join only in _lsh_pairs (plus the batch-vs-base probe),
+    the distinct-shingle array only in shingles, and the hot-shingle cut
+    only in _cut_hot."""
+    dd = "pipeline/dedup.py"
+    assert _enclosing_functions(r"F\.conv\(\s*F\.substring\(\s*F\.md5\(") == {
+        ("helpers.py", "md5_int"),
+        (dd, "dedup_simhash"),
+    }
+    assert _enclosing_functions(r"band_sig[\"']\)\s*==") == {
+        (dd, "_lsh_pairs"),
+        (dd, "dedup_minhash_incremental"),
+    }
+    assert _enclosing_functions(r"array_distinct\(\s*ngram_array\(") == {
+        ("functions/hive_compat.py", "shingles")
+    }
+    assert _enclosing_functions(r"F\.broadcast\(hot\)") == {(dd, "_cut_hot")}
+
+
+def _py_shingles(text):
+    toks = text.lower().split()
+    return {f"{a} {b}" for a, b in zip(toks, toks[1:])}
+
+
+def test_shingle_overlap_kernel_matches_python_sets(spark):
+    """_shingle_rows -> _cut_hot -> _shingle_overlap equals set arithmetic:
+    "sat on" is in all three docs, so a cut at 2 drops it and a cut at 1
+    drops every shared shingle."""
+    from hive_apache_ci_spark.pipeline.dedup import (
+        _cut_hot,
+        _shingle_overlap,
+        _shingle_rows,
+    )
+
+    texts = {
+        1: "the cat sat on the mat",
+        2: "The cat sat on a mat",
+        3: "a dog sat on the mat",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id bigint, text string")
+    sets = {k: _py_shingles(v) for k, v in texts.items()}
+    for max_df in (1, 2):
+        df = {}
+        for s in sets.values():
+            for g in s:
+                df[g] = df.get(g, 0) + 1
+        kept = {k: {g for g in s if df[g] <= max_df} for k, s in sets.items()}
+        want = {
+            (a, b, len(kept[a] & kept[b]), len(kept[a]), len(kept[b]))
+            for a in kept
+            for b in kept
+            if a < b and kept[a] & kept[b]
+        }
+        got = {
+            tuple(r)
+            for r in _shingle_overlap(_cut_hot(_shingle_rows(docs), max_df)).collect()
+        }
+        assert got == want, (max_df, got, want)
+    assert want, "the cut at 2 must leave shared shingles"
+
+
+def test_md5_int_matches_python(spark):
+    import hashlib
+
+    from hive_apache_ci_spark.helpers import md5_int
+
+    f_word = next(
+        w
+        for w in (f"w{i}" for i in range(200))
+        if hashlib.md5(w.encode()).hexdigest()[0] == "f"
+    )
+    words = ["", "doc-1", "the cat", f_word]
+    df = spark.createDataFrame([(w,) for w in words], "s string")
+    got = df.select("s", md5_int("s").alias("h15"), md5_int("s", 8).alias("h8"))
+    for r in got.collect():
+        hexd = hashlib.md5(r.s.encode()).hexdigest()
+        assert (r.h15, r.h8) == (int(hexd[:15], 16), int(hexd[:8], 16)), r
+
+
+def test_symmetric_edges_emit_both_directions(spark):
+    from hive_apache_ci_spark.pipeline.dedup import _symmetric_edges
+
+    pairs = spark.createDataFrame([(2, 1)], "va bigint, vb bigint")
+    assert {tuple(r) for r in _symmetric_edges(pairs).collect()} == {(2, 1), (1, 2)}

@@ -110,3 +110,13 @@ def test_common_expr_alias_counter_is_normalized():
     one = normalize_plan_text(raw.format(n=1))
     assert one == normalize_plan_text(raw.format(n=3))
     assert "_common_expr_N#N" in one
+
+
+def test_run_id_in_catalog_table_names_is_normalized():
+    """io_roundtrip's per-run catalog tables embed the process RUN_ID with
+    "-" turned to "_"; two sessions' plans differ only in it and must
+    normalize identically."""
+    raw = "+- Scan parquet spark_catalog.default.orders_smb_sf0_001_run_{rid} (1)\n"
+    one = normalize_plan_text(raw.format(rid="f98cae3f7384"))
+    assert one == normalize_plan_text(raw.format(rid="7bee854594bd"))
+    assert "orders_smb_sf0_001_run_ID" in one
