@@ -91,9 +91,25 @@ BUILD_CONFS: dict[str, str] = {
 
 _CONFS_APPLIED: set[str] = set()
 
+#: The directory that holds the engine package. Python workers unpickle
+#: UDFs, ``mapInPandas`` functions and data sources that name engine
+#: modules, so they must be able to import the package wherever the driver
+#: was started.
+_ENGINE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _ship_engine_path(sc) -> None:
+    """Add the engine's parent dir to the ``PYTHONPATH`` that PySpark sends
+    with every Python function (``sc.environment``); Spark merges it into
+    each Python worker's path. Not a Spark conf: plans are unchanged."""
+    paths = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _ENGINE_PARENT not in paths:
+        sc.environment["PYTHONPATH"] = os.pathsep.join(paths + [_ENGINE_PARENT])
+
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply Hive-semantics confs to an externally created session.
+    """Apply Hive-semantics confs to an externally created session, and ship
+    the engine's path to its Python workers (``_ship_engine_path``).
 
     Safe to call repeatedly; used by ``catalog.load_tables`` so that even the
     driver's own SparkSession reads the testdata correctly. Short-circuits
@@ -106,9 +122,10 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     SQLConf, so the cache alone would silently skip them.
     """
     try:
-        key_id = spark.sparkContext.applicationId
+        sc = spark.sparkContext
+        key_id = sc.applicationId
     except Exception:
-        key_id = None
+        sc = key_id = None
     if key_id is not None and key_id in _CONFS_APPLIED:
         try:
             probe = spark.conf.get("spark.sql.session.timeZone", None)
@@ -122,6 +139,8 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             # Non-settable on this build — keep going; reads may still work.
             pass
+    if sc is not None:
+        _ship_engine_path(sc)
     if key_id is not None:
         _CONFS_APPLIED.add(key_id)
     return spark

@@ -321,6 +321,44 @@ def test_acid_vacuum_guards(spark, tmp_path):
         assert os.path.isdir(os.path.join(tbl.root, extra))
 
 
+def test_acid_compacting_a_clean_table_commits_nothing(spark, tmp_path):
+    """An unpartitioned table is the one-chain case of a partitioned one,
+    so compaction follows the same rule: a dirty chain is rewritten and
+    returned (keyed None), and with no live deltas left compaction
+    returns [] and commits no version."""
+    tbl = _tiny_acid(spark, str(tmp_path / "t"))
+    assert tbl.compact(spark) == [None]
+    v = tbl.latest_version()
+    assert tbl.compact(spark) == []
+    assert tbl.latest_version() == v
+
+
+def test_acid_mechanisms_have_one_definition():
+    """Partitioned and unpartitioned tables share every ACID mechanism:
+    the merge-on-read window, the delta-cardinality guard, the vacuum
+    retention rail and the data-dir publish are each written once in
+    operators/acid.py, and PartitionedAcidTable adds only a constructor."""
+    import inspect
+    import re
+
+    from hive_apache_ci_spark.operators import acid
+
+    src = inspect.getsource(acid)
+    for pattern in (
+        r"F\.row_number\(\)\.over\(",
+        r"\.orderBy\(F\.col\(\"_seq\"\)",
+        r"multiple events for key",
+        r"retain_versions must be >= 1",
+        r"_fsync_dir_entries\(committed\(",
+    ):
+        assert len(re.findall(pattern, src)) == 1, pattern
+    methods = {
+        name for name, v in vars(acid.PartitionedAcidTable).items()
+        if callable(v)
+    }
+    assert methods == {"__init__"}, methods
+
+
 # ---- partitioned ACID (round 10) -------------------------------------------
 
 
