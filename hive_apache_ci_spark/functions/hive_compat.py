@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..helpers import spread
+
 # ---------------------------------------------------------------------------
 # field / in_file / logged_in_user / reflect2
 # ---------------------------------------------------------------------------
@@ -219,16 +221,15 @@ def shingles(text: Column, n: int = 2) -> Column:
 
 
 def _spread_text(df: DataFrame, text_col: str) -> DataFrame:
-    """Column-prune to the text column, then round-robin repartition to the
-    configured shuffle-partition count BEFORE the gram explode. A small
-    corpus parquet arrives as 1-2 input splits, which serializes the
-    CPU-heavy split + zip_with + explode on 1-2 of 32 cores (measured:
-    hive_ngrams_top at the sf1 canary ran 5.8 s on 2 tasks; spread it runs
-    on all cores). The exchange moves only the pruned text bytes; the
-    explicit count pins the fan-out against AQE coalescing (same lesson as
-    pipeline/dedup.minhash_signatures and helpers.spread)."""
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.select(text_col).repartition(n_parts)
+    """Column-prune to the text column, then round-robin ``spread`` it to
+    one partition per task slot BEFORE the gram explode. A small corpus
+    parquet arrives as 1-2 input splits, which serializes the CPU-heavy
+    split + zip_with + explode on 1-2 tasks while the other slots idle
+    (measured: hive_ngrams_top at the sf1 canary ran 5.8 s on 2 tasks;
+    spread it runs on all cores). The exchange moves only the pruned text
+    bytes; the explicit count pins the fan-out against AQE coalescing
+    (same lesson as pipeline/dedup.minhash_signatures)."""
+    return spread(df.select(text_col))
 
 
 def ngrams(df: DataFrame, text_col: str, n: int, k: int) -> DataFrame:

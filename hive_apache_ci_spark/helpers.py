@@ -144,16 +144,26 @@ def money_sum(c: Column, scale: int = 4) -> Column:
     return F.round(F.sum(c.cast(f"decimal(18,{scale})")), 2).cast("double")
 
 
-def spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition on `cols` with an EXPLICIT partition count
-    (spark.sql.shuffle.partitions). The explicit count matters: a
-    column-only ``repartition(col)`` is fair game for AQE partition
-    coalescing, and on a small-bytes-but-CPU-heavy relation (shingle
-    explode → md5, hyperplane folds) AQE happily coalesces back to one
-    partition and serializes the expensive map work. Pinning the count
-    keeps the fan-out; downstream groupBys on the same key reuse the
-    exchange, so no extra shuffle is introduced."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+def task_slots(spark: SparkSession) -> int:
+    """The number of tasks the cluster runs at once:
+    ``sparkContext.defaultParallelism``, which is N on ``local[N]`` and the
+    total executor cores on a cluster (a deployment can set it with
+    Spark's own ``spark.default.parallelism``)."""
+    return spark.sparkContext.defaultParallelism
+
+
+def spread(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame:
+    """Repartition to an EXPLICIT count, ``n`` or by default one partition
+    per task slot (``task_slots``): hashed on ``cols``, round-robin when
+    none are given. The explicit count matters: a column-only
+    ``repartition(col)`` is fair game for AQE partition coalescing, and on
+    a small-bytes-but-CPU-heavy relation (shingle explode → md5, hyperplane
+    folds) AQE happily coalesces back to one partition and serializes the
+    expensive map work. Sizing to the slots, not to the shuffle width,
+    runs such a stage in one wave; more tasks than slots only add per-task
+    overhead. Downstream groupBys on the same key reuse the exchange, so
+    no extra shuffle is introduced."""
+    n = n or task_slots(df.sparkSession)
     return df.repartition(n, *[F.col(c) for c in cols])
 
 

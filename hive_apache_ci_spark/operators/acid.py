@@ -60,6 +60,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..helpers import T, committed, materialize, run_scratch
 from ..registry import query
@@ -388,11 +389,14 @@ class AcidTable:
 
     A manifest comes in one of two on-disk shapes, and ``_chains_of`` /
     ``_manifest_of`` are the only code that knows them: an unpartitioned
-    manifest IS its one chain, ``{version, base, base_seq, deltas}``; a
-    partitioned one maps escaped partition value → chain,
-    ``{version, partitions: {val: {base, base_seq, deltas}}}``. Everything
-    else works on {chain key: chain}, where the unpartitioned table's one
-    chain is keyed None."""
+    manifest IS its one chain, ``{version, schema, base, base_seq,
+    deltas}``; a partitioned one maps escaped partition value → chain,
+    ``{version, schema, partitions: {val: {base, base_seq, deltas}}}``.
+    Everything else works on {chain key: chain}, where the unpartitioned
+    table's one chain is keyed None. ``schema`` is the table's Spark schema
+    as JSON, written at v0 and carried into every later version, so a table
+    with no chain yet (a partitioned table created empty) still reads as an
+    empty frame of its columns."""
 
     def __init__(self, root: str, cols=None, key: str | None = None,
                  part: str | None = None):
@@ -442,12 +446,15 @@ class AcidTable:
             return {None: {k: m[k] for k in ("base", "base_seq", "deltas")}}
         return dict(m["partitions"])
 
-    def _manifest_of(self, version: int, chains: dict) -> dict:
+    def _manifest_of(self, version: int, chains: dict,
+                     schema: str | None) -> dict:
         """The manifest of ``version`` over ``chains``: ``_chains_of``'s
-        inverse."""
+        inverse. ``schema`` is carried over from the manifest the commit
+        read (None in one written before schemas were recorded)."""
+        head = {"version": version, "schema": schema}
         if self.part is None:
-            return {"version": version, **chains[None]}
-        return {"version": version, "partitions": chains}
+            return {**head, **chains[None]}
+        return {**head, "partitions": chains}
 
     def _commit(self, manifest: dict) -> None:
         """Publish a complete manifest into the version slot with
@@ -607,7 +614,7 @@ class AcidTable:
         self._commit(self._manifest_of(0, {
             pv: {"base": rel, "base_seq": 0, "deltas": []}
             for pv, rel in self._stage(df, 0, "base").items()
-        }))
+        }, df.select(*self.cols).schema.json()))
 
     def commit_delta(self, delta_df, read_version: int | None = None) -> int:
         """One transaction: U/D/I event rows (full row image + _op),
@@ -650,7 +657,7 @@ class AcidTable:
         for pv, rel in self._stage(delta_df, v, "delta").items():
             c = chains.get(pv, {"base": None, "base_seq": -1, "deltas": []})
             chains[pv] = {**c, "deltas": c["deltas"] + [[v, rel]]}
-        self._commit(self._manifest_of(v, chains))
+        self._commit(self._manifest_of(v, chains, m.get("schema")))
         return v
 
     def compact(self, spark) -> list:
@@ -672,7 +679,7 @@ class AcidTable:
             rel = self._stage(snap, v, "base", chain=pv)[pv]
             chains[pv] = {"base": rel, "base_seq": v, "deltas": []}
         if dirty:
-            self._commit(self._manifest_of(v, chains))
+            self._commit(self._manifest_of(v, chains, m.get("schema")))
         return dirty
 
     def vacuum(self, retain_versions: int = 1) -> list[str]:
@@ -775,6 +782,17 @@ class AcidTable:
                 raise KeyError(
                     f"no partition {self.part}={partition} at v{m['version']}"
                 )
+        if not keys:
+            if m.get("schema") is None:
+                raise ValueError(
+                    f"ACID table {self.root} has no partition at "
+                    f"v{m['version']}, and its manifest records no schema "
+                    "(written before schemas were recorded), so no empty "
+                    "frame can be built"
+                )
+            return spark.createDataFrame(
+                [], StructType.fromJson(json.loads(m["schema"]))
+            )
         return reduce(
             DataFrame.unionByName,
             [self._read_chain(spark, chains[k]) for k in keys],

@@ -105,8 +105,9 @@ def minhash_signatures(df, id_col: str = "doc_id", text_col: str = "text"):
     # few (often 1) input splits, which would leave the shingle explode +
     # md5 + 16 min-aggs single-threaded. The doc-keyed exchange is the SAME
     # distribution the groupBy needs, so Catalyst reuses it — no extra
-    # shuffle; the explicit partition count stops AQE from coalescing the
-    # CPU-heavy (but byte-light) stage back to one task (helpers.spread).
+    # shuffle; the explicit partition count, one per task slot, stops AQE
+    # from coalescing the CPU-heavy (but byte-light) stage back to one task
+    # and runs it in one wave (helpers.spread).
     sh = (
         spread(df, id_col)
         .select(F.col(id_col), F.explode(shingles(F.col(text_col))).alias("shingle"))

@@ -131,9 +131,9 @@ def quality_lm_perplexity(spark, sf_dir):
     boilerplate sit far from the corpus distribution.
 
     Scale/perf shape (measured 4.1s → ~1s at sf0.1):
-    - ``spread()`` fans the byte-light documents scan out BEFORE the
-      tokenize explode (the minhash lesson — one 1.5 MB split otherwise
-      serializes all the regex work on one core);
+    - ``spread()`` fans the byte-light documents scan out to one partition
+      per task slot BEFORE the tokenize explode (the minhash lesson — one
+      1.5 MB split otherwise serializes all the regex work on one core);
     - occurrences collapse to per-doc TERM COUNTS first, so the vocab join
       carries distinct (doc, term) pairs (2.3× fewer rows here; at web
       scale the Zipf head collapses far more) and ln() evaluates once per

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..helpers import T, materialize, md5_int, ravg, spread
+from ..helpers import T, materialize, md5_int, ravg, spread, task_slots
 from ..registry import query
 
 TOP_K = 5
@@ -393,21 +393,19 @@ def lsh_table_buckets(df, emb_col: str = "embedding"):
     # Repartition by id first: small parquet inputs arrive as one split, and
     # the Arrow signature batches are the expensive part — spread them
     # across cores before exploding (see minhash_signatures). The fan-out is
-    # a QUARTER of the shuffle width (floor 4), not the full width: the
-    # numpy kernel amortizes per-batch Python/Arrow overhead only past a few
-    # hundred rows per batch (measured at sf0.1: 32 batches of 62 rows =
-    # 0.83 s/stage, 8 batches of 250 = 0.45 s), and shuffle width scales
-    # with the cluster, so a quarter of it still saturates any real
+    # a QUARTER of the task slots (floor 4), not all of them: the numpy
+    # kernel amortizes per-batch Python/Arrow overhead only past a few
+    # hundred rows per batch (measured at sf0.1 on 32 slots: 32 batches of
+    # 62 rows = 0.83 s/stage, 8 batches of 250 = 0.45 s), and the slots
+    # scale with the cluster, so a quarter of them still saturates any real
     # deployment while quartering the fixed per-batch cost.
     # One-row scalar attach: compiles to a BroadcastNestedLoopJoin whose
     # build side is the single k_planes value — constant network cost, and
     # the plan gate (test_embedding_dedup_no_cartesian) allows exactly this
     # shape while still forbidding table-sized nested loops.
-    n_udf = max(
-        4, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")) // 4
-    )
+    n_udf = max(4, task_slots(df.sparkSession) // 4)
     return (
-        df.repartition(n_udf, F.col(df.columns[0]))
+        spread(df, df.columns[0], n=n_udf)
         .crossJoin(F.broadcast(kdf))
         .withColumn(
             "_buckets",

@@ -140,6 +140,10 @@ _RULES: tuple[tuple[re.Pattern[str], str], ...] = (
     # Spark 4's common-expression aliases carry a session-global counter
     # (_common_expr_1 on one build, _common_expr_3 on the next)
     (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+    # helpers.spread pins its exchange to the host's task slots, so the
+    # count of a REPARTITION_BY_NUM exchange follows the core count; the
+    # count itself is pinned by tests/test_plans.py, the shape and keys here
+    (re.compile(r"(?<=[(, ])\d+(?=\), REPARTITION_BY_NUM)"), "<slots>"),
 )
 
 

@@ -9,9 +9,12 @@ with explicit casts — see SURVEY.md §7 risk 1).
 Scale posture (100 TB north star): everything here is a *session* default
 that also makes sense on a 1000-executor cluster — AQE on (runtime join
 conversion, skew-join splitting, partition coalescing), broadcast threshold
-sized for dimension tables, shuffle partitions tuned per deployment (32 for
-the local[32] test rig; a real cluster overrides via ``extra_conf`` or
-spark-defaults).
+sized for dimension tables, shuffle partitions an upper bound that AQE
+coalesces down (a real cluster overrides via ``extra_conf`` or
+spark-defaults). The engine's pinned fan-outs (``helpers.spread``) are
+sized to the task slots, ``sparkContext.defaultParallelism``: N on
+``local[N]``, the total executor cores on a cluster, which a deployment
+sets with ``spark.default.parallelism``.
 """
 
 from __future__ import annotations

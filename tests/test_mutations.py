@@ -75,7 +75,7 @@ def test_sorted_layout_files_disjoint(spark):
 
     out = all_queries()["io_sorted_layout"](spark, SF_DIR)
     assert out.count() > 0  # materializes the write
-    d = _scratch(SF_DIR, "events_sorted")  # per-run path (round-6 discipline)
+    d = _scratch(SF_DIR, "events_sorted")  # per-run scratch path, never a shared one
     ranges = []
     for f in glob.glob(os.path.join(d, "*.parquet")):
         # footer stats for TIMESTAMP_NTZ chunks aren't always populated;
@@ -223,7 +223,7 @@ def test_acid_optimistic_concurrency(spark, tmp_path):
         "c_mktsegment", F.lit("U").alias("_op"))
     # both handles observed v2; a wins v3
     assert a.commit_delta(d_a, read_version=2) == 3
-    # the READ-THEN-COMMIT race (r9 ADVICE): b's delta was derived from
+    # the READ-THEN-COMMIT race: b's delta was derived from
     # the v2 snapshot, so its commit is pinned to target v3 — which a
     # already took. Without read_version pinning this would silently
     # stack b's delta on state b never saw; with it, b must conflict.
@@ -300,7 +300,7 @@ def test_acid_vacuum_gc_and_retention(spark, tmp_path):
 
 
 def test_acid_vacuum_guards(spark, tmp_path):
-    """r9 ADVICE rails: retain_versions=0 (would delete the live base) is
+    """Vacuum rails: retain_versions=0 (would delete the live base) is
     rejected, and vacuum never touches co-located non-table dirs (the
     streaming-ingest layout keeps checkpoints/chunks under the same
     root)."""
@@ -359,7 +359,7 @@ def test_acid_mechanisms_have_one_definition():
     assert methods == {"__init__"}, methods
 
 
-# ---- partitioned ACID (round 10) -------------------------------------------
+# ---- partitioned ACID -------------------------------------------------------
 
 
 def _tiny_pacid(spark, tmpdir):
@@ -412,6 +412,43 @@ def test_pacid_partition_chains_and_dynamic_birth(spark, tmp_path):
     assert all("c_mktsegment=S9" in f for f in only.inputFiles())
 
 
+def test_pacid_created_empty_reads_empty_frame_of_its_schema(spark, tmp_path):
+    """A partitioned table created from an empty frame has no chain; it
+    reads 0 rows with the table's columns and types (the schema recorded
+    at v0), keeps that schema through a delta, and a manifest written
+    without a schema fails with a ValueError naming the table and
+    version."""
+    import json
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from hive_apache_ci_spark.operators.acid import PartitionedAcidTable
+
+    ddl = "c_custkey long, c_name string, c_acctbal double, c_mktsegment string"
+    root = str(tmp_path / "t")
+    tbl = PartitionedAcidTable(root, part="c_mktsegment")
+    tbl.create(spark.createDataFrame([], ddl))
+    assert tbl.manifest()["partitions"] == {}
+    empty = tbl.read(spark)
+    assert empty.count() == 0
+    assert empty.schema == spark.createDataFrame([], ddl).schema
+
+    row = spark.createDataFrame([(7, "g", 70.0, "S7")], ddl)
+    tbl.commit_delta(row.withColumn("_op", F.lit("I")), read_version=0)
+    assert tbl.manifest()["schema"] == tbl.manifest(0)["schema"]
+    assert [r.c_custkey for r in tbl.read(spark).collect()] == [7]
+
+    with open(os.path.join(root, "_commits", "v0.json")) as fh:
+        legacy = json.load(fh)
+    del legacy["schema"]
+    old = PartitionedAcidTable(str(tmp_path / "old"), part="c_mktsegment")
+    old._commit(legacy)
+    with pytest.raises(ValueError, match=r"old.*v0"):
+        old.read(spark)
+
+
 def test_pacid_partition_scoped_compaction_and_vacuum(spark, tmp_path):
     """compact() rewrites ONLY dirty partitions; clean partitions keep
     their base dir identity; post-compaction pruned read is a plain scan
@@ -450,7 +487,7 @@ def test_pacid_partition_scoped_compaction_and_vacuum(spark, tmp_path):
 
 
 def test_pacid_metachar_partition_values_and_stage_gc(spark, tmp_path):
-    """r10 ADVICE pair: (1) a partition value containing '/' (or ':')
+    """Two layout rails: (1) a partition value containing '/' (or ':')
     must NOT corrupt the on-disk layout — the manifest keys by Spark's
     escaped dir-name form verbatim, and raw-value reads escape on lookup;
     (2) vacuum GCs orphaned .stage_* dirs left by a crashed writer."""
@@ -584,7 +621,7 @@ def test_acid_commit_transaction_thread_race(spark, tmp_path):
     assert got[1] == base_bal + 4
 
 
-# ---- writer lease (round 11: the DbTxnManager queueing analog) -------------
+# ---- writer lease (the DbTxnManager queueing analog) -----------------------
 
 
 def test_writer_lease_mutual_exclusion_and_takeover(tmp_path):
@@ -659,7 +696,7 @@ def test_writer_lease_heartbeat_extends(tmp_path):
 
 
 def test_writer_lease_heartbeat_after_takeover_raises(tmp_path):
-    """r11 ADVICE: an expired holder whose lease was broken + re-acquired
+    """An expired holder whose lease was broken + re-acquired
     must NOT clobber the new holder's lock on heartbeat — it gets
     LeaseLostError and the new lease survives; and its release() must
     leave the new holder's lock in place (rename-tombstone path)."""
@@ -695,7 +732,7 @@ def test_writer_lease_heartbeat_after_takeover_raises(tmp_path):
 
 
 def test_escape_partition_value_null_and_empty():
-    """r11 ADVICE: null/empty partition values key by Spark's
+    """Null/empty partition values key by Spark's
     __HIVE_DEFAULT_PARTITION__ marker (ExternalCatalogUtils), so the
     manifest key written for them is reachable by lookup."""
     from hive_apache_ci_spark.operators.acid import escape_partition_value

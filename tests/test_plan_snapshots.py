@@ -120,3 +120,21 @@ def test_run_id_in_catalog_table_names_is_normalized():
     one = normalize_plan_text(raw.format(rid="f98cae3f7384"))
     assert one == normalize_plan_text(raw.format(rid="7bee854594bd"))
     assert "orders_smb_sf0_001_run_ID" in one
+
+
+def test_repartition_by_num_count_is_normalized():
+    """helpers.spread sizes its exchange to the host's task slots, so one
+    plan differs between a 4-core and a 32-core host only in that count;
+    the count normalizes away while the partitioning and its keys stay."""
+    raw = (
+        "Arguments: hashpartitioning(doc_id#1L, {n}), REPARTITION_BY_NUM, [plan_id=5]\n"
+        "Arguments: RoundRobinPartitioning({n}), REPARTITION_BY_NUM, [plan_id=6]\n"
+        "Arguments: hashpartitioning(k#2, 200), ENSURE_REQUIREMENTS, [plan_id=7]\n"
+    )
+    four = normalize_plan_text(raw.format(n=4))
+    assert four == normalize_plan_text(raw.format(n=32))
+    assert four == (
+        "Arguments: hashpartitioning(doc_id#NL, <slots>), REPARTITION_BY_NUM, [plan_id=N]\n"
+        "Arguments: RoundRobinPartitioning(<slots>), REPARTITION_BY_NUM, [plan_id=N]\n"
+        "Arguments: hashpartitioning(k#N, 200), ENSURE_REQUIREMENTS, [plan_id=N]\n"
+    )

@@ -261,6 +261,44 @@ def test_minhash_spread_adds_no_extra_shuffle(spark):
     assert len(exchanges) == 1, p
 
 
+def test_spread_fans_out_to_task_slots(spark):
+    """helpers.spread pins one partition per task slot
+    (``defaultParallelism``: N on local[N], total executor cores on a
+    cluster), hashed or round-robin, not spark.sql.shuffle.partitions:
+    a fan-out wider than the slots runs in several waves of tiny tasks."""
+    from hive_apache_ci_spark.helpers import T, spread
+
+    slots = spark.sparkContext.defaultParallelism
+    docs = T(spark, SF_DIR, "documents")
+    assert spread(docs, "doc_id").rdd.getNumPartitions() == slots
+    assert spread(docs.select("text")).rdd.getNumPartitions() == slots
+
+
+def test_only_helpers_sizes_a_fan_out():
+    """helpers.spread is the one way to pin a fan-out: no other engine
+    module reads spark.sql.shuffle.partitions (as a call argument, e.g.
+    ``conf.get``) or ``defaultParallelism`` to size a repartition."""
+    import ast
+    import pathlib
+
+    import hive_apache_ci_spark
+
+    def sizes(node) -> bool:
+        if isinstance(node, ast.Attribute):
+            return node.attr == "defaultParallelism"
+        return isinstance(node, ast.Call) and any(
+            isinstance(a, ast.Constant) and a.value == "spark.sql.shuffle.partitions"
+            for a in node.args
+        )
+
+    root = pathlib.Path(hive_apache_ci_spark.__file__).parent
+    readers = {
+        str(p.relative_to(root)) for p in root.rglob("*.py")
+        if any(map(sizes, ast.walk(ast.parse(p.read_text()))))
+    }
+    assert readers == {"helpers.py"}, readers
+
+
 def test_temporal_rollup_single_expand(spark):
     """The 3-grain GROUPING SETS rollup must be one Expand + one two-phase
     aggregation — one scan of the fact table, not three."""
